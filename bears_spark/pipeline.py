@@ -7,12 +7,22 @@ Reference parity: src/bears/processor/_DataPipeline.py —
   input patterns (regex or MLType name), fan out 1:1 processors per matched
   column / one N:1 processor per column tuple, substitute ``{col_name}`` into
   the output pattern, propagate the schema.
-- execution (:761-924): FIT_TRANSFORM runs fit actions then assigns columns;
-  the Spark compilation collapses all 1:1 transform steps into one projection
-  (single whole-stage-codegen pass); fit steps are tiny aggregations whose
-  results are broadcast as literal expressions.
-- MissingColumnBehavior ERROR/SKIP/EXECUTE (:500-511); PersistLevel hooks
-  become df.persist() between fit actions (:52-58).
+- execution (:761-924): FIT_TRANSFORM fits then assigns columns, step by
+  step. The reference runs one fit action per processor; here every
+  processor describes its fit as aggregate phases (processor/base.py) and
+  the pipeline fits in *waves*. A wave is ONE ``df.agg(...)`` over the frame
+  with every step applied so far, holding the next phase of every fit that
+  is ready: no earlier step that is still unapplied writes one of its input
+  columns (new or in place), and its previous phase is done. After a wave,
+  every leading step whose processors are all fitted is applied, in order,
+  and the next wave starts. Fit results are broadcast as literal
+  expressions; the 1:1 transform steps collapse into one projection (single
+  whole-stage-codegen pass). Steps add or replace columns and never change
+  rows, so an aggregate over a column is the same on any frame that holds
+  its final values.
+- MissingColumnBehavior ERROR/SKIP/EXECUTE (:500-511). The reference's
+  PersistLevel hooks between fit actions (:52-58) have no counterpart: a
+  wave reads the frame once for many fits.
 
 Engine-independent logic (pattern matching, schema propagation) is ported
 directly; execution is Catalyst's.
@@ -30,10 +40,12 @@ from pyspark.sql import functions as F
 
 from bears_spark.processor.base import (
     DataProcessor,
+    FitRun,
     MissingColumnBehavior,
     Nto1ColumnProcessor,
     SingleColumnProcessor,
     get_processor,
+    run_wave,
 )
 from bears_spark.types import MLType, MLTypeSchema, spark_to_mltype
 
@@ -48,6 +60,10 @@ class PipelineStepConfig:
 
 @dataclass
 class StepPerf:
+    """One pipeline step's fit cost. ``fit_ms`` is the wall time of the
+    waves in which one of the step's fits completed; a wave shared by
+    several steps counts in full for each of them."""
+
     step: str
     transformer: str
     n_processors: int
@@ -91,11 +107,9 @@ class DataPipeline:
         self,
         steps: list[PipelineStepConfig],
         missing_column_behavior: MissingColumnBehavior | str = MissingColumnBehavior.ERROR,
-        persist_between_fits: bool = False,
     ):
         self.steps = steps
         self.missing_column_behavior = MissingColumnBehavior(missing_column_behavior)
-        self.persist_between_fits = persist_between_fits
         self._resolved: list[tuple[PipelineStepConfig, list[tuple[DataProcessor, list[str], str]]]] | None = None
         self.perf: list[StepPerf] = []
 
@@ -163,18 +177,32 @@ class DataPipeline:
 
     # -- execution ----------------------------------------------------------
     def fit_transform(self, df: DataFrame) -> DataFrame:
+        """Fit in waves (module docstring) and apply every step in order."""
         self._resolved = self._resolve(self._schema_of(df))
-        self.perf = []
-        out = df
-        for step, fanout in self._resolved:
+        runs = [[FitRun(proc, in_cols) for proc, in_cols, _ in fanout] for _, fanout in self._resolved]
+        writes = [{out_col for *_, out_col in fanout} for _, fanout in self._resolved]
+        fit_ms = [0.0] * len(runs)
+        out, applied = df, 0
+        while True:
+            while applied < len(runs) and all(r.done for r in runs[applied]):
+                out = self._apply_step(out, self._resolved[applied][1])
+                applied += 1
+            if applied == len(runs):
+                break
+            ready: list[tuple[int, FitRun]] = []
+            unapplied_writes: set[str] = set()
+            for s in range(applied, len(runs)):
+                ready += [(s, r) for r in runs[s] if not r.done and unapplied_writes.isdisjoint(r.cols)]
+                unapplied_writes |= writes[s]
             t0 = time.perf_counter()
-            for proc, in_cols, out_col in fanout:
-                proc.fit(out, in_cols)  # tiny aggregation action (or no-op)
-            fit_ms = (time.perf_counter() - t0) * 1000
-            out = self._apply_step(out, fanout)
-            self.perf.append(StepPerf(step.output, step.transformer, len(fanout), fit_ms))
-            if self.persist_between_fits:
-                out = out.persist()
+            run_wave(out, [r for _, r in ready])
+            wave_ms = (time.perf_counter() - t0) * 1000
+            for s in {s for s, r in ready if r.done and r.phases != []}:  # stateless fits cost nothing
+                fit_ms[s] += wave_ms
+        self.perf = [
+            StepPerf(step.output, step.transformer, len(fanout), ms)
+            for (step, fanout), ms in zip(self._resolved, fit_ms)
+        ]
         return out
 
     def transform(self, df: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bears_spark.processor.base import SingleColumnProcessor, register_processor
+from bears_spark.processor.base import FitPhase, SingleColumnProcessor, mode_agg, register_processor
 
 
 @register_processor
@@ -49,9 +49,10 @@ class LabelEncoding(SingleColumnProcessor):
     """Label -> int code (np.unique sort order), 4 range styles, unknown ->
     per-range sentinel, missing fill, inverse_transform.
 
-    fit: one distinct aggregation, labels sorted on the driver exactly as
-    np.unique sorts (lexicographic on str); state broadcast as a literal map
-    expression — the transform is a JVM map lookup, no join, no UDF.
+    fit: two aggregate phases — a cardinality guard, then the label set —
+    with the labels sorted on the driver exactly as np.unique sorts
+    (lexicographic on str); state broadcast as a literal map expression —
+    the transform is a JVM map lookup, no join, no UDF.
     """
 
     aliases = ("labelencoding", "labelencoder")
@@ -72,27 +73,34 @@ class LabelEncoding(SingleColumnProcessor):
         self.max_cardinality = max_cardinality
         self.label_map_: dict[str, int] | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
-        start, step, _ = _ENCODING_RANGES[self.encoding_range]
+
         # Cardinality guard: the fit collects every distinct label to the
         # driver and compiles a create_map literal — right for CATEGORICAL
         # columns, but a high-cardinality column (ids, free text) would
         # silently OOM the driver and explode the plan. One cheap
-        # approx_count_distinct (±5%) before the collect fails fast instead.
-        approx = df.agg(F.approx_count_distinct(col_name).alias("n")).first()["n"]
-        if approx > self.max_cardinality:
-            raise ValueError(
-                f"LabelEncoding.fit: column {col_name!r} has ~{approx} distinct "
-                f"values (> max_cardinality={self.max_cardinality}); a literal "
-                "label map does not scale. Use encode_labels_join() for "
-                "high-cardinality vocabularies (label table + broadcast/shuffle "
-                "join), or raise max_cardinality deliberately."
-            )
-        labels = [
-            r["v"]
-            for r in df.select(F.col(col_name).cast("string").alias("v")).filter(F.col("v").isNotNull()).distinct().collect()
+        # approx_count_distinct (±5%) in the phase before the label set
+        # fails fast instead.
+        def guard(vals: list) -> None:
+            (approx,) = vals
+            if approx > self.max_cardinality:
+                raise ValueError(
+                    f"LabelEncoding.fit: column {col_name!r} has ~{approx} distinct "
+                    f"values (> max_cardinality={self.max_cardinality}); a literal "
+                    "label map does not scale. Use encode_labels_join() for "
+                    "high-cardinality vocabularies (label table + broadcast/shuffle "
+                    "join), or raise max_cardinality deliberately."
+                )
+
+        return [
+            FitPhase([F.approx_count_distinct(col_name)], guard),
+            FitPhase([F.collect_set(F.col(col_name).cast("string"))], self._store_labels),
         ]
+
+    def _store_labels(self, vals: list) -> None:
+        (labels,) = vals
+        start, step, _ = _ENCODING_RANGES[self.encoding_range]
         if self.encoding_range.startswith("binary") and len(labels) > 2:
             raise ValueError(f"binary encoding_range with {len(labels)} labels")
         self.label_map_ = {lab: start + i * step for i, lab in enumerate(sorted(labels))}
@@ -167,7 +175,8 @@ def encode_labels_join(
 @register_processor
 class CategoricalMissingValueImputation(SingleColumnProcessor):
     """MODE or CONSTANT imputation (_categorical/_CategoricalMissingValueImputation.py:20-75).
-    fit: F.mode aggregate -> driver scalar; transform: coalesce."""
+    fit: deterministic F.mode aggregate (most frequent, ties -> smallest) ->
+    driver scalar; transform: coalesce."""
 
     aliases = ("categoricalimputation", "catimpute")
     output_mltype = "CATEGORICAL"
@@ -182,18 +191,14 @@ class CategoricalMissingValueImputation(SingleColumnProcessor):
         self.fill_value = fill_value
         self.fill_: Any = fill_value
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
-        if self.strategy == "mode":
-            (col_name,) = cols
-            # deterministic mode: most frequent, ties -> smallest value
-            row = (
-                df.filter(F.col(col_name).isNotNull())
-                .groupBy(col_name)
-                .count()
-                .orderBy(F.desc("count"), F.asc(col_name))
-                .first()
-            )
-            self.fill_ = row[col_name] if row else None
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
+        if self.strategy == "constant":
+            return []
+        (col_name,) = cols
+        return [FitPhase([mode_agg(df, col_name)], self._store)]
+
+    def _store(self, vals: list) -> None:
+        (self.fill_,) = vals
 
     def transform_expr(self, col: Column) -> Column:
         return F.coalesce(col, F.lit(self.fill_))

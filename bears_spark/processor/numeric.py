@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bears_spark.processor.base import SingleColumnProcessor, register_processor
+from bears_spark.processor.base import FitPhase, SingleColumnProcessor, mode_agg, register_processor
 
 _STRATEGY_AGG = {
     "mean": F.avg,
@@ -17,9 +17,10 @@ _STRATEGY_AGG = {
 
 @register_processor
 class NumericMissingValueImputation(SingleColumnProcessor):
-    """MEAN/MEDIAN/MODE/MIN/MAX/CONSTANT imputation: fit = one aggregation
-    (strategy fn map parity: _NumericMissingValueImputation.py:44-51),
-    transform = coalesce expression."""
+    """MEAN/MEDIAN/MODE/MIN/MAX/CONSTANT imputation: fit = one aggregate
+    phase (strategy fn map parity: _NumericMissingValueImputation.py:44-51;
+    mode = most frequent, ties -> smallest), transform = coalesce
+    expression."""
 
     aliases = ("numericimputation", "numimpute", "imputer")
     output_mltype = "FLOAT"
@@ -34,21 +35,18 @@ class NumericMissingValueImputation(SingleColumnProcessor):
         self.fill_value = fill_value
         self.fill_: float | None = fill_value
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
         if self.strategy == "constant":
-            return
+            return []
         if self.strategy == "mode":
-            row = (
-                df.filter(F.col(col_name).isNotNull())
-                .groupBy(col_name)
-                .count()
-                .orderBy(F.desc("count"), F.asc(col_name))
-                .first()
-            )
-            self.fill_ = row[col_name] if row else None
+            agg = mode_agg(df, col_name)
         else:
-            self.fill_ = df.agg(_STRATEGY_AGG[self.strategy](F.col(col_name)).alias("v")).first()["v"]
+            agg = _STRATEGY_AGG[self.strategy](F.col(col_name))
+        return [FitPhase([agg], self._store)]
+
+    def _store(self, vals: list) -> None:
+        (self.fill_,) = vals
 
     def transform_expr(self, col: Column) -> Column:
         return F.coalesce(col, F.lit(self.fill_))
@@ -85,12 +83,15 @@ class QuantileBinning(SingleColumnProcessor):
         self.approx = approx
         self.boundaries_: list[float] | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
         qs = [i / self.num_bins for i in range(1, self.num_bins)]
         fn = F.percentile_approx if self.approx else F.percentile
-        row = df.agg(fn(F.col(col_name), F.array(*[F.lit(q) for q in qs])).alias("b")).first()
-        self.boundaries_ = [float(v) for v in row["b"]]
+        return [FitPhase([fn(F.col(col_name), F.array(*[F.lit(q) for q in qs]))], self._store)]
+
+    def _store(self, vals: list) -> None:
+        (bounds,) = vals
+        self.boundaries_ = [float(v) for v in bounds]
 
     def transform_expr(self, col: Column) -> Column:
         if self.boundaries_ is None:
@@ -121,13 +122,14 @@ class StandardScaling(SingleColumnProcessor):
         self.mean_: float | None = None
         self.scale_: float | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
-        row = df.agg(
-            F.avg(col_name).alias("m"), F.stddev_pop(col_name).alias("s")
-        ).first()
-        self.mean_ = float(row["m"]) if row["m"] is not None else 0.0
-        s = float(row["s"]) if row["s"] is not None else 0.0
+        return [FitPhase([F.avg(col_name), F.stddev_pop(col_name)], self._store)]
+
+    def _store(self, vals: list) -> None:
+        m, s = vals
+        self.mean_ = float(m) if m is not None else 0.0
+        s = float(s) if s is not None else 0.0
         self.scale_ = s if s > 0.0 else 1.0
 
     def transform_expr(self, col: Column) -> Column:
@@ -158,11 +160,14 @@ class MinMaxScaling(SingleColumnProcessor):
         self.min_: float | None = None
         self.scale_: float | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
-        row = df.agg(F.min(col_name).alias("lo"), F.max(col_name).alias("hi")).first()
-        self.min_ = float(row["lo"]) if row["lo"] is not None else 0.0
-        data_range = (float(row["hi"]) - self.min_) if row["hi"] is not None else 0.0
+        return [FitPhase([F.min(col_name), F.max(col_name)], self._store)]
+
+    def _store(self, vals: list) -> None:
+        lo_v, hi_v = vals
+        self.min_ = float(lo_v) if lo_v is not None else 0.0
+        data_range = (float(hi_v) - self.min_) if hi_v is not None else 0.0
         lo, hi = self.feature_range
         self.scale_ = (hi - lo) / data_range if data_range > 0.0 else 0.0
 
@@ -195,14 +200,14 @@ class RobustScaling(SingleColumnProcessor):
         self.center_: float | None = None
         self.scale_: float | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
         (col_name,) = cols
         qlo, qhi = self.quantile_range
         fn = F.percentile_approx if self.approx else F.percentile
-        row = df.agg(
-            fn(F.col(col_name), F.array(F.lit(qlo), F.lit(0.5), F.lit(qhi))).alias("q")
-        ).first()
-        q = row["q"]
+        return [FitPhase([fn(F.col(col_name), F.array(F.lit(qlo), F.lit(0.5), F.lit(qhi)))], self._store)]
+
+    def _store(self, vals: list) -> None:
+        (q,) = vals
         if q is None or q[1] is None:
             self.center_, self.scale_ = 0.0, 1.0
             return

@@ -12,7 +12,7 @@ import string
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bears_spark.processor.base import Nto1ColumnProcessor, SingleColumnProcessor, register_processor
+from bears_spark.processor.base import FitPhase, Nto1ColumnProcessor, SingleColumnProcessor, register_processor
 
 
 @register_processor
@@ -144,8 +144,8 @@ class TextConcatenation(Nto1ColumnProcessor):
     """Join N text columns with ``sep`` (_text/_TextConcatenation.py:27-102).
 
     Column ordering: NAME_ASC / NAME_DESC / SHORTEST_FIRST / GIVEN. The
-    SHORTEST_FIRST fit is ONE aggregation pass (avg(length) per column,
-    reference computes the same at :61-78). Nulls -> '' (concat_ws skips
+    SHORTEST_FIRST fit is ONE aggregate phase (avg(length) per column,
+    reference computes the same at :61-78); the other orders need no fit. Nulls -> '' (concat_ws skips
     nulls natively); optional ``prefix_col_name`` adds ``col: `` prefixes.
     """
 
@@ -161,19 +161,23 @@ class TextConcatenation(Nto1ColumnProcessor):
         self.prefix_col_name = prefix_col_name
         self._fitted_order: list[str] | None = None
 
-    def _fit(self, df: DataFrame, cols: list[str]) -> None:
-        if self.order == "name_asc":
-            self._fitted_order = sorted(cols)
-        elif self.order == "name_desc":
-            self._fitted_order = sorted(cols, reverse=True)
-        elif self.order == "shortest_first":
-            row = df.agg(*[F.avg(F.length(F.col(c).cast("string"))).alias(c) for c in cols]).first()
-            self._fitted_order = sorted(cols, key=lambda c: (row[c] if row[c] is not None else 0.0, c))
-        else:
-            self._fitted_order = list(cols)
+    def _fit_phases(self, df: DataFrame, cols: list[str]) -> list[FitPhase]:
+        if self.order != "shortest_first":
+            return []
+
+        def store(avg_lens: list) -> None:
+            lens = {c: v if v is not None else 0.0 for c, v in zip(cols, avg_lens)}
+            self._fitted_order = sorted(cols, key=lambda c: (lens[c], c))
+
+        return [FitPhase([F.avg(F.length(F.col(c).cast("string"))) for c in cols], store)]
 
     def transform_expr(self, cols: list[Column], col_names: list[str]) -> Column:
-        order = self._fitted_order or list(col_names)
+        if self.order == "name_asc":
+            order = sorted(col_names)
+        elif self.order == "name_desc":
+            order = sorted(col_names, reverse=True)
+        else:
+            order = self._fitted_order or list(col_names)
         by_name = dict(zip(col_names, cols))
         parts = []
         for name in order:

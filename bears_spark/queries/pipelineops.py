@@ -456,17 +456,17 @@ SELECT doc_id, n_chars, cum_chars FROM c WHERE cum_chars <= 500000 ORDER BY doc_
 
 # --------------------------------------------------------------------------
 # part_price_scaled: the three fitted scalers (standard / min-max / robust)
-# over p_retailprice — fit = one aggregation each, transform = one fused
-# projection. Oracle recomputes mean/stddev_pop/min/max/quantile_cont
+# over p_retailprice — fit = one aggregation for all three (fit_together),
+# transform = one fused projection. Oracle recomputes mean/stddev_pop/min/max/quantile_cont
 # independently; round(...,6) on both sides absorbs last-ulp formula
 # differences between engines.
 def part_price_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from bears_spark.processor.base import fit_together
     from bears_spark.processor.numeric import MinMaxScaling, RobustScaling, StandardScaling
 
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    std = StandardScaling().fit(part, ["p_retailprice"])
-    mm = MinMaxScaling().fit(part, ["p_retailprice"])
-    rb = RobustScaling().fit(part, ["p_retailprice"])
+    std, mm, rb = StandardScaling(), MinMaxScaling(), RobustScaling()
+    fit_together(part, [(std, ["p_retailprice"]), (mm, ["p_retailprice"]), (rb, ["p_retailprice"])])
     price = F.col("p_retailprice")
     return part.select(
         "p_partkey",

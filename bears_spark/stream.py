@@ -8,10 +8,10 @@ function with prefetch. The reference's balanced-shard planning
 
 - sharding = ``pmod(hash_or_rowid, world) == rank`` filter — each worker
   builds its own plan and pulls only its shard (no driver coordination);
-- chunking = exact-size batching inside ``toLocalIterator`` (driver feed) or
-  ``mapInPandas`` (distributed map) — Spark partitions are size-irregular, so
-  batch boundaries are drawn in the iterator, not the partitioning
-  (SURVEY.md §7 known-hard #7);
+- chunking = exact-size re-batching of the ``toArrow()`` record batches on
+  the driver (driver feed) or ``mapInPandas`` (distributed map) — Spark
+  partitions are size-irregular, so batch boundaries are drawn in the
+  iterator, not the partitioning (SURVEY.md §7 known-hard #7);
 - shuffle = seeded ``orderBy(rand(seed))``: deterministic within-engine,
   documented divergence from numpy RandomState bit-order (known-hard #3);
 - drop_last=True -> every yielded chunk has exactly num_rows rows (DDP
@@ -101,10 +101,11 @@ def stream_frame(
     """Yield exact-size chunks from a SparkFrame/DataFrame.
 
     Exactly one of num_rows / num_chunks (alias semantics:
-    DataFrameWriter.py:58-87). The driver pulls partitions with
-    prefetch (toLocalIterator(prefetchPartitions=True) ≈ the reference's
-    fetch_partitions=1 queue, DaskScalableDataFrame.py:246-477) and re-batches
-    to exact row counts.
+    DataFrameWriter.py:58-87). The driver collects the whole frame with
+    ``toArrow()`` before it yields the first chunk, then re-batches its
+    record batches to exact row counts: driver memory holds the full result
+    (the reference's fetch_partitions=1 queue,
+    DaskScalableDataFrame.py:246-477, holds one partition).
     """
     df: DataFrame = frame.df if hasattr(frame, "df") else frame
     if (num_rows is None) == (num_chunks is None):

@@ -122,3 +122,96 @@ def test_round5_quality_processors_in_pipeline(spark):
     assert out[3]["lang"] == "de"
     assert not out[2]["keep"]  # repetition fails the distinct-word rule
     assert out[2]["zr"] < 0.15 < out[1]["zr"]  # boilerplate compresses away
+
+
+# --- fit waves ------------------------------------------------------------------
+
+
+@pytest.fixture
+def agg_calls(spark, monkeypatch):
+    """Records the aggregate expressions of every DataFrame.agg call."""
+    cls = type(spark.range(1))
+    real = cls.agg
+    calls: list[list[str]] = []
+
+    def spy(self, *exprs):
+        calls.append([str(e) for e in exprs])
+        return real(self, *exprs)
+
+    monkeypatch.setattr(cls, "agg", spy)
+    return calls
+
+
+_NUMERIC = "l_(quantity|extendedprice|discount|tax|linenumber)"
+FEATURE_CONFIG = {
+    "pipeline": [
+        {"input": _NUMERIC, "transformer": "numimpute", "output": "{col_name}_f", "params": {"strategy": "mean"}},
+        {"input": _NUMERIC + "_f", "transformer": "standardscaling", "output": "{col_name}_z"},
+        {"input": "l_(returnflag|linestatus)", "transformer": "labelencoding", "output": "{col_name}_id"},
+        {"input": ".*_(z|id)", "transformer": "vectorassembler", "output": "features"},
+    ]
+}
+
+
+def test_feature_pipeline_fits_in_two_waves(spark, agg_calls):
+    """Imputation means and label guards share wave 1; scaler moments and
+    label sets share wave 2; the assembler needs no fit."""
+    import numpy as np
+
+    rows = [
+        (float(q), q * 10.5, 0.01 * (q % 5), 0.02 * (q % 3), q % 7 + 1, "ARN"[q % 3], "OF"[q % 2])
+        for q in range(1, 41)
+    ]
+    rows[3] = (None, *rows[3][1:])
+    df = spark.createDataFrame(
+        rows,
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_linenumber int, l_returnflag string, l_linestatus string",
+    )
+    pipe = DataPipeline.from_config(FEATURE_CONFIG)
+    out = pipe.fit_transform(df)
+    assert len(agg_calls) == 2
+    assert sum("avg" in e for e in agg_calls[0]) == 5 and sum("approx_count_distinct" in e for e in agg_calls[0]) == 2
+    assert sum("stddev_pop" in e for e in agg_calls[1]) == 5 and sum("collect_set" in e for e in agg_calls[1]) == 2
+    assert [p.fit_ms > 0 for p in pipe.perf] == [True, True, True, False]
+
+    feats = np.array([r["features"] for r in out.select("features").collect()])
+    q = np.array([r[0] for r in rows], dtype=float)
+    q[np.isnan(q)] = np.nanmean(q)
+    # features are sorted by column name: l_quantity_f_z is 5th, l_returnflag_id 6th
+    assert np.allclose(feats[:, 4], (q - q.mean()) / q.std())
+    assert sorted(set(feats[:, 5])) == [1.0, 2.0, 3.0]
+
+
+def test_label_guard_in_shared_wave_raises_before_label_set(spark, agg_calls):
+    df = spark.range(200).selectExpr("cast(id as string) as code", "cast(id as double) as x")
+    pipe = DataPipeline(
+        [
+            PipelineStepConfig(input="x", transformer="numimpute", output="x_f"),
+            PipelineStepConfig(input="code", transformer="labelencoding", params={"max_cardinality": 20}),
+        ]
+    )
+    with pytest.raises(ValueError, match="column 'code'"):
+        pipe.fit_transform(df)
+    assert len(agg_calls) == 1 and len(agg_calls[0]) == 2  # avg(x) beside the guard
+    assert not any("collect_set" in e for call in agg_calls for e in call)
+
+
+def test_wave_waits_for_earlier_step_writing_its_input(spark, agg_calls):
+    """A step that scales x after x is imputed in place fits on the imputed
+    values, one wave later; a scaler on an untouched column joins wave 1."""
+    df = spark.createDataFrame([(1.0, 1.0), (2.0, 2.0), (None, 4.0), (5.0, 5.0)], "x double, y double")
+    pipe = DataPipeline(
+        [
+            PipelineStepConfig(input="x", transformer="numimpute", params={"strategy": "max"}),
+            PipelineStepConfig(input="[xy]", transformer="standardscaling", output="{col_name}_z"),
+        ]
+    )
+    pipe.fit_transform(df)
+    (_, (imp,)), (_, (sx, sy)) = pipe._resolved
+    assert imp[0].fill_ == 5.0
+    assert sx[0].mean_ == (1.0 + 2.0 + 5.0 + 5.0) / 4  # not the raw mean 8/3
+    assert sy[0].mean_ == 3.0
+    assert len(agg_calls) == 2
+    assert sorted(agg_calls[0]) == sorted(["Column<'max(x)'>", "Column<'avg(y)'>", "Column<'stddev_pop(y)'>"])
+    assert sorted(agg_calls[1]) == sorted(["Column<'avg(x)'>", "Column<'stddev_pop(x)'>"])

@@ -359,3 +359,100 @@ def test_woe_iv_math(spark):
     assert out["a"][1] == pytest.approx((pp_a - pn_a) * math.log(pp_a / pn_a))
     # symmetric label balance -> woe(b) = -woe(a)
     assert out["b"][0] == pytest.approx(-out["a"][0])
+
+
+# --- fit phases and waves -----------------------------------------------------
+
+
+def _fit_state(proc):
+    return {k: v for k, v in vars(proc).items() if k != "params"}
+
+
+def test_shared_wave_state_equals_standalone_fit(spark, monkeypatch):
+    """Every aggregate-phase processor stores exactly the same state when
+    its phases share waves with other fits as when it fits alone."""
+    import numpy as np
+
+    from bears_spark.processor.base import fit_together
+    from bears_spark.processor.categorical import CategoricalMissingValueImputation
+    from bears_spark.processor.numeric import (
+        MinMaxScaling,
+        NumericMissingValueImputation,
+        QuantileBinning,
+        RobustScaling,
+        StandardScaling,
+    )
+
+    rng = np.random.default_rng(3)
+    n = 3000
+    x = rng.normal(10.0, 3.0, n)
+    x[rng.random(n) < 0.1] = np.nan
+    pdf = pd.DataFrame(
+        {
+            "x": pd.Series(x).astype(object).where(~np.isnan(x), None),
+            "k": rng.integers(0, 7, n),
+            "s": rng.choice(["ab", "c", "defg", None], n),
+            "t": rng.choice(["xyzzy", "q"], n),
+        }
+    )
+    # 4 fixed slices: a round-robin repartition would place rows by the
+    # projected columns, so sums over x would depend on what else is aggregated
+    df = spark.createDataFrame(pdf, "x double, k long, s string, t string")
+    assert df.rdd.getNumPartitions() > 1
+
+    def procs():
+        return [
+            (NumericMissingValueImputation(strategy="mean"), ["x"]),
+            (NumericMissingValueImputation(strategy="median"), ["x"]),
+            (NumericMissingValueImputation(strategy="min"), ["x"]),
+            (NumericMissingValueImputation(strategy="max"), ["x"]),
+            (NumericMissingValueImputation(strategy="mode"), ["k"]),
+            (StandardScaling(), ["x"]),
+            (MinMaxScaling(), ["x"]),
+            (RobustScaling(), ["x"]),
+            (QuantileBinning(num_bins=5), ["x"]),
+            (get_processor("textconcat", order="shortest_first"), ["t", "s"]),
+            (LabelEncoding(), ["s"]),
+            (CategoricalMissingValueImputation(), ["s"]),
+        ]
+
+    shared = procs()
+    agg_sizes = []
+    real_agg = type(df).agg
+    monkeypatch.setattr(type(df), "agg", lambda self, *exprs: agg_sizes.append(len(exprs)) or real_agg(self, *exprs))
+    fit_together(df, shared)
+    monkeypatch.undo()
+    assert len(agg_sizes) == 2  # LabelEncoding's two phases set the wave count
+    for (alone, cols), (together, _) in zip(procs(), shared):
+        alone.fit(df, cols)
+        assert together.is_fitted
+        assert _fit_state(together) == _fit_state(alone), type(alone).__name__
+
+
+@pytest.mark.parametrize(
+    "ddl, values, expected",
+    [
+        ("long", [3, 1, 3, 1, 2, None, None, None], 1),
+        ("string", ["b", "a", "b", "a", None, None, None], "a"),
+        ("string", ["B", "a", "a", "B"], "B"),
+        ("double", [float("nan"), float("nan"), 2.0, 2.0, -1.0], 2.0),  # NaN sorts last
+        ("double", [1.0, 0.0, -0.0, 1.0], 0.0),  # -0.0 and 0.0 are one value, tied with 1.0
+    ],
+)
+def test_mode_imputation_ties_pick_smallest(spark, ddl, values, expected):
+    """Mode fits keep the group-by semantics: most frequent, ties -> the
+    smallest value, NaN ordered after every number, signed zeros merged."""
+    from bears_spark.processor.categorical import CategoricalMissingValueImputation
+    from bears_spark.processor.numeric import NumericMissingValueImputation
+
+    df = spark.createDataFrame([(v,) for v in values], f"c {ddl}").repartition(3)
+    imputers = [CategoricalMissingValueImputation(strategy="mode")]
+    if ddl != "string":
+        imputers.append(NumericMissingValueImputation(strategy="mode"))
+    for proc in imputers:
+        proc.fit(df, ["c"])
+        assert proc.fill_ == expected and type(proc.fill_) is type(expected)
+        if isinstance(expected, float):
+            assert math.copysign(1.0, proc.fill_) == 1.0
+    nan_only = spark.createDataFrame([(float("nan"),), (float("nan"),), (2.0,)], "c double")
+    assert math.isnan(NumericMissingValueImputation(strategy="mode").fit(nan_only, ["c"]).fill_)
