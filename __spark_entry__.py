@@ -85,20 +85,15 @@ _TPCH_ORACLES = {
 
 # --------------------------------------------------------------------------
 # The driver grades the FIRST 50 queries() entries in iteration order, so
-# order is a coverage budget. Round-12 rotation (VERDICT r11 "Next round"
-# #4): this optimization round's window must grade the paths the optimizer
+# order is a coverage budget. The window grades the paths the optimizer
 # REWROTE, so ground truth — not the builder's self-reported gate — covers
 # every semantics-sensitive change:
-#   * the same 8 regression anchors as rounds 8-11,
-#   * the 6 rows of ROUND12_NEVER_GRADED (round-11 additions, never
-#     driver-graded),
-#   * the 7 paths round 11 rewrote that its window missed
-#     (tfidf_cosine_pairs, part_item_recs, dedup_semantic_clusters,
-#     orders_delta_dv_read, orders_global_cumsum, doc_pack_assignments,
-#     doc_bm25_queryset) — part_item_recs and the prefix consumers are
-#     rewritten AGAIN this round (freq de-skew, eager gram persists),
-#   * the 2 headline paths round 12 restructures (ann_ivfpq_topk,
-#     ev_cusum_alarm),
+#   * 8 regression anchors, always first,
+#   * 6 lakehouse queries added in round 11, first graded in round 12,
+#   * the 7 paths round 11 rewrote (tfidf_cosine_pairs, part_item_recs,
+#     dedup_semantic_clusters, orders_delta_dv_read, orders_global_cumsum,
+#     doc_pack_assignments, doc_bm25_queryset) and the 2 headline paths
+#     round 12 restructured (ann_ivfpq_topk, ev_cusum_alarm),
 #   * 27 freshness re-anchors: the 13 rows last graded in round 3 plus the
 #     14 alphabetically-first rows last graded in round 4.
 # Oracle-less queries (doc_compression_quality) are EXCLUDED from every
@@ -115,7 +110,7 @@ GRADED_WINDOW = [
     "streaming_running_totals",
     "dedup_minhash_lsh",
     "ann_cosine_topk",
-    # --- never driver-graded: ROUND12_NEVER_GRADED (6, ledger order) ---
+    # --- round-11 lakehouse additions (6) ---
     "orders_rename_evolution",
     "orders_wap_publish",
     "orders_type_widening",
@@ -164,273 +159,6 @@ GRADED_WINDOW = [
     "doc_nfc_normalize",
 ]
 assert len(GRADED_WINDOW) == 50, len(GRADED_WINDOW)
-
-# ROUND-7 ROTATION LEDGER (mechanical: the 25 overflow rows from the round-6
-# ledger — entries 43..67 in ledger order — plus every query added in round
-# 6; none of these will have a driver CORRECTNESS row after round 6). All
-# overflow rows passed the judge's full local oracle replica in r5; new
-# round-6 queries are verified with tools/check_correctness.py this round.
-# Round 7's GRADED_WINDOW takes ~42 (ledger order) plus anchors; the
-# remainder rolls to round 8 exactly as rounds 5->6 rolled.
-ROUND7_NEVER_GRADED = [
-    # --- round-6 ledger overflow (25, ledger order) ---
-    "orders_yoy_growth",
-    "streaming_doc_quality",
-    "lang_source_mutual_info",
-    "doc_compression_quality",
-    "orders_change_feed",
-    "dedup_minhash_eval",
-    "emb_pca2_projection",
-    "dedup_minhash_calibration",
-    "customer_abc_analysis",
-    "part_iqr_outliers",
-    "lineitem_cycle_time",
-    "nation_market_concentration",
-    "orders_survival_curve",
-    "ev_markov_next_event",
-    "customer_gini",
-    "ev_user_entropy",
-    "source_lang_jsd",
-    "orders_bloom_point_lookup",
-    "orders_arrow_roundtrip",
-    "ev_user_features",
-    "ev_ab_welch",
-    "ev_ab_cuped",
-    "ev_ab_quantiles",
-    "pipeline_quality_gate",
-    "ev_ab_conversion",
-    # --- added in round 6 (appended as implemented) ---
-    "ann_ivfpq_recall_report",
-    "doc_pack_assignments",
-    "emb_cluster_silhouette",
-    "orders_incremental_rollup",
-    "emb_hard_negatives",
-    "orders_delta_roundtrip",
-    "orders_iceberg_roundtrip",
-    "ev_user_ltv_decile",
-    "orders_optimize_skipping",
-    "customer_priority_scd2",
-    "dedup_edit_prefix_join",
-    "cust_target_encoding",
-    "cust_woe_urgency",
-    "ev_hourly_acf",
-    "ev_seasonal_decompose",
-    "ev_value_ols2",
-    "orders_layout_report",
-    "orders_price_auc",
-    "orders_urgency_calibration",
-    "doc_rake_keyphrases",
-    "ev_value_psi_drift",
-    "streaming_psi_drift",
-    "orders_urgency_isotonic",
-    "ev_holt_trend",
-    "ev_theilsen_trend",
-    "ev_changepoint",
-    "part_pareto_frontier",
-    "part_association_rules",
-    "orders_conformal_interval",
-    "supplier_bfs_distance",
-    "part_item_cosine",
-    "ev_rolling_dau",
-    "ev_rolling_dau_hll",
-    "ev_value_ohlc",
-    "ev_user_twap",
-    "ev_value_ks_drift",
-    "ev_ab_mannwhitney",
-    "ev_ma_crossover",
-    "part_item_recs",
-    "part_decayed_popularity",
-    "streaming_rolling_dau_hll",
-    "ev_interarrival_ks",
-    "doc_zipf_fit",
-    "emb_matryoshka_recall",
-    "customer_next_order_backtest",
-    "part_return_rate_shrinkage",
-    "ev_growth_accounting",
-    "ev_user_stickiness",
-    "ann_filtered_topk",
-    "streaming_ohlc",
-    "ev_ab_power_analysis",
-    "ev_burst_detection",
-    "orders_fd_violations",
-    "ev_slo_bands",
-    "moments_merge_proof",
-    "streaming_burst_detection",
-    "orders_naive_bayes_eval",
-    "supplier_degree_assortativity",
-    "source_oov_rate",
-    "source_type_token_ratio",
-    "corpus_heaps_law",
-    "orders_value_percent_rank",
-    "hll_error_report",
-    "emb_knn_eval",
-    "source_centroid_similarity",
-    "supplier_kcore_peel",
-    "orders_basket_dispersion",
-    "supplier_wilson_ontime",
-    "orders_cents_chisq",
-    "events_hive_partition_pruning",
-    "nation_share_shift",
-    "part_single_source_risk",
-    "orders_cycle_anova",
-    "ev_weekend_effect",
-    "emb_exact_dupes",
-    "streaming_moments",
-    "ev_p95_ci",
-    "ev_tail_gpd_fit",
-    "ev_markov_stationary",
-    "emb_centroid_classifier",
-    "hash_feature_collision_report",
-    "ev_stickiness_hll",
-    "streaming_cms_user_counts",
-    "corpus_temperature_curve",
-    "ev_user_activity_powerlaw",
-    "customer_theil_index",
-    "orders_orc_roundtrip",
-    "doc_length_quality_corr",
-    "ev_markov_entropy_rate",
-]
-
-# ROUND-8 ROTATION LEDGER: the 71 ROUND7 overflow rows (entries 43..113 in
-# ledger order — round 7's window took the first 42) plus every query added
-# in round 7 (appended as implemented). All overflow rows passed the judge's
-# full 320-query local oracle replica in r6.
-# Overflow is materialized as a slice (single source of truth); round-7
-# additions are appended to _ROUND7_ADDED as they are implemented.
-_ROUND7_ADDED: list[str] = [
-    "orders_iceberg_v2_deletes",
-    "orders_delta_dv_roundtrip",
-    "ev_rolling_time_stats",
-]
-ROUND8_NEVER_GRADED = ROUND7_NEVER_GRADED[42:] + _ROUND7_ADDED
-
-# ROUND-9 ROTATION LEDGER: the 33 ROUND8 overflow rows (entries 42..75 in
-# ledger order — round 8's window took the first 42) minus
-# orders_delta_dv_roundtrip (promoted to a permanent anchor in round 8, so
-# it gets its driver row there), plus every query added in round 8.
-_ROUND8_ADDED: list[str] = [
-    "orders_delta_s3_read",
-    "orders_iceberg_renamed_col",
-    "orders_delta_dv_read",
-    "orders_mor_delete",
-]
-ROUND9_NEVER_GRADED = [
-    n for n in ROUND8_NEVER_GRADED[42:] if n != "orders_delta_dv_roundtrip"
-] + _ROUND8_ADDED
-
-# ROUND-10 ROTATION LEDGER: round 9's window carried the FULL 36-row backlog
-# plus all six round-9 additions (driver coverage reaches 333/333), so no
-# overflow rolls forward. Queries added in round 10 are appended here as
-# implemented; round 10's window can re-anchor saturated rows with the free
-# slots (VERDICT r8 "Next round" #8).
-_ROUND9_ADDED: list[str] = [
-    "streaming_gdpr_delete",
-    "orders_mor_fileuri_roundtrip",
-    "orders_iceberg_bucket_pruned",
-    "orders_delta_export_cadence",
-    "orders_iceberg_truncate_pruned",
-    "doc_reservoir_sample_stats",
-]
-ROUND10_NEVER_GRADED: list[str] = [
-    "doc_stratified_sample_stats",
-    "orders_ivm_minmax",
-    "orders_iceberg_export_snapshots",
-    "orders_streaming_replicated",
-]
-
-# ROUND-11 ROTATION LEDGER: round 10's window carries all four
-# ROUND10_NEVER_GRADED rows (driver coverage stays complete), so only the
-# queries added in round 10 accrue here — appended as implemented, capped
-# at the re-anchoring headroom round 11 will have (VERDICT r9 "Next
-# round" #8 keeps additions <= rotation headroom).
-ROUND11_NEVER_GRADED: list[str] = [
-    "orders_iceberg_day_pruned",
-    "orders_iceberg_ts_travel",
-    "orders_snapshot_history_report",
-    "orders_streaming_replicated_iceberg",
-    "orders_retention_maintenance",
-    "orders_delta_ts_travel",
-]
-
-# ROUND-12 ROTATION LEDGER: round 11's window carries all six
-# ROUND11_NEVER_GRADED rows (driver coverage stays complete), so only the
-# queries added in round 11 accrue here — appended as implemented, capped
-# at the re-anchoring headroom round 12 will have (VERDICT r10 "Next
-# round" #8 keeps additions <= rotation headroom).
-ROUND12_NEVER_GRADED: list[str] = [
-    "orders_rename_evolution",
-    "orders_wap_publish",
-    "orders_type_widening",
-    "orders_constraints_gate",
-    "orders_update_where",
-    "orders_metadata_agg",
-]
-
-# ROUND-13 ROTATION LEDGER: round 12's window carries all six
-# ROUND12_NEVER_GRADED rows, and round 12 is an optimization round (no new
-# queries), so nothing accrues — driver coverage is complete and the
-# round-13 window is free to re-anchor by staleness.
-ROUND13_NEVER_GRADED: list[str] = []
-
-# Historical: the round-6 rotation source (67 = 22 round-5 overflow + 45
-# round-5 additions). Kept so the rotation provenance is auditable.
-ROUND6_NEVER_GRADED = [
-    "fk_integrity_report",
-    "hist_merge_proof", "hll_merge_proof", "join_cardinality_prediction",
-    "lang_source_chisq", "lineitem_skew_report", "lsh_recall_report",
-    "orders_benford_digits", "orders_keyset_page", "orders_pit_priority",
-    "orders_snapshot_diff", "orders_table_fingerprint", "part_copurchase_pairs",
-    "source_characteristic_terms", "source_lang_kl", "streaming_dedup_events",
-    "supplier_triangles", "supplier_two_hop_reach", "tfidf_cosine_pairs",
-    "ev_attribution_touch", "doc_shared_passages", "orders_snapshot_timetravel",
-    # --- added in round 5 (appended as implemented) ---
-    "doc_bm25_queryset",
-    "ann_ivfpq_topk",
-    "retrieval_eval_report",
-    "customer_k_anonymity",
-    "dedup_lsh_index_ingest",
-    "doc_dsir_selection",
-    "streaming_attribution_full",
-    "corpus_curation_e2e",
-    "dedup_semantic_clusters",
-    "doc_leakage_safe_split",
-    "streaming_semantic_assign",
-    "emb_cluster_coreset",
-    "dedup_source_matrix",
-    "corpus_dedup_funnel",
-    "corpus_datacard",
-    "ev_seasonal_naive_forecast",
-    "customer_l_diversity",
-    "streaming_seasonal_anomaly",
-    "emb_principal_direction",
-    "doc_bm25_rm3",
-    "orders_yoy_growth",
-    "streaming_doc_quality",
-    "lang_source_mutual_info",
-    "doc_compression_quality",
-    "orders_change_feed",
-    "dedup_minhash_eval",
-    "emb_pca2_projection",
-    "dedup_minhash_calibration",
-    "customer_abc_analysis",
-    "part_iqr_outliers",
-    "lineitem_cycle_time",
-    "nation_market_concentration",
-    "orders_survival_curve",
-    "ev_markov_next_event",
-    "customer_gini",
-    "ev_user_entropy",
-    "source_lang_jsd",
-    "orders_bloom_point_lookup",
-    "orders_arrow_roundtrip",
-    "ev_user_features",
-    "ev_ab_welch",
-    "ev_ab_cuped",
-    "ev_ab_quantiles",
-    "pipeline_quality_gate",
-    "ev_ab_conversion",
-]
-
 
 # headline queries bench.py times at sf0.1 — one per operator family
 HEADLINE = [

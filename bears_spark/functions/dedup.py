@@ -288,11 +288,11 @@ def ngram_jaccard_pairs(
     """
     # widen the gram build to 4 partitions whenever the scan has fewer: a
     # 1-2-split scan makes the tokenize+shingle explode (the dominant build
-    # cost) near-serial. Round 11 gated this on trigger_below=2 (1-split
-    # only) because widening the 2-split sf1 input destabilized LAZY cache
-    # builds (racing consumers); with the gram persist now EAGER (below)
-    # the build happens exactly once before any consumer, so the race is
-    # gone and the widen is pure build parallelism — r12 interleaved A/B at
+    # cost) near-serial. Round 11 widened only 1-split inputs, because
+    # widening the 2-split sf1 input destabilized LAZY cache builds (racing
+    # consumers); with the gram persist now EAGER (below) the build happens
+    # exactly once before any consumer, so the race is gone and the widen
+    # is pure build parallelism — r12 interleaved A/B at
     # sf1: first-cold 83-118 s (lazy, unwidened) -> ~19 s (eager, widen-4),
     # sf0.1 warm unchanged (1.7-1.8 s both arms). widen-8 was tried and
     # rejected: sf1 cold 12-14 s but the 8-partition cache costs every

@@ -34,31 +34,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bears_spark.caching import scoped_persist
+
 # Caching contract: each scan persists its range-partitioned input so the
 # offsets pass and the main pass see identical partition boundaries (range
 # boundary sampling is seeded by RDD id, so an unpersisted exchange re-run
 # in a LATER action can re-sample different boundaries than the ones the
 # offset table was built from — silent corruption). Caches are therefore
-# retained until drained: every scan also registers with
-# caching.scoped_persist, so harnesses that call release_scoped_caches()
-# between queries drain them; ``release_scan_caches()`` drops them eagerly.
-# This replaces the old most-recent-only policy, which evicted a still-live
-# scan's cache whenever scans were CHAINED (ntile -> ntile -> ntile).
-_SCAN_CACHE: list[DataFrame] = []
-
-
-def _cache_ranged(ranged: DataFrame) -> DataFrame:
-    from bears_spark.caching import scoped_persist
-
-    ranged = scoped_persist(ranged)
-    _SCAN_CACHE.append(ranged)
-    return ranged
-
-
-def release_scan_caches() -> None:
-    """Unpersist every range cache still held by this module."""
-    while _SCAN_CACHE:
-        _SCAN_CACHE.pop().unpersist(blocking=False)
+# retained until drained: every scan registers with caching.scoped_persist,
+# and harnesses call release_scoped_caches() between queries. Chained scans
+# (ntile -> ntile -> ntile) each keep their own cache until that drain.
 
 
 def _order_exprs(order_cols) -> list:
@@ -115,7 +100,7 @@ def partitioned_cumsum(
     see the SAME partition boundaries (range sampling is not re-run)."""
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     totals = (
@@ -176,7 +161,7 @@ def partitioned_scan(
                 raise ValueError(f"unsupported scan fn {fn!r} (have {sorted(_SCAN_FNS)})")
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     total_exprs = [
@@ -252,7 +237,7 @@ def distributed_row_number(
     constant-1 value, but counts come from the cheap groupBy, not a scan."""
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     counts = ranged.groupBy(F.spark_partition_id().alias("__pid__")).count().collect()
@@ -291,7 +276,7 @@ def partitioned_ntile(
     include a unique tiebreaker for a total order."""
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     counts = ranged.groupBy(F.spark_partition_id().alias("__pid__")).count().collect()
@@ -362,7 +347,7 @@ def partitioned_fill(
     input schema (fill never changes a column's type)."""
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     lasts = (
@@ -481,7 +466,7 @@ def global_rolling(
         )
     spark = df.sparkSession
     n = _range_parts(df, num_partitions)
-    ranged = _cache_ranged(
+    ranged = scoped_persist(
         df.repartitionByRange(n, *_order_exprs(order_cols)).sortWithinPartitions(*_order_exprs(order_cols))
     )
     value_cols = list(aggs)

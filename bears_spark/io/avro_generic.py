@@ -1,18 +1,28 @@
-"""Generic (recursive) Avro container codec — the full type system, not just
-the flat nullable-primitive records io/avro_codec.py handles: records,
-arrays, maps, unions, enums, fixed, named-type references, and the null /
-deflate block codecs. Pure stdlib.
+"""Avro object-container codec: the full recursive type system — records,
+arrays, maps, unions, enums, fixed, named-type references — and the null /
+deflate block codecs. Pure stdlib; the one module that knows the format.
 
-Exists for table-format interop: Apache Iceberg's metadata tree
-(manifest-list and manifest files) is deeply-nested Avro
-(iceberg.apache.org/spec — manifest `data_file` is a record of records,
-maps, and arrays), which the flat codec cannot express. Decoding is
-schema-driven off the container's EMBEDDED schema, so readers work on real
-files regardless of writer; the encoder exists so tests can craft
-spec-shaped fixtures without a third-party Avro dependency.
+Two callers:
 
-Scale note: these parse METADATA files (KBs to a few MBs, driver-side);
-bulk data decode stays on the Spark/Arrow paths.
+* table-format interop: Apache Iceberg's metadata tree (manifest-list and
+  manifest files) is deeply-nested Avro (iceberg.apache.org/spec —
+  manifest ``data_file`` is a record of records, maps, and arrays).
+  Decoding is schema-driven off the container's EMBEDDED schema, so readers
+  work on real files regardless of writer; the encoder lets tests craft
+  spec-shaped fixtures without a third-party Avro dependency;
+* the AVRO reader/writer registry entries when the spark-avro JVM package
+  is not deployed (io/reader.py, io/writer.py): one container file per
+  task, with the Spark <-> Avro schema mapping below.
+
+The codec never interprets ``logicalType``: a ``timestamp-micros`` field
+decodes as its raw long and a ``date`` as its raw int (Iceberg manifests
+carry ``date`` partition values that io/iceberg_log.py reads as ints), so
+callers convert at the Spark boundary (unix_micros / timestamp_micros,
+unix_date / date_from_unix_date).
+
+Scale note: Iceberg METADATA files (KBs to a few MBs) decode on the
+driver. The reader/writer fallback decodes one container file per task in
+pure Python; bulk data belongs in parquet or the spark-avro JVM source.
 """
 
 from __future__ import annotations
@@ -22,6 +32,8 @@ import json
 import struct
 import zlib
 from typing import Any
+
+MAGIC = b"Obj\x01"
 
 # varint / zigzag ------------------------------------------------------------
 
@@ -132,18 +144,24 @@ def _decode(buf, schema, env: dict) -> Any:
     raise ValueError(f"unsupported avro type {t!r}")
 
 
+def read_header(buf) -> tuple[dict, str, bytes]:
+    """Parse a container header from a binary stream -> (embedded schema,
+    block codec, sync marker), leaving ``buf`` at the first data block — so
+    a file's schema can be peeked without decoding its rows."""
+    if buf.read(4) != MAGIC:
+        raise ValueError("not an avro container")
+    meta = _decode(buf, {"type": "map", "values": "bytes"}, {})
+    codec = meta.get("avro.codec", b"null").decode()
+    if codec not in ("null", "deflate"):
+        raise ValueError(f"unsupported avro codec {codec!r}")
+    return json.loads(meta["avro.schema"]), codec, buf.read(16)
+
+
 def read_container(data: bytes) -> tuple[dict, list[dict]]:
     """Avro object-container bytes -> (embedded schema, records). Handles
     the null and deflate codecs."""
     buf = io.BytesIO(data)
-    if buf.read(4) != b"Obj\x01":
-        raise ValueError("not an avro container")
-    meta = _decode(buf, {"type": "map", "values": "bytes"}, {})
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("null", "deflate"):
-        raise ValueError(f"unsupported avro codec {codec!r}")
-    sync = buf.read(16)
+    schema, codec, sync = read_header(buf)
     records: list[dict] = []
     while True:
         head = buf.read(1)
@@ -231,7 +249,7 @@ def _encode(buf, schema, value, env: dict) -> None:
 def write_container(schema: dict, records: list[dict]) -> bytes:
     """(schema, records) -> avro object-container bytes (null codec)."""
     out = io.BytesIO()
-    out.write(b"Obj\x01")
+    out.write(MAGIC)
     meta = {"avro.schema": json.dumps(schema).encode()}
     _encode(out, {"type": "map", "values": "bytes"}, meta, {})
     sync = b"\x00" * 8 + b"bearsync"  # any 16 bytes
@@ -246,3 +264,74 @@ def write_container(schema: dict, records: list[dict]) -> bytes:
     out.write(payload)
     out.write(sync)
     return out.getvalue()
+
+
+# Spark schema mapping ----------------------------------------------------------
+
+
+def spark_schema_to_avro(schema, name: str = "row") -> dict:
+    """Spark StructType of scalar columns -> Avro record schema, every field
+    nullable (``["null", T]``). Nested columns raise: write parquet."""
+    from pyspark.sql import types as T
+
+    def field_type(dt) -> Any:
+        if isinstance(dt, T.BooleanType):
+            return "boolean"
+        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType)):
+            return "int"
+        if isinstance(dt, T.LongType):
+            return "long"
+        if isinstance(dt, T.FloatType):
+            return "float"
+        if isinstance(dt, T.DoubleType):
+            return "double"
+        if isinstance(dt, T.StringType):
+            return "string"
+        if isinstance(dt, T.BinaryType):
+            return "bytes"
+        if isinstance(dt, T.TimestampType):
+            return {"type": "long", "logicalType": "timestamp-micros"}
+        if isinstance(dt, T.DateType):
+            return {"type": "int", "logicalType": "date"}
+        raise NotImplementedError(f"avro supports flat scalar columns; got {dt}")
+
+    return {
+        "type": "record",
+        "name": name,
+        "fields": [{"name": f.name, "type": ["null", field_type(f.dataType)]} for f in schema.fields],
+    }
+
+
+def avro_schema_to_spark(avro: dict):
+    """Avro record schema of scalar fields -> Spark StructType (the inverse
+    of spark_schema_to_avro; byte and short come back as int)."""
+    from pyspark.sql import types as T
+
+    prim = {
+        "boolean": T.BooleanType(),
+        "int": T.IntegerType(),
+        "long": T.LongType(),
+        "float": T.FloatType(),
+        "double": T.DoubleType(),
+        "string": T.StringType(),
+        "bytes": T.BinaryType(),
+    }
+
+    def to_spark(ft) -> Any:
+        if isinstance(ft, list):  # union — take the non-null branch
+            branches = [b for b in ft if b != "null"]
+            if len(branches) != 1:
+                raise NotImplementedError(f"only [null, T] unions supported, got {ft}")
+            return to_spark(branches[0])
+        if isinstance(ft, dict):
+            lt = ft.get("logicalType")
+            if lt == "timestamp-micros":
+                return T.TimestampType()
+            if lt == "date":
+                return T.DateType()
+            return to_spark(ft["type"])
+        if ft in prim:
+            return prim[ft]
+        raise NotImplementedError(f"unsupported avro type {ft!r}")
+
+    return T.StructType([T.StructField(f["name"], to_spark(f["type"]), True) for f in avro["fields"]])

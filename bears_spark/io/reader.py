@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from typing import Any, Callable, Dict
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from bears_spark.frame import SparkFrame, _normalize_nan_to_null
@@ -165,37 +166,52 @@ def _read_binary(spark: SparkSession, path: str, schema=None, **opts) -> DataFra
 @register_reader(FileFormat.AVRO)
 def _read_avro(spark: SparkSession, path: str, schema=None, **opts) -> DataFrame:
     """Avro reader: the spark-avro JVM source when deployed, else the
-    pure-stdlib container codec (io/avro_codec.py) over the binaryFile
+    pure-stdlib container codec (io/avro_generic.py) over the binaryFile
     source — one container file decodes per task, schema peeked from the
     first file's header on the driver (a bounded metadata read)."""
     try:
         return spark.read.format("avro").load(path)
-    except Exception as exc:  # AnalysisException: failed to find data source
+    except AnalysisException as exc:  # failed to find data source: avro
         if "avro" not in str(exc).lower():
             raise
 
-    from bears_spark.io.avro_codec import avro_schema_to_spark, decode_container, read_header
-
     import os as _os
+    from urllib.parse import unquote
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from bears_spark.io.avro_generic import avro_schema_to_spark, read_container, read_header
 
     src = path.removeprefix("file:")
     if _os.path.isdir(src):
         src = src.rstrip("/") + "/*.avro"
     binary = spark.read.format("binaryFile").load(src)
 
-    from urllib.parse import unquote
-
     sample = unquote(binary.select("path").first()["path"].removeprefix("file:"))
     with open(sample, "rb") as f:
-        avro_schema, _sync = read_header(f)
-    out_schema = avro_schema_to_spark(avro_schema)
+        out_schema = avro_schema_to_spark(read_header(f)[0])
+    # the codec yields timestamp-micros / date fields as their raw ints;
+    # decode to those and map the logical types back in the projection
+    raw_types = {T.TimestampType(): T.LongType(), T.DateType(): T.IntegerType()}
+    raw_schema = T.StructType([T.StructField(f.name, raw_types.get(f.dataType, f.dataType)) for f in out_schema])
+    arrow_schema = to_arrow_schema(raw_schema)
 
     def _decode(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                yield decode_container(row["content"])
+        for batch in batches:
+            for content in batch.column("content").to_pylist():
+                yield pa.RecordBatch.from_pylist(read_container(content)[1], schema=arrow_schema)
 
-    return binary.select("content").mapInPandas(_decode, out_schema)
+    raw = binary.select("content").mapInArrow(_decode, raw_schema)
+    logical = {T.TimestampType(): F.timestamp_micros, T.DateType(): F.date_from_unix_date}
+    return raw.select(
+        *[
+            logical[f.dataType](raw[f.name]).alias(f.name) if f.dataType in logical else raw[f.name]
+            for f in out_schema
+        ]
+    )
 
 
 class Reader:

@@ -20,6 +20,7 @@ import os
 import shutil
 from typing import Any, Callable, Dict
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from bears_spark.io.metadata import FileFormat, FileMetadata, to_spark_path
@@ -106,8 +107,9 @@ def _resolve_fs(path: str):
 @register_writer(FileFormat.AVRO)
 def _write_avro(df: DataFrame, path: str, **opts) -> None:
     """Avro writer: spark-avro JVM sink when deployed, else the pure-stdlib
-    container codec — each partition Arrow-batches through mapInPandas and
-    writes its own part-NNNNN.avro (parallel, one container per task).
+    container codec (io/avro_generic.py) — each partition Arrow-batches
+    through mapInArrow and writes its own part-NNNNN.avro (parallel, one
+    container per task). Nulls stay null and NaN stays a double.
 
     The fallback writes through pyarrow.fs, so local paths AND object-store
     URIs (s3://, gs://, hdfs://) both work — parity with the reference's
@@ -115,11 +117,14 @@ def _write_avro(df: DataFrame, path: str, **opts) -> None:
     try:
         df.write.mode(opts.get("mode", "overwrite")).format("avro").save(path)
         return
-    except Exception as exc:
+    except AnalysisException as exc:  # failed to find data source: avro
         if "avro" not in str(exc).lower():
             raise
 
-    from bears_spark.io.avro_codec import encode_container, spark_schema_to_avro
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from bears_spark.io.avro_generic import spark_schema_to_avro, write_container
 
     fs, root = _resolve_fs(path)
     if opts.get("mode", "overwrite") == "overwrite":
@@ -129,22 +134,27 @@ def _write_avro(df: DataFrame, path: str, **opts) -> None:
             pass
     fs.create_dir(root, recursive=True)
     avro_schema = spark_schema_to_avro(df.schema)
+    # the codec writes timestamp-micros / date fields as their raw ints
+    raw = {T.TimestampType(): F.unix_micros, T.DateType(): F.unix_date}
+    plain = df.select(
+        *[raw[f.dataType](df[f.name]).alias(f.name) if f.dataType in raw else df[f.name] for f in df.schema]
+    )
 
     def _enc(batches):
-        import pandas as pd
+        import pyarrow as pa
         from pyspark import TaskContext
 
-        pdfs = list(batches)
-        if not pdfs:
+        batches = list(batches)
+        if not batches:
             return
-        pdf = pd.concat(pdfs, ignore_index=True)
+        records = [r for b in batches for r in b.to_pylist()]
         part_fs, part_root = _resolve_fs(path)
         part = f"{part_root.rstrip('/')}/part-{TaskContext.get().partitionId():05d}.avro"
         with part_fs.open_output_stream(part) as f:
-            f.write(encode_container(pdf, avro_schema))
-        yield pd.DataFrame({"path": [part], "n_rows": [len(pdf)]})
+            f.write(write_container(avro_schema, records))
+        yield pa.RecordBatch.from_pylist([{"path": part, "n_rows": len(records)}])
 
-    df.mapInPandas(_enc, "path string, n_rows long").collect()
+    plain.mapInArrow(_enc, "path string, n_rows long").collect()
 
 
 @register_writer(FileFormat.ARROW)

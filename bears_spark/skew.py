@@ -88,7 +88,7 @@ def salted_join(
     return big_s.join(F.broadcast(small_r), on=[on, "__salt__"], how=how).drop("__salt__")
 
 
-def widen_input(df: DataFrame, min_parts: int | None = None, trigger_below: int | None = None) -> DataFrame:
+def widen_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Input-skew guard (guide §2.5): when a scan cannot parallelize on its
     own — one unsplittable file / a single parquet row group gives the whole
     downstream chain ONE task — round-robin repartition right after the read
@@ -98,10 +98,10 @@ def widen_input(df: DataFrame, min_parts: int | None = None, trigger_below: int 
     Call it ONLY in front of per-row work that dwarfs the scan itself; for a
     plain scan→filter→aggregate the decode is the cost and the shuffle buys
     nothing. The check is plan-time (``getNumPartitions`` compiles the plan,
-    ~50 ms, no job): if the source already has that many partitions this is
-    a NO-OP — at production scale inputs carry thousands of splits and the
-    shuffle never happens, so the knob is scale-adaptive rather than tuned
-    to local[32]. Row-level semantics are unchanged (round-robin
+    ~50 ms, no job): if the source already has ``min_parts`` partitions this
+    is a NO-OP — at production scale inputs carry thousands of splits and
+    the shuffle never happens, so the guard is scale-adaptive rather than
+    tuned to local[32]. Row-level semantics are unchanged (round-robin
     repartition reorders rows only; every caller aggregates or joins
     downstream).
 
@@ -109,30 +109,20 @@ def widen_input(df: DataFrame, min_parts: int | None = None, trigger_below: int 
     count: every downstream stage consuming the widened frame pays one task
     of fixed overhead per partition, so past ~8 the added task overhead
     eats the build parallelism (widen-to-32 measured ~2x worse than
-    widen-to-8 on the ngram_contamination shape). Do NOT widen a frame
-    that is persisted and fanned out to several consumers: repeat runs
-    read the cache, amortizing the one-time single-split build, and the
-    wider cache makes every consumer slower — interleaved bench-style A/B
-    on dedup_ngram_jaccard / tfidf_cosine_pairs measured no-widen faster
-    (1.54 vs 1.82 s, 1.41 vs 1.60 s) with occasional lazy-cache-race
-    blowups under widen. Measured wins are the UNPERSISTED heavy
+    widen-to-8 on the ngram_contamination shape). Measured wins are heavy
     projections: doc_decontaminate 1.05 -> 0.69 s, dedup_semantic_clusters
-    1.86 -> 1.48 s (persisted, but consumers are sequential).
+    1.86 -> 1.48 s.
 
-    ``trigger_below`` decouples WHEN to widen from HOW WIDE: with
-    ``trigger_below=2`` only a truly serial (single-split) input is widened
-    to ``min_parts`` — an input that already carries 2+ splits keeps its
-    layout. (Round 11 used this on dedup_ngram_jaccard's persisted gram
-    build because widening a 2-split input destabilized LAZY racing cache
-    builds; round 12 made that persist EAGER — built once, before any
-    consumer — which removed the instability, so the call site now widens
-    unconditionally to 4 and the gate is unused there. The knob stays for
-    future persisted-and-lazily-raced call sites.)"""
+    A widened frame that several concurrent jobs read must be persisted
+    EAGERLY (``scoped_persist(eager=True)``, as dedup_ngram_jaccard's gram
+    build is): it is then built once before any consumer runs. Behind a
+    LAZY persist each racing job rebuilds the blocks it cannot lock, and
+    the wider build makes every rebuild dearer."""
     sc = df.sparkSession.sparkContext
     target = min_parts or min(sc.defaultParallelism, 8)
     if target <= 1:
         return df
     have = df.rdd.getNumPartitions()
-    if have >= target or have >= (trigger_below or target):
+    if have >= target:
         return df
     return df.repartition(target)

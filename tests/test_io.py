@@ -216,7 +216,7 @@ def test_avro_roundtrip(spark, tmp_path):
 
 
 def test_avro_single_file_and_codec_identity(spark, tmp_path):
-    from bears_spark.io.avro_codec import decode_container, encode_container, spark_schema_to_avro
+    from bears_spark.io.avro_generic import read_container, spark_schema_to_avro, write_container
     from bears_spark.io.writer import Writer
 
     df = spark.createDataFrame([(i, f"s{i}") for i in range(10)], "id long, s string")
@@ -225,11 +225,43 @@ def test_avro_single_file_and_codec_identity(spark, tmp_path):
     import os
 
     assert os.path.isfile(single)
-    pdf = decode_container(open(single, "rb").read())
-    assert sorted(pdf["id"].tolist()) == list(range(10))
-    # codec identity: encode(decode(x)) == x byte-for-byte (deterministic sync)
-    blob = encode_container(pdf, spark_schema_to_avro(df.schema))
-    assert decode_container(blob).equals(pdf)
+    blob = open(single, "rb").read()
+    schema, records = read_container(blob)
+    assert schema == spark_schema_to_avro(df.schema)
+    assert sorted(r["id"] for r in records) == list(range(10))
+    # codec identity: encode(decode(x)) == x byte-for-byte (fixed sync marker)
+    assert write_container(schema, records) == blob
+
+
+def test_avro_keeps_nan_apart_from_null(spark, tmp_path):
+    """A double NaN is a value, not a null: the container stores it as the
+    double branch, and the format reader returns NaN and None apart. The
+    Reader facade then applies the engine's NaN -> null ingest rule
+    (frame._normalize_nan_to_null), as it does for every format. Dates
+    travel as Avro ``date`` ints (days since the epoch)."""
+    import datetime as dt
+    import math
+
+    from bears_spark.io.avro_generic import read_container
+    from bears_spark.io.metadata import FileFormat
+    from bears_spark.io.reader import _READERS, Reader
+    from bears_spark.io.writer import Writer
+
+    day = dt.date(1969, 12, 30)
+    df = spark.createDataFrame(
+        [(1, float("nan"), day), (2, None, None), (3, 1.5, dt.date(2024, 2, 29))], "id long, x double, d date"
+    )
+    out = str(tmp_path / "nan.avro")
+    Writer.of("avro").write(df, out, single_file=True)
+    stored = {r["id"]: r for r in read_container(open(out, "rb").read())[1]}
+    assert math.isnan(stored[1]["x"]) and stored[2]["x"] is None and stored[3]["x"] == 1.5
+    assert stored[1]["d"] == -2 and stored[2]["d"] is None
+
+    back = {r["id"]: r for r in _READERS[FileFormat.AVRO](spark, out).collect()}
+    assert math.isnan(back[1]["x"]) and back[2]["x"] is None and back[3]["x"] == 1.5
+    assert [back[i]["d"] for i in (1, 2, 3)] == [day, None, dt.date(2024, 2, 29)]
+    ingested = {r["id"]: r["x"] for r in Reader.of("avro").read(out, spark=spark).df.collect()}
+    assert ingested == {1: None, 2: None, 3: 1.5}
 
 
 def test_partitioned_write_and_pruned_read(spark, tmp_path):

@@ -43,17 +43,6 @@ def test_widen_input_noop_when_already_wide(spark):
     assert widen_input(docs) is docs  # >= target -> untouched, no extra shuffle
 
 
-def test_widen_input_trigger_below_only_widens_serial_inputs(spark):
-    """trigger_below=2: a single-split input widens to the target, but a
-    2-split input keeps its layout (the ngram gram-build contract — widening
-    an already-parallel scan destabilized cache reuse at sf1)."""
-    docs = T.load_table(spark, SF, "documents").select("doc_id")
-    assert docs.rdd.getNumPartitions() == 1
-    assert widen_input(docs, 4, trigger_below=2).rdd.getNumPartitions() == 4
-    two = docs.repartition(2)
-    assert widen_input(two, 4, trigger_below=2) is two  # 2 splits -> untouched
-
-
 def test_load_table_memo_hits_and_invalidates(spark, tmp_path):
     d = str(tmp_path / "sf")
     os.makedirs(d)

@@ -147,27 +147,32 @@ def test_partitioned_scan_null_carry(spark):
 def test_scan_cache_drained_by_registry(spark):
     """Scan caches stay live until drained (chained scans would silently
     corrupt if an earlier scan's boundaries were re-sampled after eviction);
-    they register with the scoped-cache registry so the per-query harness
-    drain releases them, and release_scan_caches() drops them eagerly."""
+    they register with the scoped-cache registry, whose per-query drain
+    leaves the session with no persisted RDD of theirs."""
     from bears_spark import caching
     from bears_spark.functions import prefix
 
-    prefix.release_scan_caches()
     caching.release_scoped_caches()
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
     df = spark.range(100).select(F.col("id"), F.lit(1).alias("v"))
-    for _ in range(3):
-        prefix.partitioned_cumsum(df, ["id"], ["v"], num_partitions=2).count()
-    assert len(prefix._SCAN_CACHE) == 3  # all retained while live
-    assert len(caching._SCOPED) >= 3  # registered for the harness drain
-    prefix.release_scan_caches()
-    assert len(prefix._SCAN_CACHE) == 0
-    caching.release_scoped_caches()  # double-unpersist is a no-op
+    col = "v"
+    for _ in range(3):  # chained: each scan reads the previous one's output
+        df = prefix.partitioned_cumsum(df, ["id"], [col], num_partitions=2)
+        col += "_cumsum"
+    # third cumsum of ones: C(id + 3, 3)
+    assert df.filter(F.col(col) != F.expr("(id + 1) * (id + 2) * (id + 3) div 6")).count() == 0
+    assert len(caching._SCOPED) == 3  # all retained while live
+    assert jsc.getPersistentRDDs().size() >= start + 3
+    assert caching.release_scoped_caches() == 3
+    assert jsc.getPersistentRDDs().size() == start
 
 
 def test_partitioned_ntile_matches_window(spark):
     from pyspark.sql import Window
 
-    from bears_spark.functions.prefix import partitioned_ntile, release_scan_caches
+    from bears_spark.caching import release_scoped_caches
+    from bears_spark.functions.prefix import partitioned_ntile
 
     df = spark.range(103).select(
         F.col("id"), (F.col("id") * 37 % 11).alias("k"), (F.col("id") % 7).alias("v")
@@ -178,7 +183,7 @@ def test_partitioned_ntile_matches_window(spark):
         exp = df.withColumn("b2", F.ntile(nb).over(w))
         bad = out.join(exp, "id").filter(F.col("b") != F.col("b2"))
         assert bad.count() == 0, f"ntile({nb}) mismatch"
-    release_scan_caches()
+    release_scoped_caches()
 
 
 def test_chained_scans_consistent(spark):
@@ -187,7 +192,8 @@ def test_chained_scans_consistent(spark):
     keep every offset table consistent with its boundaries."""
     from pyspark.sql import Window
 
-    from bears_spark.functions.prefix import partitioned_ntile, release_scan_caches
+    from bears_spark.caching import release_scoped_caches
+    from bears_spark.functions.prefix import partitioned_ntile
 
     df = spark.range(500).select(
         F.col("id"),
@@ -206,7 +212,7 @@ def test_chained_scans_consistent(spark):
         (F.col("qa") != F.col("qa2")) | (F.col("qb") != F.col("qb2")) | (F.col("qc") != F.col("qc2"))
     )
     assert bad.count() == 0
-    release_scan_caches()
+    release_scoped_caches()
 
 
 def _physical(df) -> str:
@@ -219,8 +225,8 @@ def test_frame_partitionless_paths_have_no_window(spark):
     prefix machinery (range shuffle + offset table / position join)."""
     import pandas as pd
 
+    from bears_spark.caching import release_scoped_caches
     from bears_spark.frame import SparkFrame
-    from bears_spark.functions.prefix import release_scan_caches
 
     pdf = pd.DataFrame({"t": range(1, 9), "v": [1.0, 3.0, None, 4.0, 2.0, None, 7.0, 5.0]})
     sf = SparkFrame.of(pdf, spark)
@@ -239,7 +245,7 @@ def test_frame_partitionless_paths_have_no_window(spark):
     ):
         plan = _physical(out.df)
         assert "Window" not in plan, plan[:2000]
-    release_scan_caches()
+    release_scoped_caches()
 
 
 def test_global_rolling_matches_window_form(spark):
@@ -249,8 +255,8 @@ def test_global_rolling_matches_window_form(spark):
     import pandas as pd
     from pyspark.sql import Window
 
+    from bears_spark.caching import release_scoped_caches
     from bears_spark.frame import SparkFrame
-    from bears_spark.functions.prefix import release_scan_caches
 
     vals = [1.0, 3.0, None, 4.0, 2.0, None, 7.0, 5.0, 3.0, 1.0, 8.0, None, 2.0, 6.0]
     pdf = pd.DataFrame({"t": range(len(vals)), "v": vals})
@@ -279,7 +285,7 @@ def test_global_rolling_matches_window_form(spark):
                 assert pd.isna(gv), (fn, i, gv, ev)
             else:
                 assert abs(float(gv) - float(ev)) < 1e-9, (fn, i, gv, ev)
-    release_scan_caches()
+    release_scoped_caches()
 
 
 def test_global_rolling_int_types_and_guards(spark):
@@ -288,8 +294,9 @@ def test_global_rolling_int_types_and_guards(spark):
     import pandas as pd
     import pytest as _pytest
 
+    from bears_spark.caching import release_scoped_caches
     from bears_spark.frame import SparkFrame
-    from bears_spark.functions.prefix import global_rolling, release_scan_caches
+    from bears_spark.functions.prefix import global_rolling
 
     sf = SparkFrame.of(pd.DataFrame({"t": range(6), "n": [5, 1, 4, 2, 6, 3]}), spark)
     out = sf.rolling_agg("t", 3, {"n": ["sum", "min", "count"]}).sort_values("t")
@@ -304,7 +311,7 @@ def test_global_rolling_int_types_and_guards(spark):
     sf2 = SparkFrame.of(pd.DataFrame({"t": [1], "s": ["x"]}), spark)
     with _pytest.raises(TypeError, match="numeric"):
         sf2.rolling_agg("t", 2, {"s": "min"})
-    release_scan_caches()
+    release_scoped_caches()
 
 
 def test_frame_partitionless_values_match_window_forms(spark):
@@ -312,8 +319,8 @@ def test_frame_partitionless_values_match_window_forms(spark):
     forms they replaced."""
     import pandas as pd
 
+    from bears_spark.caching import release_scoped_caches
     from bears_spark.frame import SparkFrame
-    from bears_spark.functions.prefix import release_scan_caches
 
     pdf = pd.DataFrame(
         {"t": range(1, 11), "v": [1.0, 3.0, None, 4.0, 2.0, None, 7.0, 5.0, 3.0, 1.0]}
@@ -360,4 +367,4 @@ def test_frame_partitionless_values_match_window_forms(spark):
     assert ff["v"].equals(exp["v"].ffill().reset_index(drop=True))
     bf = sf.bfill("t", ["v"]).sort_values("t").to_pandas()
     assert bf["v"].equals(exp["v"].bfill().reset_index(drop=True))
-    release_scan_caches()
+    release_scoped_caches()

@@ -443,11 +443,11 @@ def test_distributed_rank_ntile_shift_match_window(spark, case):
     duplicate-heavy null-bearing frames."""
     from pyspark.sql import Window
 
+    from bears_spark.caching import release_scoped_caches
     from bears_spark.functions.prefix import (
         distributed_rank,
         global_shift,
         partitioned_ntile,
-        release_scan_caches,
     )
 
     vals, parts, nb = case
@@ -475,7 +475,7 @@ def test_distributed_rank_ntile_shift_match_window(spark, case):
         .filter(~(F.col("v_shift").eqNullSafe(F.col("v_shift2"))))
     )
     assert bad_s.count() == 0
-    release_scan_caches()
+    release_scoped_caches()
 
 
 @st.composite
@@ -495,7 +495,8 @@ def _fill_case(draw):
 @given(_fill_case())
 @_settings
 def test_partitioned_fill_matches_pandas(spark, case):
-    from bears_spark.functions.prefix import partitioned_fill, release_scan_caches
+    from bears_spark.caching import release_scoped_caches
+    from bears_spark.functions.prefix import partitioned_fill
 
     vals, parts = case
     pdf = pd.DataFrame({"id": range(len(vals)), "v": vals})
@@ -522,7 +523,7 @@ def test_partitioned_fill_matches_pandas(spark, case):
             assert gotb[i] is None
         else:
             assert gotb[i] == pytest.approx(e)
-    release_scan_caches()
+    release_scoped_caches()
 
 
 @st.composite
@@ -539,14 +540,15 @@ def test_sequence_packing_model(spark, case):
     """Concat-and-chunk packing invariants on random token counts: packs
     are exactly `budget` tokens except the last, spans partition each doc,
     and the reconstruction in (pack, doc) order is the doc_id order."""
-    from bears_spark.functions.prefix import partitioned_cumsum, release_scan_caches
+    from bears_spark.caching import release_scoped_caches
+    from bears_spark.functions.prefix import partitioned_cumsum
 
     toks, budget = case
     pdf = pd.DataFrame({"doc_id": range(len(toks)), "n_tok": toks})
     nz = pdf[pdf["n_tok"] > 0]
     df = spark.createDataFrame(pdf).filter(F.col("n_tok") > 0)
     if nz.empty:
-        release_scan_caches()
+        release_scoped_caches()
         return
     b = F.lit(budget).cast("bigint")
     cum = partitioned_cumsum(df, ["doc_id"], ["n_tok"], num_partitions=3, suffix="_cum")
@@ -580,7 +582,7 @@ def test_sequence_packing_model(spark, case):
         assert n == budget if p != last else 0 < n <= budget
     assert per_doc == {int(d): int(t) for d, t in zip(nz["doc_id"], nz["n_tok"])}
     assert sum(per_pack.values()) == total
-    release_scan_caches()
+    release_scoped_caches()
 
 
 @st.composite
@@ -710,9 +712,9 @@ def test_global_rolling_matches_pandas(spark, case):
                 assert pd.isna(got.iloc[i]), (col, i, got.iloc[i])
             else:
                 assert float(got.iloc[i]) == pytest.approx(float(exp.iloc[i])), (col, i)
-    from bears_spark.functions.prefix import release_scan_caches
+    from bears_spark.caching import release_scoped_caches
 
-    release_scan_caches()
+    release_scoped_caches()
 
 
 @st.composite
