@@ -3622,16 +3622,18 @@ def events_hive_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
             .parquet(out)
         )
         back = spark.read.parquet(out)
+        # the hive `day=` directories read back as a date: filter on it (the
+        # partition filter), then hand the driver the string the schema says
         rows = (
             back.where(F.col("day").between("2024-01-10", "2024-01-12"))
-            .groupBy("day", "event_type")
+            .groupBy(F.col("day").cast("string").alias("day"), "event_type")
             .agg(F.count("*").alias("n"), F.countDistinct("user_id").alias("n_users"))
             .orderBy("day", "event_type")
             .collect()
         )
     finally:
         shutil.rmtree(out.rsplit("/", 1)[0], ignore_errors=True)
-    return local_df(spark, 
+    return local_df(spark,
         [(r["day"], r["event_type"], r["n"], r["n_users"]) for r in rows],
         "day string, event_type string, n bigint, n_users bigint",
     ).orderBy("day", "event_type")

@@ -2,11 +2,12 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
-Each headline query is first run once at sf0.001 (untimed warm-up: JVM JIT,
-whole-stage-codegen compilation, broadcast infra), then timed at the target
-SF. Timed numbers therefore approximate steady-state engine throughput, not
-first-action cold-start. Run-to-run noise at sf0.1 is still ±30% under
-background load — rerun before believing a regression.
+The loop is tools/measure.py's: every headline query is first run once at
+sf0.001 (untimed warm-up: JVM JIT, whole-stage-codegen compilation, broadcast
+infra), then each is timed in a block of 3 runs at the target SF and its min
+is reported. Timed numbers therefore approximate steady-state engine
+throughput, not first-action cold-start. Run-to-run noise at sf0.1 is still
+±30% under background load — rerun before believing a regression.
 """
 
 from __future__ import annotations
@@ -14,18 +15,15 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _testdata_fingerprint(sf_dir: str) -> str:
     """Stable 16-hex digest of the input parquet CONTENTS (path + full file
-    bytes of every *.parquet under ``sf_dir``). Two bench lines with equal
-    fingerprints ran on byte-identical testdata; unequal fingerprints mean
-    per-query deltas may be data-layout effects, not code. Content hashing
-    (not size+mtime) so a byte-identical regeneration still compares MATCH
-    and a preserved-mtime copy of different bytes does not."""
+    bytes of every *.parquet under ``sf_dir``), so a byte-identical
+    regeneration still matches and a preserved-mtime copy of other bytes
+    does not."""
     import hashlib
 
     h = hashlib.sha256()
@@ -44,118 +42,45 @@ def _testdata_fingerprint(sf_dir: str) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    # The library is imported here, never at module level: perfbench/run.py
+    # imports this module for _testdata_fingerprint before it pins the JVM
+    # heap, and bears_spark.session reads SPARK_GRAFT_DRIVER_MEM on import.
     import __spark_entry__ as entrymod
-    from bears_spark.session import get_session
+    from tools.measure import block, session, warm_up
 
-    spark = get_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = session("bench")
     all_qs = entrymod.queries()
-    names = getattr(entrymod, "HEADLINE", None) or list(all_qs)
-    qs = {n: all_qs[n] for n in names}
+    qs = {n: all_qs[n] for n in entrymod.HEADLINE}
+    warm_up(spark, qs, sf_dir)
 
-    # Warm-up: run every headline query once at the smallest SF (untimed).
-    # Whole-stage-codegen compiles per generated-code shape, so this absorbs
-    # JIT/codegen/broadcast-infra cold-start into the warm-up instead of
-    # charging it (noisily, load-dependently) to the first timed queries.
-    warm_dir = "/root/testdata/sf0.001"
-    warm_src = warm_dir if os.path.isdir(warm_dir) else sf_dir
-    for name, fn in qs.items():
-        try:
-            fn(spark, warm_src).count()
-        except Exception as exc:  # never let warm-up kill the bench
-            print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-    from bears_spark.caching import release_scoped_caches
-
-    release_scoped_caches()  # warm-up leftovers must not occupy executor memory
-
-    # Prior-round recordings (BENCH_r*.json at the same SF): any query whose
-    # best-of-3 exceeds 1.5x its best historical number gets extra reruns
-    # before the JSON is emitted — the artifact defends itself against
-    # ambient-load noise (VERDICT r5 #3: a clean query recorded a nominal
-    # 2x-gate breach purely from a loaded host).
-    prior: dict[str, float] = {}
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        try:
-            rec = json.loads(open(p).read())
-        except (OSError, json.JSONDecodeError):
-            continue
-        # the driver records bench.py's JSON line under a wrapper:
-        # {n, rc, cpus, sf, tail, parsed: {metric, value, queries, sf}}
-        if "parsed" in rec and isinstance(rec["parsed"], dict):
-            rec = rec["parsed"]
-        sf_of = str(rec.get("sf"))
-        if sf_of != sf_dir.rstrip("/").rsplit("sf", 1)[-1]:
-            continue
-        for q, t in rec.get("queries", {}).items():
-            prior[q] = min(prior.get(q, float("inf")), float(t))
-
-    # best-of-3 per query: this host shows 2-3x wall-clock swings from
-    # ambient load; the min measures the code rather than the neighbor.
+    # min of a block of 3 per query: this host shows 2-3x wall-clock swings
+    # from ambient load; the min measures the code rather than the neighbor.
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
-    rerun_log: dict[str, int] = {}
     for name, fn in qs.items():
-        runs = []
         try:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                n = df.count()  # force full execution
-                runs.append(time.perf_counter() - t0)
-            # noise defense: rerun (up to 3 more) while the best still reads
-            # as a regression vs the best prior-round recording. The trigger
-            # tightens from 1.5x to 1.3x when the observed run spread exceeds
-            # 2x — a high-spread best-of-3 is exactly the loaded-host regime
-            # where a 1.3-1.5x "regression" is ambient noise (VERDICT r6 #5:
-            # doc_bm25_queryset drifted 1.38x with a 2.7x spread, under the
-            # old flat trigger).
-            ref = prior.get(name)
-            while ref is not None and len(runs) < 6:
-                trigger = 1.3 if max(runs) > 2 * min(runs) else 1.5
-                if min(runs) <= trigger * ref:
-                    break
-                rerun_log[name] = rerun_log.get(name, 0) + 1
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).count()
-                runs.append(time.perf_counter() - t0)
+            runs = block(spark, fn, sf_dir)
         except Exception as exc:
-            # One broken query must never zero the whole bench (round-2
-            # lesson): record the failure, keep timing the rest, and still
-            # emit the JSON line at the end.
+            # One broken query must never zero the whole bench: record the
+            # failure, keep timing the rest, and still emit the JSON line.
             failures[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: FAILED {failures[name]}", file=sys.stderr)
             continue
         timings[name] = round(min(runs), 4)
-        print(f"# {name}: {timings[name]:.3f}s (runs: {', '.join(f'{r:.3f}' for r in runs)}) rows={n}", file=sys.stderr)
-        # drain query-scoped persists so caches never accumulate across the
-        # run (and no query times against another query's leftover cache)
-        from bears_spark.caching import release_scoped_caches
-
-        release_scoped_caches()
-    total = round(sum(timings.values()), 4)
+        print(f"# {name}: {timings[name]:.3f}s (runs: {', '.join(f'{r:.3f}' for r in runs)})", file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "total_query_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # The driver REGENERATES /root/testdata at round start, so
-        # cross-round per-query ratios mix code changes with data-layout
-        # changes (row-group boundaries, value order). The fingerprint lets
-        # a comparison mechanically detect whether two BENCH_r*.json lines
-        # ran against the same parquet bytes (VERDICT r9 "What's wrong" #2).
+        # equal fingerprints: two bench lines ran on the same parquet bytes
         "testdata_fingerprint": _testdata_fingerprint(sf_dir),
     }
     if failures:
         out["failures"] = failures
-    if rerun_log:
-        out["noise_reruns"] = rerun_log
     print(json.dumps(out))
 
 

@@ -74,6 +74,26 @@ def test_query_runs(spark, sf_dir, name):
     assert df.columns
 
 
+def test_hive_partition_pruning_stays_on_arrow_and_prunes(spark, sf_dir):
+    """The read-back `day` partition column is a date; the query must still
+    prune on it and hand local_df strings, so createDataFrame keeps the Arrow
+    path instead of warning and falling back to pickled rows."""
+    import re
+    import warnings
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        rows = entrymod.queries()["events_hive_partition_pruning"](spark, sf_dir).collect()
+    assert rows and all(isinstance(r["day"], str) for r in rows)
+    assert not [w for w in caught if issubclass(w.category, UserWarning) and "Arrow" in str(w.message)]
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 20), 20)
+    plans = [recent.apply(i).physicalPlanDescription() for i in range(recent.size())]
+    filters = [f for p in plans if "hivepart_" in p for f in re.findall(r"PartitionFilters: \[([^\]]*)\]", p)]
+    assert any("day" in f for f in filters), filters
+
+
 def test_load_table_normalizes_all_ts_encodings(spark, tmp_path):
     """load_table must yield identical TIMESTAMP instants for nanos, naive-µs,
     and tz-aware parquet encodings of the same wall times."""
