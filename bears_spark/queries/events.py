@@ -16,22 +16,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bears_spark.localframe import local_df
-from bears_spark.queries.tables import events_ts_encoding, load_table
+from bears_spark.queries.tables import load_table, pin_event_time_confs
+from bears_spark.streaming.jobs import run_to_memory
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet with ts normalized to TIMESTAMP.
 
-    Mirrors the batch ``load_table`` contract exactly — one ts-decoding path,
-    chosen by footer sniff, never two divergent ones. File streaming sources
-    take directories/globs, not bare files, hence the trailing wildcard.
+    Mirrors the batch ``load_table`` contract exactly — the same conf pin and
+    footer-sniffed ts decoding, never two divergent ones. File streaming
+    sources take directories/globs, not bare files, hence the trailing
+    wildcard.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    enc = events_ts_encoding(f"{sf_dir}/events.parquet")
+    enc = pin_event_time_confs(spark, f"{sf_dir}/events.parquet")
     glob = f"{sf_dir}/events.parque*"
     if enc == "ns":
         # TIMESTAMP(NANOS): surfaces as int64 under nanosAsLong; div to µs.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.readStream.schema(
             "event_id long, ts long, user_id long, event_type string, value double, props string"
         ).parquet(glob)
@@ -321,20 +321,11 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     sess = sessionize_stream(ev, gap="30 minutes")
-    sink = "streaming_sessionize_sink"
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")  # emit every session; append would hold back
-        # sessions newer than the watermark at end-of-input
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    # memory sink collects to the driver — gate/test scale only; production
-    # sinks are kafka/parquet/delta via the same writeStream plan.
-    return spark.table(sink).select(
+    # complete mode emits every session; append would hold back sessions
+    # newer than the watermark at end-of-input. The memory sink collects to
+    # the driver — gate/test scale only; production sinks are
+    # kafka/parquet/delta via the same writeStream plan.
+    return run_to_memory(sess, "streaming_sessionize_sink", "complete").select(
         "user_id",
         F.unix_micros(F.col("session_start")).alias("start_us"),
         F.unix_micros(F.col("session_end")).alias("end_us"),
@@ -376,17 +367,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     agg = hourly_counts_stream(ev, watermark="2 hours")
-    sink = "streaming_hourly_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select(
+    return run_to_memory(agg, "streaming_hourly_sink", "complete").select(
         F.unix_micros(F.col("hour")).alias("hour_us"),
         "event_type",
         "n",
@@ -415,17 +396,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     agg = sliding_counts_stream(ev, window="1 hour", slide="15 minutes", watermark="2 hours")
-    sink = "streaming_sliding_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select(
+    return run_to_memory(agg, "streaming_sliding_sink", "complete").select(
         F.unix_micros(F.col("win_start")).alias("win_start_us"),
         "event_type",
         "n",
@@ -464,17 +435,7 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = dim_enriched_counts_stream(
         ev, dim, "user_id", "c_custkey", ["c_mktsegment", "event_type"]
     )
-    sink = "streaming_segment_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select(
+    return run_to_memory(agg, "streaming_segment_sink", "complete").select(
         "c_mktsegment", "event_type", "n", F.round("total_value", 6).alias("total_value")
     )
 
@@ -502,11 +463,7 @@ def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     views = ev.filter(F.col("event_type") == "view")
     buys = ev.filter(F.col("event_type") == "purchase")
     out = purchase_attribution_stream(views, buys, max_delay="1 hour", watermark="2 hours")
-    sink = "streaming_attribution_sink"
-    q = out.writeStream.format("memory").queryName(sink).outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select(
+    return run_to_memory(out, "streaming_attribution_sink").select(
         "user_id",
         "purchase_id",
         F.unix_micros(F.col("purchase_ts")).alias("purchase_us"),
@@ -564,20 +521,11 @@ def streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_delay="1 hour",
             watermark="2 hours",
         )
-        sink = "streaming_attribution_outer_sink"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        res = run_to_memory(out, "streaming_attribution_outer_sink")
     finally:
         # memory sink rows live on the driver; the replay dir is disposable
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(sink).select(
+    return res.select(
         "user_id",
         "purchase_id",
         F.unix_micros(F.col("purchase_ts")).alias("purchase_us"),
@@ -617,12 +565,8 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     out = running_user_totals_stream(ev, timeout_minutes=None)  # availableNow: see jobs.py docstring
-    sink = "streaming_running_totals_sink"
-    q = out.writeStream.format("memory").queryName(sink).outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(sink)
+        run_to_memory(out, "streaming_running_totals_sink")
         .groupBy("user_id")
         .agg(
             F.sum("batch_events").alias("n_events"),
@@ -1128,11 +1072,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_stream(spark, sf_dir)
     out = dedup_stream(ev, watermark="1 hour")
-    sink = "streaming_dedup_sink"
-    q = out.writeStream.format("memory").queryName(sink).outputMode("append").trigger(availableNow=True).start()
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select("event_id", "user_id", "event_type")
+    return run_to_memory(out, "streaming_dedup_sink").select("event_id", "user_id", "event_type")
 
 
 STREAMING_DEDUP_SQL = """
@@ -1614,19 +1554,10 @@ def streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_delay="1 hour",
             watermark="2 hours",
         )
-        sink = "streaming_attribution_full_sink"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+        res = run_to_memory(out, "streaming_attribution_full_sink")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.table(sink).select(
+    return res.select(
         "user_id",
         "purchase_id",
         F.unix_micros(F.col("purchase_ts")).alias("purchase_us"),
@@ -1754,17 +1685,7 @@ def streaming_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(z, 6).alias("z"),
         )
     )
-    sink = "streaming_seasonal_anomaly_sink"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).orderBy("event_type", "hour_us")
+    return run_to_memory(scored, "streaming_seasonal_anomaly_sink", "complete").orderBy("event_type", "hour_us")
 
 
 STREAMING_SEASONAL_ANOMALY_SQL = """
@@ -2555,17 +2476,7 @@ def streaming_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(psi, 6).alias("psi"),
         (F.round(psi, 6) > 0.1).alias("drifted"),
     )
-    sink = "streaming_psi_drift_sink"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).orderBy("day_us")
+    return run_to_memory(scored, "streaming_psi_drift_sink", "complete").orderBy("day_us")
 
 
 STREAMING_PSI_SQL = f"""
@@ -3153,17 +3064,7 @@ def streaming_rolling_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev_s = _events_stream(spark, sf_dir)
     regs_s = hll_registers(ev_s.withColumn("d", F.to_date("ts")), "user_id", _HLL_P, by=("d",))
-    sink = "streaming_rolling_dau_hll_sink"
-    q = (
-        regs_s.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    regs = spark.table(sink)
+    regs = run_to_memory(regs_s, "streaming_rolling_dau_hll_sink", "complete")
     days = regs.select("d").distinct()
     cov = regs.select(F.explode(F.expr("sequence(d, date_add(d, 6))")).alias("wd"), "bucket", "rho")
     merged = (
@@ -3409,18 +3310,8 @@ def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("value", "ord").alias("close"),
         F.count("*").alias("n_events"),
     )
-    sink = "streaming_ohlc_sink"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(sink)
+        run_to_memory(bars, "streaming_ohlc_sink", "complete")
         .select(
             F.date_format("h", "yyyy-MM-dd HH").alias("hour"),
             "open", "high", "low", "close", "n_events",
@@ -3572,17 +3463,7 @@ def streaming_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev_s = _events_stream(spark, sf_dir)
     hourly_s = ev_s.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(F.count("*").alias("n"))
-    sink = "streaming_burst_sink"
-    q = (
-        hourly_s.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    hourly = spark.table(sink)
+    hourly = run_to_memory(hourly_s, "streaming_burst_sink", "complete")
     w = Window.orderBy("h").rowsBetween(-24, -1)
     scored = (
         hourly.withColumn("baseline", F.avg("n").over(w))
@@ -3719,17 +3600,7 @@ def streaming_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("xi").cast("decimal(38,0)").alias("s1"),
         F.sum((F.col("xi") * F.col("xi")).cast("decimal(38,0)")).cast("decimal(38,0)").alias("s2"),
     )
-    sink = "streaming_moments_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    out = spark.table(sink)
+    out = run_to_memory(agg, "streaming_moments_sink", "complete")
     mean = F.col("s1").cast("double") / F.col("n")
     m2 = F.col("s2").cast("double") / F.col("n") - mean * mean
     return out.select(

@@ -28,6 +28,7 @@ from bears_spark.functions.quality import (
 from bears_spark.functions.text import EN_STOPWORDS
 from bears_spark.queries.sketchops import _duck_h64
 from bears_spark.queries.tables import load_table
+from bears_spark.streaming.jobs import run_to_memory
 
 # DuckDB tokenization mirroring functions/text.py tokenize(lower(text)).
 _DUCK_TOKS = r"list_filter(regexp_split_to_array(trim(lower(text)), '\s+'), x -> x <> '')"
@@ -1472,17 +1473,7 @@ def streaming_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/documents.parque*")
     )
     out = gopher_quality(stream, "text", "doc_id").select("doc_id", "keep")
-    sink = "streaming_doc_quality_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).orderBy("doc_id")
+    return run_to_memory(out, "streaming_doc_quality_sink").orderBy("doc_id")
 
 
 STREAMING_DOC_QUALITY_SQL = f"""

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from bears_spark.localframe import local_df
 from bears_spark.queries.tables import load_table
+from bears_spark.streaming.jobs import finish
 
 
 # --------------------------------------------------------------------------
@@ -4447,11 +4448,11 @@ def streaming_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(flat + "/")
         )
         ckpt = _os.path.join(root, "ckpt")
-        t.streaming_delete_keys(stream, ckpt, col="o_custkey").awaitTermination(300)
+        finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
         assert any(e.dv for e in t.files()), "forget-lists must tombstone, not rewrite"
         v = t.current_version()
         # checkpoint-recovery replay: the same stream commits NOTHING
-        t.streaming_delete_keys(stream, ckpt, col="o_custkey").awaitTermination(300)
+        finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
         assert t.current_version() == v, "replayed epochs must be skipped"
         rows = (
             t.read()
@@ -4959,13 +4960,13 @@ def orders_streaming_replicated(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(flat + "/")
         )
         ckpt = _os.path.join(root, "ckpt")
-        t.streaming_append(stream, ckpt, export_delta_to=out).awaitTermination(300)
+        finish(t.streaming_append(stream, ckpt, export_delta_to=out))
         v = t.current_version()
         log = _os.path.join(out, "_delta_log")
         before = sorted(_os.listdir(log))
         # full checkpoint replay: ingest skipped by txn stamps, export
         # skipped by zero churn — nothing moves
-        t.streaming_append(stream, ckpt, export_delta_to=out).awaitTermination(300)
+        finish(t.streaming_append(stream, ckpt, export_delta_to=out))
         assert t.current_version() == v, "replayed epochs must commit nothing"
         assert sorted(_os.listdir(log)) == before, "replayed exports must write nothing"
         rows = (
@@ -5240,7 +5241,7 @@ def orders_streaming_replicated_iceberg(spark: SparkSession, sf_dir: str) -> Dat
             .parquet(flat + "/")
         )
         ckpt = _os.path.join(root, "ckpt")
-        t.streaming_append(stream, ckpt, export_iceberg_to=out).awaitTermination(300)
+        finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
         # GDPR forget-list stream: MoR-tombstone the urgent orders, so the
         # replica carries live positional deletes from here on
         keys_dir = _os.path.join(root, "keys")
@@ -5251,17 +5252,15 @@ def orders_streaming_replicated_iceberg(spark: SparkSession, sf_dir: str) -> Dat
             T.StructType([T.StructField("o_orderkey", T.LongType())])
         ).parquet(keys_dir + "/")
         dckpt = _os.path.join(root, "dckpt")
-        t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out
-                                ).awaitTermination(300)
+        finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
         assert any(e.dv for e in t.files()), "forget-list must leave live DVs"
         v = t.current_version()
         meta_dir = _os.path.join(out, "metadata")
         before = sorted(_os.listdir(meta_dir))
         # full checkpoint replay of BOTH streams: ingest skipped by txn
         # stamps; export skipped by zero churn + unchanged DV fingerprint
-        t.streaming_append(stream, ckpt, export_iceberg_to=out).awaitTermination(300)
-        t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out
-                                ).awaitTermination(300)
+        finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
+        finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
         assert t.current_version() == v, "replayed epochs must commit nothing"
         assert sorted(_os.listdir(meta_dir)) == before, (
             "replayed exports must write nothing, even with live DVs"

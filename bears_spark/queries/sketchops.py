@@ -26,6 +26,7 @@ from bears_spark.functions.sketch import (
 )
 from bears_spark.localframe import local_df
 from bears_spark.queries.tables import load_table
+from bears_spark.streaming.jobs import run_to_memory
 
 # DuckDB text of md5_hash64(x, salt) — keep in lockstep with hashing.py.
 def _duck_h64(expr: str, salt: str) -> str:
@@ -875,17 +876,7 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = ri if rows is None else rows.unionByName(ri)
     cells = rows.groupBy("row", "bucket").agg(F.count("*").alias("cnt"))
-    sink = "streaming_cms_sink"
-    q = (
-        cells.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    sketch = spark.table(sink)
+    sketch = run_to_memory(cells, "streaming_cms_sink", "complete")
 
     ev = load_table(spark, sf_dir, "events")
     exact = ev.groupBy("user_id").agg(F.count("*").alias("exact_cnt"))

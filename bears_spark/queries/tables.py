@@ -76,70 +76,75 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def pin_event_time_confs(spark: SparkSession, path: str, enc: str | None = None) -> str:
+    """Set the session confs every event-time read of ``path`` depends on and
+    return its ``ts`` encoding (``events_ts_encoding``; pass ``enc`` when it
+    is already known, to skip the footer sniff).
+
+    Event-time semantics are wall-clock-naive: the DuckDB oracle reads the
+    same parquet as naive TIMESTAMP and does naive arithmetic. The session tz
+    is pinned to UTC so every instant-based function downstream (unix_micros,
+    date_trunc, window()) agrees with the oracle — a vanilla caller session
+    uses the JVM-local tz, which would shift instants (and non-constantly,
+    under DST). Only TIMESTAMP(NANOS) files need the legacy nanosAsLong conf
+    (vanilla Spark 4 rejects them with PARQUET_TYPE_ILLEGAL); it is a no-op
+    for µs files, so ``"unknown"`` (unreadable footer) errs on the side of
+    set. Both confs must hold when a plan EXECUTES, so batch and stream
+    readers call this on every load. Deliberate, documented session mutation.
+    """
+    if enc is None:
+        enc = events_ts_encoding(path)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if enc in ("ns", "unknown"):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return enc
+
+
 # Analyzed-plan memo: `spark.read.parquet(path)` costs ~0.13 s of DRIVER
 # time per call (file listing + footer schema inference, single-threaded —
 # guide §6/§7.3), and every query re-pays it for every table on every run.
 # A catalog engine resolves a table's schema once; this memo is that
 # catalog. Key includes the file's (mtime_ns, size) so a rewritten path is
 # re-inferred, and the session's applicationId so a new session never sees
-# plans from a stopped one. ONLY metadata is reused — the returned
-# DataFrame is a lazy plan; every action still scans the parquet bytes.
-# Each entry stores (df, needs_nanos_conf) so the session confs an events
-# plan depends on are re-asserted on EVERY call, memo hit or miss — if
-# anything in-session resets nanosAsLong, executing a memoized ns-encoded
-# plan would otherwise fail (VERDICT r11 "What's wrong" #5).
-_PLAN_MEMO: dict[tuple, tuple[DataFrame, bool]] = {}
+# plans from a stopped one. ONLY metadata is reused — a memoized DataFrame
+# is a lazy plan; every action still scans the parquet bytes.
+_PLAN_MEMO: dict[tuple, object] = {}
+_PLAN_MEMO_MAX = 256  # entries; the memo is cleared past it (bounds driver memory)
 
 
-def _memo_key(spark: SparkSession, path: str) -> tuple | None:
+def memo_plan(spark: SparkSession, path: str, tag: str, build):
+    """Return ``build()`` memoized per (session, file identity of ``path``,
+    ``tag``); ``tag`` tells apart the plans built over the same file. A path
+    that cannot be stat'ed is never memoized."""
     import os
 
     try:
         st = os.stat(path)
     except OSError:
-        return None
-    return (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+        return build()
+    key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size, tag)
+    hit = _PLAN_MEMO.get(key)
+    if hit is None:
+        if len(_PLAN_MEMO) > _PLAN_MEMO_MAX:
+            _PLAN_MEMO.clear()
+        hit = _PLAN_MEMO[key] = build()
+    return hit
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # session-conf side effects must apply on every call, memoized or not
-        # (a caller may have flipped the tz since the plan was first built)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = _memo_key(spark, path)
-    if key is not None and key in _PLAN_MEMO:
-        df, needs_nanos = _PLAN_MEMO[key]
-        if needs_nanos:
-            # the memoized plan decodes TIMESTAMP(NANOS) as int64; the conf
-            # must hold at EXECUTION time, so re-assert it on every hit
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return df
-    df, needs_nanos = _load_table_uncached(spark, path, name)
-    if key is not None:
-        if len(_PLAN_MEMO) > 256:  # bound driver memory across long sessions
-            _PLAN_MEMO.clear()
-        _PLAN_MEMO[key] = (df, needs_nanos)
-    return df
-
-
-def _load_table_uncached(spark: SparkSession, path: str, name: str) -> tuple[DataFrame, bool]:
     if name != "events":
-        return spark.read.parquet(path), False
-    # Event-time semantics are wall-clock-naive: the DuckDB oracle reads the
-    # same parquet as naive TIMESTAMP and does naive arithmetic. Pin the
-    # session tz to UTC so every instant-based function downstream
-    # (unix_micros, date_trunc, window()) agrees with the oracle — a vanilla
-    # caller session uses the JVM-local tz, which would shift instants (and
-    # non-constantly, under DST). Deliberate, documented session mutation.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    needs_nanos = events_ts_encoding(path) in ("ns", "unknown")
-    if needs_nanos:
-        # Only TIMESTAMP(NANOS) files need the legacy conf (vanilla Spark 4
-        # rejects them with PARQUET_TYPE_ILLEGAL); it is a no-op for µs
-        # files, so "unknown" (unreadable footer) errs on the side of set.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _normalize_event_ts(spark.read.parquet(path)), needs_nanos
+        return memo_plan(spark, path, "table", lambda: spark.read.parquet(path))
+
+    def build() -> tuple[DataFrame, str]:
+        enc = pin_event_time_confs(spark, path)
+        return _normalize_event_ts(spark.read.parquet(path)), enc
+
+    df, enc = memo_plan(spark, path, "table", build)
+    # re-assert the confs on every call, memo hit or miss: a caller may have
+    # flipped the tz or reset nanosAsLong since the plan was first built
+    pin_event_time_confs(spark, path, enc)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

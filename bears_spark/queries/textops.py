@@ -23,7 +23,8 @@ from bears_spark.functions.text import (
 )
 from bears_spark.localframe import local_df
 from bears_spark.functions.litutil import double_lit
-from bears_spark.queries.tables import load_table
+from bears_spark.queries.tables import load_table, memo_plan
+from bears_spark.streaming.jobs import run_to_memory
 
 # shared SQL fragments for the oracles
 _TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')"
@@ -1223,17 +1224,9 @@ def streaming_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/documents.parque*")
     )
     out = chunk_documents(stream, "doc_id", "text", chunk_tokens=32, overlap=8)
-    sink = "streaming_doc_chunks_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(out, "streaming_doc_chunks_sink").select(
+        "doc_id", "chunk_id", "chunk_start", "n_tokens", "chunk_text"
     )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).select("doc_id", "chunk_id", "chunk_start", "n_tokens", "chunk_text")
 
 
 # --------------------------------------------------------------------------
@@ -1255,17 +1248,7 @@ def streaming_semantic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/embeddings.parque*")
     )
     out = stream.select("vec_id", cid_col.alias("cid"))
-    sink = "streaming_semantic_assign_sink"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(sink).orderBy("vec_id")
+    return run_to_memory(out, "streaming_semantic_assign_sink").orderBy("vec_id")
 
 
 STREAMING_SEM_ASSIGN_SQL = f"""
@@ -2197,21 +2180,19 @@ _IVFPQ_CSALT = "ivfseed"
 _IVFPQ_PSALT = "pqseed"
 
 
-# Plan memo for the ivfpq fit frame — METADATA only, same class as the
-# load_table analyzed-plan memo (queries/tables.py): the union-of-branches
-# PLAN is static per (applicationId, embeddings file identity), while the
-# collect() that EXECUTES it still runs on every invocation, reading the
-# parquet bytes. Rebuilding the plan cost ~0.1 s of py4j chatter per run.
-_IVFPQ_FIT_PLAN: dict[tuple, DataFrame] = {}
-
-
+# The ivfpq fit frame is memoized as a PLAN only, through the load_table
+# analyzed-plan memo (queries/tables.memo_plan): the union-of-branches plan is
+# static per (applicationId, embeddings file identity), while the collect()
+# that EXECUTES it still runs on every invocation, reading the parquet bytes.
+# Rebuilding the plan cost ~0.1 s of py4j chatter per run.
 def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bears_spark.functions.hashing import md5_hash64
-    from bears_spark.queries.tables import _memo_key
+    path = f"{sf_dir}/embeddings.parquet"
+    return memo_plan(spark, path, "ivfpq_fit", lambda: _build_ivfpq_fit(spark, sf_dir))
 
-    key = _memo_key(spark, f"{sf_dir}/embeddings.parquet")
-    if key is not None and key in _IVFPQ_FIT_PLAN:
-        return _IVFPQ_FIT_PLAN[key]
+
+def _build_ivfpq_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from bears_spark.functions.hashing import md5_hash64
+
     emb = load_table(spark, sf_dir, "embeddings")
 
     # ONE fit-collect job for all three tiny states (coarse seeds, PQ seeds,
@@ -2230,7 +2211,7 @@ def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(n)
         )
 
-    fit = (
+    return (
         branch("c", _IVFPQ_CSALT, _IVFPQ_KC)
         .unionByName(branch("p", _IVFPQ_PSALT, _IVFPQ_KPQ))
         .unionByName(
@@ -2239,11 +2220,6 @@ def _ivfpq_fit_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    if key is not None:
-        if len(_IVFPQ_FIT_PLAN) > 64:
-            _IVFPQ_FIT_PLAN.clear()
-        _IVFPQ_FIT_PLAN[key] = fit
-    return fit
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,7 @@ from bears_spark.io.snapshot_table import (
     ConstraintViolationError,
     SnapshotTable,
 )
+from bears_spark.streaming.jobs import finish
 
 
 def _mk(spark, tmp_path, name="t"):
@@ -240,8 +241,7 @@ def test_streaming_wap_ingest_to_branch_then_publish(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "ckpt")
-    q = b.streaming_append(stream, ckpt)
-    q.awaitTermination(120)
+    finish(b.streaming_append(stream, ckpt))
     assert b.read().count() == 5
     assert t.read().count() == 2  # main never saw the stream
 
@@ -254,8 +254,7 @@ def test_streaming_wap_ingest_to_branch_then_publish(spark, tmp_path):
     # replaying the stream's checkpoint AGAINST MAIN is a no-op: the txn
     # stamps published with the branch state make the epoch a known batch
     before = t.current_version()
-    q2 = t.streaming_append(stream, ckpt)
-    q2.awaitTermination(120)
+    finish(t.streaming_append(stream, ckpt))
     assert t.current_version() == before
     assert t.read().count() == 4
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bears_spark.io.delta_log import DeltaLogError, DeltaTableReader, export_delta_log
+from bears_spark.streaming.jobs import finish
 
 
 def _write_commit(log_dir, version, actions):
@@ -1212,7 +1213,7 @@ def test_streaming_append_with_delta_replication(spark, tmp_path):
         spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "ck")
-    t.streaming_append(stream, ckpt, export_delta_to=out).awaitTermination(300)
+    finish(t.streaming_append(stream, ckpt, export_delta_to=out))
     r = DeltaTableReader(spark, out)
     assert sorted(x["id"] for x in r.read().collect()) == sorted(
         list(range(0, 5)) + list(range(10, 15))
@@ -1220,7 +1221,7 @@ def test_streaming_append_with_delta_replication(spark, tmp_path):
     log = os.path.join(out, "_delta_log")
     before = sorted(os.listdir(log))
     # replay: ingest skipped by txn stamps, export skipped by zero churn
-    t.streaming_append(stream, ckpt, export_delta_to=out).awaitTermination(300)
+    finish(t.streaming_append(stream, ckpt, export_delta_to=out))
     assert sorted(os.listdir(log)) == before
 
 
@@ -1245,7 +1246,7 @@ def test_streaming_gdpr_delete_with_delta_replication(spark, tmp_path):
         spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "ck")
-    t.streaming_delete_keys(stream, ckpt, col="id", export_delta_to=out).awaitTermination(300)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id", export_delta_to=out))
     r = DeltaTableReader(spark, out)
     assert sorted(x["id"] for x in r.read().collect()) == [
         i for i in range(40) if i not in {3, 7, 11}
@@ -1253,5 +1254,5 @@ def test_streaming_gdpr_delete_with_delta_replication(spark, tmp_path):
     log = os.path.join(out, "_delta_log")
     before = sorted(os.listdir(log))
     # replay: delete skipped by txn stamps, export skipped by zero churn
-    t.streaming_delete_keys(stream, ckpt, col="id", export_delta_to=out).awaitTermination(300)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id", export_delta_to=out))
     assert sorted(os.listdir(log)) == before

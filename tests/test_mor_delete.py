@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bears_spark.io.snapshot_table import FileEntry, SnapshotTable
+from bears_spark.streaming.jobs import finish
 
 
 def _mk(spark, tmp_path, name="t", n=100, files=2):
@@ -340,26 +341,26 @@ def test_streaming_delete_keys_exactly_once(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "sdckpt")
-    t.streaming_delete_keys(stream, ckpt, col="id").awaitTermination(120)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id"))
     assert sorted(x["id"] for x in t.read().collect()) == [
         i for i in range(50) if i not in {3, 7, 11}
     ]
     assert any(e.dv for e in t.files())  # mor default
     # replay: same checkpoint, no new files -> no commits
     before = t.current_version()
-    t.streaming_delete_keys(stream, ckpt, col="id").awaitTermination(120)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id"))
     assert t.current_version() == before
     # epoch 1: keys that match nothing — still commits exactly one stamped
     # no-op version, and replaying it commits nothing further
     pq.write_table(pa.table({"id": pa.array([900, 901], pa.int64())}), str(src / "b1.parquet"))
-    t.streaming_delete_keys(stream, ckpt, col="id").awaitTermination(120)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id"))
     after_noop = t.current_version()
     assert after_noop == before + 1
-    t.streaming_delete_keys(stream, ckpt, col="id").awaitTermination(120)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id"))
     assert t.current_version() == after_noop
     # epoch 2: a second real forget-list merges into the existing DVs
     pq.write_table(pa.table({"id": pa.array([0, 49], pa.int64())}), str(src / "b2.parquet"))
-    t.streaming_delete_keys(stream, ckpt, col="id").awaitTermination(120)
+    finish(t.streaming_delete_keys(stream, ckpt, col="id"))
     assert sorted(x["id"] for x in t.read().collect()) == [
         i for i in range(1, 49) if i not in {3, 7, 11}
     ]

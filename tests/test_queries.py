@@ -67,11 +67,18 @@ def test_readme_query_count_matches_declared():
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_runs(spark, sf_dir, name):
-    df = entrymod.queries()[name](spark, sf_dir)
-    n = df.count()
-    assert n >= 0
-    # schema must be stable (no unresolved columns)
-    assert df.columns
+    from bears_spark.caching import release_scoped_caches
+
+    try:
+        df = entrymod.queries()[name](spark, sf_dir)
+        n = df.count()
+        assert n >= 0
+        # schema must be stable (no unresolved columns)
+        assert df.columns
+        # a query that runs a stream runs it to completion and stops it
+        assert not spark.streams.active, [q.name for q in spark.streams.active]
+    finally:
+        release_scoped_caches()
 
 
 def test_hive_partition_pruning_stays_on_arrow_and_prunes(spark, sf_dir):

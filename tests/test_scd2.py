@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from bears_spark.functions.cdc import scd2_history
 from bears_spark.io.scd2 import Scd2Dimension
+from bears_spark.streaming.jobs import finish
 
 
 def _events(spark, rows):
@@ -129,11 +130,11 @@ def test_scd2_streaming_apply_exactly_once(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "sckpt")
-    dim.streaming_apply(stream, ckpt).awaitTermination(120)
+    finish(dim.streaming_apply(stream, ckpt))
     assert {r["k"]: r["attr"] for r in dim.current().collect()} == {1: "a", 2: "x"}
     # replay: no new commits
     before = dim.table.current_version()
-    dim.streaming_apply(stream, ckpt).awaitTermination(120)
+    finish(dim.streaming_apply(stream, ckpt))
     assert dim.table.current_version() == before
     # epoch 1: change k=1, restate k=2 (no new version)
     pq.write_table(
@@ -142,7 +143,7 @@ def test_scd2_streaming_apply_exactly_once(spark, tmp_path):
                   "seq": [3, 4]}),
         str(src / "b1.parquet"),
     )
-    dim.streaming_apply(stream, ckpt).awaitTermination(120)
+    finish(dim.streaming_apply(stream, ckpt))
     assert {r["k"]: r["attr"] for r in dim.current().collect()} == {1: "b", 2: "x"}
     assert dim.read().filter("k = 1").count() == 2  # two versions
     assert dim.read().filter("k = 2").count() == 1  # restatement opened none

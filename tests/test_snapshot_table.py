@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bears_spark.io.snapshot_table import SnapshotTable
+from bears_spark.streaming.jobs import finish
 
 
 @pytest.fixture()
@@ -110,22 +111,19 @@ def test_streaming_append_exactly_once(spark, table, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "ckpt")
-    q = table.streaming_append(stream, ckpt)
-    q.awaitTermination(120)
+    finish(table.streaming_append(stream, ckpt))
     assert table.read().count() == 50
     assert table.committed_batch_ids() == {0}
     # a second availableNow run on the SAME checkpoint sees no new source
     # files -> no new batches -> no commits (and any replayed epoch would be
     # skipped by the batch-id stamp: the commit is the idempotency point)
     before = table.current_version()
-    q2 = table.streaming_append(stream, ckpt)
-    q2.awaitTermination(120)
+    finish(table.streaming_append(stream, ckpt))
     assert table.current_version() == before
     assert table.read().count() == 50
     # new source file -> exactly one more committed batch
     pq.write_table(pa.table({"id": [100, 101], "v": [1, 2]}), str(src / "b.parquet"))
-    q3 = table.streaming_append(stream, ckpt)
-    q3.awaitTermination(120)
+    finish(table.streaming_append(stream, ckpt))
     assert table.read().count() == 52
 
 
@@ -403,12 +401,10 @@ def test_streaming_new_checkpoint_not_mistaken_for_replay(spark, table, tmp_path
         pq.write_table(pa.table({"id": list(ids), "v": [0] * len(list(ids))}), str(src / "a.parquet"))
         return spark.readStream.schema("id long, v long").parquet(str(src) + "/")
 
-    q1 = table.streaming_append(mkstream("src1", range(10)), str(tmp_path / "ck1"))
-    q1.awaitTermination(120)
+    finish(table.streaming_append(mkstream("src1", range(10)), str(tmp_path / "ck1")))
     assert table.read().count() == 10
     # a brand-new checkpoint delivers ITS batch 0 — must append, not skip
-    q2 = table.streaming_append(mkstream("src2", range(100, 105)), str(tmp_path / "ck2"))
-    q2.awaitTermination(120)
+    finish(table.streaming_append(mkstream("src2", range(100, 105)), str(tmp_path / "ck2")))
     assert table.read().count() == 15
     assert len(table.committed_txns()) == 2  # one stamp per ingest app
 
@@ -423,8 +419,7 @@ def test_expire_preserves_txn_stamps(spark, table, tmp_path):
     src.mkdir()
     pq.write_table(pa.table({"id": [1, 2], "v": [0, 0]}), str(src / "a.parquet"))
     stream = spark.readStream.schema("id long, v long").parquet(str(src) + "/")
-    q = table.streaming_append(stream, str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    finish(table.streaming_append(stream, str(tmp_path / "ck")))
     stamps = table.committed_txns()
     assert stamps
     table.append(_df(spark, 0, 5).coalesce(1))
@@ -503,12 +498,10 @@ def test_pq_index_streaming_ingest_exactly_once(spark, tmp_path):
         str(src / "a.parquet"),
     )
     stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(str(src) + "/")
-    qh = idx.streaming_append(stream, "vec_id", "embedding", str(tmp_path / "ck"))
-    qh.awaitTermination(120)
+    finish(idx.streaming_append(stream, "vec_id", "embedding", str(tmp_path / "ck")))
     assert idx.table.read().count() == 70
     # replay on the same checkpoint: no double-append
-    qh2 = idx.streaming_append(stream, "vec_id", "embedding", str(tmp_path / "ck"))
-    qh2.awaitTermination(120)
+    finish(idx.streaming_append(stream, "vec_id", "embedding", str(tmp_path / "ck")))
     assert idx.table.read().count() == 70
 
 
@@ -851,8 +844,7 @@ def test_bloom_rejects_unsupported_types_and_survives_streaming(spark, tmp_path)
     stream = (
         spark.readStream.schema("k long, v long").option("maxFilesPerTrigger", 1).parquet(str(src) + "/")
     )
-    q = t2.streaming_append(stream, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    finish(t2.streaming_append(stream, str(tmp_path / "ckpt")))
     assert all("k" in e.blooms for e in t2.files())
     assert len(t2.files(where=("k", "=", 999))) == 0  # bloom-pruned everything
 
@@ -1550,14 +1542,14 @@ def test_incremental_view_over_streaming_ingest(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "sckpt")
-    base.streaming_append(stream, ckpt).awaitTermination(120)
+    finish(base.streaming_append(stream, ckpt))
     view.refresh()
     assert _view_state(view) == _rollup(base.read())
     # second epoch: new file arrives, ingest + refresh stay O(delta) and exact
     pq.write_table(
         pa.table({"id": [100, 101], "bucket": [3, 3], "v": [7, 9]}), str(src / "b.parquet")
     )
-    base.streaming_append(stream, ckpt).awaitTermination(120)
+    finish(base.streaming_append(stream, ckpt))
     view.refresh()
     assert _view_state(view) == _rollup(base.read())
 
@@ -1584,19 +1576,19 @@ def test_streaming_merge_exactly_once_upserts(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "mckpt")
-    t.streaming_merge(stream, ckpt, key="id").awaitTermination(120)
+    finish(t.streaming_merge(stream, ckpt, key="id"))
     got = {r["id"]: r["v"] for r in t.read().collect()}
     assert len(got) == 51 and got[1] == -1 and got[2] == -2 and got[100] == -100
     assert got[3] == 6  # untouched neighbor
     # replay: same checkpoint, no new files -> no commits
     before = t.current_version()
-    t.streaming_merge(stream, ckpt, key="id").awaitTermination(120)
+    finish(t.streaming_merge(stream, ckpt, key="id"))
     assert t.current_version() == before
     # epoch 1: a later update to id 1 wins
     pq.write_table(
         pa.table({"id": [1], "bucket": [1 % 7], "v": [-11]}), str(src / "b1.parquet")
     )
-    t.streaming_merge(stream, ckpt, key="id").awaitTermination(120)
+    finish(t.streaming_merge(stream, ckpt, key="id"))
     got2 = {r["id"]: r["v"] for r in t.read().collect()}
     assert got2[1] == -11 and len(got2) == 51
     # append and merge streams on the same checkpoint namespace never collide
@@ -1634,7 +1626,7 @@ def test_streaming_merge_replicates_to_iceberg(spark, tmp_path):
         .parquet(str(src) + "/")
     )
     ckpt = str(tmp_path / "mckpti")
-    t.streaming_merge(stream, ckpt, key="id", export_iceberg_to=out).awaitTermination(180)
+    finish(t.streaming_merge(stream, ckpt, key="id", export_iceberg_to=out))
     want = {r["id"]: r["v"] for r in t.read().collect()}
     assert want[1] == -11 and want[2] == -2 and want[5] == -5 and want[200] == -200
     got = {r["id"]: r["v"] for r in IcebergTableReader(spark, out).read().collect()}
@@ -1642,7 +1634,7 @@ def test_streaming_merge_replicates_to_iceberg(spark, tmp_path):
     meta_dir = _os.path.join(out, "metadata")
     before = sorted(_os.listdir(meta_dir))
     v = t.current_version()
-    t.streaming_merge(stream, ckpt, key="id", export_iceberg_to=out).awaitTermination(180)
+    finish(t.streaming_merge(stream, ckpt, key="id", export_iceberg_to=out))
     assert t.current_version() == v, "replayed epochs must commit nothing"
     assert sorted(_os.listdir(meta_dir)) == before, "replayed exports must write nothing"
 
