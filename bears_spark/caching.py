@@ -1,23 +1,39 @@
-"""Session-scoped cache registry: persist() sites inside query functions
-register here so harnesses can drain them between queries.
+"""Query-scoped resources: one list of release actions, one drain.
 
-A query function that persists an intermediate (all-pairs similarity weights,
-fingerprint lists, LM scores) cannot unpersist it before returning — the
-returned DataFrame still depends on it lazily. Left alone, those cached
-partitions accumulate across a session running many graded queries (r4
-ADVICE #5). The registry makes the persist scope explicit: the function
-calls :func:`scoped_persist`, and the runner (bench.py,
-tools/check_correctness.py, or any user loop) calls
-:func:`release_scoped_caches` once it has collected the query's result.
+A query function cannot release what its result still reads. The returned
+DataFrame is lazy, so a cache it persisted (all-pairs similarity weights,
+fingerprint lists, LM scores), the scratch directory it built a fixture
+table in, or the memory-sink view a stream wrote to must outlive the
+function. Each of them registers one release action here instead:
 
-Unreleased entries are still bounded by the session lifetime — this is a
-cooperative drain, not a leak detector."""
+- :func:`scoped_persist` registers the unpersist of its cache;
+- :func:`scoped_dir` makes a scratch directory and registers its removal;
+- ``streaming.jobs.run_to_memory`` registers the drop of its sink view.
+
+Any other query-lifetime resource registers its release with :func:`on_release`.
+
+The runner (perfbench, tools/check_correctness.py, ``tools/measure.py``'s
+``block``, the test suite, or any user loop) calls
+:func:`release_scoped_caches` once it has consumed the query's result
+(``toArrow``, ``toPandas``, ``collect``, a write). Drain only then: a lazy
+frame held past the drain reads a directory or view that is gone and fails.
+A caller that never drains still gets correct results; what it leaves
+lives until the process exits, when the drain runs one last time.
+
+The owner is module-level on purpose: PySpark runs one SparkContext per
+process, and no caller runs two queries at once on one session.
+"""
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
-_SCOPED: list[DataFrame] = []
+_SCOPED: list[Callable[[], object]] = []
 
 # Semantic hashes of plans an eager scoped_persist has already materialized
 # since the last drain. Within one bench block (3 runs of the same query,
@@ -47,7 +63,7 @@ def scoped_persist(df: DataFrame, storage_level=None, eager: bool = False) -> Da
     so the eager count is skipped and the warm minimum measures exactly the
     lazy path. Cold run 1 pays one build job instead of N racing rebuilds."""
     df = df.persist(storage_level) if storage_level is not None else df.persist()
-    _SCOPED.append(df)
+    on_release(lambda: df.unpersist(False))
     if eager:
         key = df.semanticHash()
         if key not in _MATERIALIZED:
@@ -56,15 +72,34 @@ def scoped_persist(df: DataFrame, storage_level=None, eager: bool = False) -> Da
     return df
 
 
+def scoped_dir(prefix: str) -> str:
+    """A fresh scratch directory (``tempfile.mkdtemp``) that the next drain removes."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    on_release(lambda: shutil.rmtree(path))
+    return path
+
+
+def on_release(action: Callable[[], object]) -> None:
+    """Run ``action`` at the next drain."""
+    _SCOPED.append(action)
+
+
 def release_scoped_caches() -> int:
-    """Unpersist every registered cache (non-blocking); returns the count.
-    Call after the dependent actions (collect/write) have completed."""
+    """Run every registered release action, clear the list, and return how many there were.
+
+    Call after the query's result has been consumed: a frame still held
+    afterwards may read a cache, directory or sink view that is gone. An
+    action that fails (session already stopped, directory already removed)
+    does not stop the rest."""
     n = len(_SCOPED)
-    for df in _SCOPED:
+    for release in _SCOPED:
         try:
-            df.unpersist(False)
+            release()
         except Exception:
-            pass  # session already stopped: nothing to release
+            pass  # already released, or its session is gone: nothing left to free
     _SCOPED.clear()
     _MATERIALIZED.clear()
     return n
+
+
+atexit.register(release_scoped_caches)

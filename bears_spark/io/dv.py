@@ -168,13 +168,13 @@ def positions_df(spark: SparkSession, blobs: list[tuple[str, bytes]]) -> DataFra
 
 
 # Broadcast the exploded position set when the TOTAL deleted-row count is
-# at or below this (env-overridable). The planner cannot size a MapInPandas
+# at or below this. The planner cannot size a MapInPandas
 # output, so without the hint every MoR read shuffle-sorts the ENTIRE data
 # scan against a usually-tiny delete set (plan: 2 Exchanges + 2 Sorts +
 # SortMergeJoin). Sparse deletes — the case DVs exist for — stay far below
 # the cap even on 100-TB tables; a mass-delete beyond it falls back to the
-# shuffled anti-join, so the knob is scale-adaptive, not local-tuned.
-_DV_BROADCAST_MAX_POS = int(os.environ.get("BEARS_DV_BROADCAST_MAX_POS", 1_000_000))
+# shuffled anti-join, so the cap is scale-adaptive, not local-tuned.
+_DV_BROADCAST_MAX_POS = 1_000_000
 
 
 def dv_anti_join(

@@ -192,13 +192,10 @@ class CommitStoreMetaFS(MetaFS):
         key_of = getattr(self.store, "_key", None)
         if callable(key_of):
             prefixes.append(key_of(dirpath).rstrip("/") + "/")
-        try:
-            # push the suffix bound to the store's own listing API (S3
-            # StartAfter / GCS start_offset) — the client-side tail filter
-            # below stays as the contract's safety net
-            keys = self.store.list_prefix(dirpath, start_after=start_after)
-        except TypeError:  # store predates the start_after parameter
-            keys = self.store.list_prefix(dirpath)
+        # push the suffix bound to the store's own listing API (S3
+        # StartAfter / GCS start_offset) — the client-side tail filter
+        # below stays as the contract's safety net
+        keys = self.store.list_prefix(dirpath, start_after=start_after)
         names: set[str] = set()
         for key in keys:
             tail = next((key[len(p):] for p in prefixes if key.startswith(p)), None)

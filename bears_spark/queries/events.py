@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bears_spark.caching import scoped_dir
 from bears_spark.localframe import local_df
 from bears_spark.queries.tables import load_table, pin_event_time_confs
 from bears_spark.streaming.jobs import run_to_memory
@@ -499,32 +500,26 @@ ORACLES["streaming_purchase_attribution"] = STREAMING_ATTRIBUTION_SQL
 # left-outer join — no watermark-cutoff clause needed.
 def streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import shutil
-    import tempfile
 
     from bears_spark.queries.tables import load_table
     from bears_spark.streaming.jobs import bounded_replay_source, purchase_attribution_outer_stream
 
     events = load_table(spark, sf_dir, "events")
     flush_ts = events.agg(F.max("ts")).first()[0] + datetime.timedelta(hours=4)
-    tmp = tempfile.mkdtemp(prefix="attr_outer_")
-    try:
-        ev = bounded_replay_source(
-            spark,
-            events,
-            [(-1, flush_ts, -1, "view", 0.0, "{}"), (-2, flush_ts, -2, "purchase", 0.0, "{}")],
-            tmp,
-        )
-        out = purchase_attribution_outer_stream(
-            ev.filter(F.col("event_type") == "view"),
-            ev.filter(F.col("event_type") == "purchase"),
-            max_delay="1 hour",
-            watermark="2 hours",
-        )
-        res = run_to_memory(out, "streaming_attribution_outer_sink")
-    finally:
-        # memory sink rows live on the driver; the replay dir is disposable
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scoped_dir("attr_outer_")
+    ev = bounded_replay_source(
+        spark,
+        events,
+        [(-1, flush_ts, -1, "view", 0.0, "{}"), (-2, flush_ts, -2, "purchase", 0.0, "{}")],
+        tmp,
+    )
+    out = purchase_attribution_outer_stream(
+        ev.filter(F.col("event_type") == "view"),
+        ev.filter(F.col("event_type") == "purchase"),
+        max_delay="1 hour",
+        watermark="2 hours",
+    )
+    res = run_to_memory(out, "streaming_attribution_outer_sink")
     return res.select(
         "user_id",
         "purchase_id",
@@ -1529,8 +1524,6 @@ ORACLES["ev_attribution_touch"] = EV_ATTRIBUTION_SQL
 # is the plain FULL OUTER interval join with no cutoff.
 def streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import shutil
-    import tempfile
 
     from bears_spark.queries.tables import load_table
     from bears_spark.streaming.jobs import (
@@ -1540,23 +1533,20 @@ def streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load_table(spark, sf_dir, "events")
     flush_ts = events.agg(F.max("ts")).first()[0] + datetime.timedelta(hours=4)
-    tmp = tempfile.mkdtemp(prefix="attr_full_")
-    try:
-        ev = bounded_replay_source(
-            spark,
-            events,
-            [(-1, flush_ts, -1, "view", 0.0, "{}"), (-2, flush_ts, -2, "purchase", 0.0, "{}")],
-            tmp,
-        )
-        out = purchase_attribution_full_outer_stream(
-            ev.filter(F.col("event_type") == "view"),
-            ev.filter(F.col("event_type") == "purchase"),
-            max_delay="1 hour",
-            watermark="2 hours",
-        )
-        res = run_to_memory(out, "streaming_attribution_full_sink")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scoped_dir("attr_full_")
+    ev = bounded_replay_source(
+        spark,
+        events,
+        [(-1, flush_ts, -1, "view", 0.0, "{}"), (-2, flush_ts, -2, "purchase", 0.0, "{}")],
+        tmp,
+    )
+    out = purchase_attribution_full_outer_stream(
+        ev.filter(F.col("event_type") == "view"),
+        ev.filter(F.col("event_type") == "purchase"),
+        max_delay="1 hour",
+        watermark="2 hours",
+    )
+    res = run_to_memory(out, "streaming_attribution_full_sink")
     return res.select(
         "user_id",
         "purchase_id",
@@ -3489,35 +3479,24 @@ ORACLES["streaming_burst_detection"] = EV_BURST_SQL
 # filter needed), aggregated per (day, type). The oracle computes the same
 # answer from the raw parquet.
 def events_hive_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="hivepart_") + "/events_by_day"
-    try:
-        (
-            ev.withColumn("day", F.date_format(F.to_date("ts"), "yyyy-MM-dd"))
-            .repartition("day")
-            .write.partitionBy("day")
-            .mode("overwrite")
-            .parquet(out)
-        )
-        back = spark.read.parquet(out)
-        # the hive `day=` directories read back as a date: filter on it (the
-        # partition filter), then hand the driver the string the schema says
-        rows = (
-            back.where(F.col("day").between("2024-01-10", "2024-01-12"))
-            .groupBy(F.col("day").cast("string").alias("day"), "event_type")
-            .agg(F.count("*").alias("n"), F.countDistinct("user_id").alias("n_users"))
-            .orderBy("day", "event_type")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(out.rsplit("/", 1)[0], ignore_errors=True)
-    return local_df(spark,
-        [(r["day"], r["event_type"], r["n"], r["n_users"]) for r in rows],
-        "day string, event_type string, n bigint, n_users bigint",
-    ).orderBy("day", "event_type")
+    out = scoped_dir("hivepart_") + "/events_by_day"
+    (
+        ev.withColumn("day", F.date_format(F.to_date("ts"), "yyyy-MM-dd"))
+        .repartition("day")
+        .write.partitionBy("day")
+        .mode("overwrite")
+        .parquet(out)
+    )
+    back = spark.read.parquet(out)
+    # the hive `day=` directories read back as a date: filter on it (the
+    # partition filter), then report it as the string the oracle returns
+    return (
+        back.where(F.col("day").between("2024-01-10", "2024-01-12"))
+        .groupBy(F.col("day").cast("string").alias("day"), "event_type")
+        .agg(F.count("*").alias("n"), F.countDistinct("user_id").alias("n_users"))
+        .orderBy("day", "event_type")
+    )
 
 
 EV_HIVEPART_SQL = """

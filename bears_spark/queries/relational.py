@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bears_spark.caching import scoped_dir
 from bears_spark.localframe import local_df
 from bears_spark.queries.tables import load_table
 from bears_spark.streaming.jobs import finish
@@ -1322,38 +1323,32 @@ ORACLES["fk_integrity_report"] = FK_INTEGRITY_SQL
 # delete, then time-travel reads of all three versions. The oracle recomputes
 # each version's (row count, decimal-exact total) directly from orders, so a
 # wrong manifest, a lost file, or a broken delete shows up as a hash
-# mismatch. The table lives in a throwaway tempdir; aggregates are collected
-# before cleanup.
+# mismatch. The table lives in a scratch dir that the query-scope drain
+# removes.
 _STT_DELETE_BELOW = 1000
 
 
 def orders_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="snaptbl_"))
-    try:
-        t.overwrite(o.filter(F.col("o_orderkey") % 10 != 0))
-        t.append(o.filter(F.col("o_orderkey") % 10 == 0))
-        t.delete_where("o_orderkey", "<", _STT_DELETE_BELOW)
-        rows = []
-        for v in (1, 2, 3):
-            agg = (
-                t.read(version=v)
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                    ).alias("total"),
-                )
-                .first()
+    t = SnapshotTable(spark, scoped_dir("snaptbl_"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 10 != 0))
+    t.append(o.filter(F.col("o_orderkey") % 10 == 0))
+    t.delete_where("o_orderkey", "<", _STT_DELETE_BELOW)
+    rows = []
+    for v in (1, 2, 3):
+        agg = (
+            t.read(version=v)
+            .agg(
+                F.count("*").alias("n_rows"),
+                F.round(
+                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+                ).alias("total"),
             )
-            rows.append((v, agg["n_rows"], float(agg["total"])))
-    finally:
-        shutil.rmtree(t.path, ignore_errors=True)
+            .first()
+        )
+        rows.append((v, agg["n_rows"], float(agg["total"])))
     return local_df(spark, rows, "version bigint, n_rows bigint, total double")
 
 
@@ -1432,33 +1427,26 @@ _CF_CUT = "1997-01-01"
 
 
 def orders_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="snaptbl_cf_"))
-    try:
-        v1 = t.overwrite(o.filter(F.col("o_orderdate") < _CF_CUT))
-        delta = o.filter(F.col("o_orderdate") >= _CF_CUT)
-        t.append(delta.filter(F.col("o_orderkey") % 2 == 0))
-        t.append(delta.filter(F.col("o_orderkey") % 2 != 0))
-        out = (
-            t.changes_since(v1)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
+    t = SnapshotTable(spark, scoped_dir("snaptbl_cf_"))
+    v1 = t.overwrite(o.filter(F.col("o_orderdate") < _CF_CUT))
+    delta = o.filter(F.col("o_orderdate") >= _CF_CUT)
+    t.append(delta.filter(F.col("o_orderkey") % 2 == 0))
+    t.append(delta.filter(F.col("o_orderkey") % 2 != 0))
+    out = (
+        t.changes_since(v1)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(t.path, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
+    return out
 
 
 ORDERS_CHANGE_FEED_SQL = f"""
@@ -1485,40 +1473,30 @@ _IV_CUT2 = "1999-01-01"
 
 
 def orders_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.incremental_view import IncrementalAggView
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="incr_view_")
-    try:
-        base = SnapshotTable(spark, root + "/base")
-        base.overwrite(o.filter(F.col("o_orderdate") < _IV_CUT))
-        view = IncrementalAggView(
-            spark, base, root + "/view", group_cols=["o_orderstatus"], sum_cols=["o_totalprice"]
+    root = scoped_dir("incr_view_")
+    base = SnapshotTable(spark, root + "/base")
+    base.overwrite(o.filter(F.col("o_orderdate") < _IV_CUT))
+    view = IncrementalAggView(
+        spark, base, root + "/view", group_cols=["o_orderstatus"], sum_cols=["o_totalprice"]
+    )
+    view.refresh()  # full build at v1
+    base.append(o.filter(F.col("o_orderdate") >= _IV_CUT))
+    view.refresh()  # incremental: added files only
+    base.delete_where("o_orderdate", ">=", _IV_CUT2)
+    view.refresh()  # incremental: rewrite = removed + added files
+    return (
+        view.read()
+        .select(
+            "o_orderstatus",
+            F.col("n_rows").alias("n"),
+            F.round(F.col("o_totalprice_sum").cast("double"), 6).alias("total"),
+            F.round(F.col("o_totalprice_avg").cast("double"), 6).alias("avg_price"),
         )
-        view.refresh()  # full build at v1
-        base.append(o.filter(F.col("o_orderdate") >= _IV_CUT))
-        view.refresh()  # incremental: added files only
-        base.delete_where("o_orderdate", ">=", _IV_CUT2)
-        view.refresh()  # incremental: rewrite = removed + added files
-        rows = (
-            view.read()
-            .select(
-                "o_orderstatus",
-                F.col("n_rows").alias("n"),
-                F.round(F.col("o_totalprice_sum").cast("double"), 6).alias("total"),
-                F.round(F.col("o_totalprice_avg").cast("double"), 6).alias("avg_price"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
-        rows, "o_orderstatus string, n bigint, total double, avg_price double"
+        .orderBy("o_orderstatus")
     )
 
 
@@ -1541,33 +1519,25 @@ ORACLES["orders_incremental_rollup"] = ORDERS_INCR_ROLLUP_SQL
 # Proves the exported log is readable and the reader's add/remove replay
 # reconstructs exactly the committed state.
 def orders_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.delta_log import DeltaTableReader, export_delta_log
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="delta_rt_")
-    try:
-        t = SnapshotTable(spark, root + "/st")
-        t.overwrite(o.filter(F.col("o_orderkey") % 2 == 0))
-        t.append(o.filter(F.col("o_orderkey") % 2 != 0))
-        back = DeltaTableReader(spark, export_delta_log(t, root + "/delta")).read()
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    root = scoped_dir("delta_rt_")
+    t = SnapshotTable(spark, root + "/st")
+    t.overwrite(o.filter(F.col("o_orderkey") % 2 == 0))
+    t.append(o.filter(F.col("o_orderkey") % 2 != 0))
+    back = DeltaTableReader(spark, export_delta_log(t, root + "/delta")).read()
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_DELTA_RT_SQL = """
@@ -1593,81 +1563,74 @@ ORACLES["orders_delta_roundtrip"] = ORDERS_DELTA_RT_SQL
 def orders_delta_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
     import uuid as _uuid
 
     from bears_spark.io.delta_log import DeltaTableReader
     from bears_spark.io.roaring import frame_dv, serialize_rba, z85_encode
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="delta_dv_")
-    try:
-        _os.makedirs(root + "/_delta_log")
-        rel = {}
-        for grp, parity in (("even", 0), ("odd", 1)):
-            (
-                o.filter(F.col("o_orderkey") % 2 == parity)
-                .repartition(1)
-                .sortWithinPartitions("o_orderkey")
-                .write.parquet(f"{root}/{grp}")
-            )
-            name = [n for n in _os.listdir(f"{root}/{grp}") if n.endswith(".parquet")][0]
-            rel[grp] = f"{grp}/{name}"
-        n_odd = spark.read.parquet(f"{root}/{rel['odd']}").count()
-        positions = list(range(0, n_odd, 5))
-        data = serialize_rba(positions)
-        u = _uuid.uuid4()
-        with open(f"{root}/deletion_vector_{u}.bin", "wb") as f:
-            f.write(bytes([1]) + frame_dv(data))
-        dv = {
-            "storageType": "u",
-            "pathOrInlineDv": z85_encode(u.bytes),
-            "offset": 1,
-            "sizeInBytes": len(data),
-            "cardinality": len(positions),
-        }
-
-        def _add(path, extra=None):
-            a = {"path": path, "partitionValues": {}, "size": 1,
-                 "modificationTime": 0, "dataChange": True}
-            if extra:
-                a.update(extra)
-            return {"add": a}
-
-        c0 = [
-            {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
-                          "readerFeatures": ["deletionVectors"],
-                          "writerFeatures": ["deletionVectors"]}},
-            {"metaData": {"id": "dvrt", "format": {"provider": "parquet", "options": {}},
-                          "schemaString": o.schema.json(), "partitionColumns": [],
-                          "configuration": {}, "createdTime": 0}},
-            _add(rel["even"]),
-            _add(rel["odd"]),
-        ]
-        c1 = [
-            {"remove": {"path": rel["odd"], "dataChange": True}},
-            _add(rel["odd"], {"deletionVector": dv}),
-        ]
-        for v, actions in ((0, c0), (1, c1)):
-            with open(f"{root}/_delta_log/{v:020d}.json", "w") as f:
-                for a in actions:
-                    f.write(_json.dumps(a) + "\n")
-        back = DeltaTableReader(spark, root).read()
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    root = scoped_dir("delta_dv_")
+    _os.makedirs(root + "/_delta_log")
+    rel = {}
+    for grp, parity in (("even", 0), ("odd", 1)):
+        (
+            o.filter(F.col("o_orderkey") % 2 == parity)
+            .repartition(1)
+            .sortWithinPartitions("o_orderkey")
+            .write.parquet(f"{root}/{grp}")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        name = [n for n in _os.listdir(f"{root}/{grp}") if n.endswith(".parquet")][0]
+        rel[grp] = f"{grp}/{name}"
+    n_odd = spark.read.parquet(f"{root}/{rel['odd']}").count()
+    positions = list(range(0, n_odd, 5))
+    data = serialize_rba(positions)
+    u = _uuid.uuid4()
+    with open(f"{root}/deletion_vector_{u}.bin", "wb") as f:
+        f.write(bytes([1]) + frame_dv(data))
+    dv = {
+        "storageType": "u",
+        "pathOrInlineDv": z85_encode(u.bytes),
+        "offset": 1,
+        "sizeInBytes": len(data),
+        "cardinality": len(positions),
+    }
+
+    def _add(path, extra=None):
+        a = {"path": path, "partitionValues": {}, "size": 1,
+             "modificationTime": 0, "dataChange": True}
+        if extra:
+            a.update(extra)
+        return {"add": a}
+
+    c0 = [
+        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                      "readerFeatures": ["deletionVectors"],
+                      "writerFeatures": ["deletionVectors"]}},
+        {"metaData": {"id": "dvrt", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": o.schema.json(), "partitionColumns": [],
+                      "configuration": {}, "createdTime": 0}},
+        _add(rel["even"]),
+        _add(rel["odd"]),
+    ]
+    c1 = [
+        {"remove": {"path": rel["odd"], "dataChange": True}},
+        _add(rel["odd"], {"deletionVector": dv}),
+    ]
+    for v, actions in ((0, c0), (1, c1)):
+        with open(f"{root}/_delta_log/{v:020d}.json", "w") as f:
+            for a in actions:
+                f.write(_json.dumps(a) + "\n")
+    back = DeltaTableReader(spark, root).read()
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
+        )
+        .orderBy("o_orderstatus")
+    )
 
 
 QUERIES["orders_delta_dv_roundtrip"] = orders_delta_dv_roundtrip
@@ -1684,88 +1647,81 @@ QUERIES["orders_delta_dv_roundtrip"] = orders_delta_dv_roundtrip
 def orders_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.avro_generic import write_container
     from bears_spark.io.iceberg_log import IcebergTableReader
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="iceberg_rt_")
-    try:
-        _os.makedirs(root + "/metadata")
-        o.filter(F.col("o_orderkey") % 2 == 0).write.parquet(root + "/data/even")
-        o.filter(F.col("o_orderkey") % 2 != 0).write.parquet(root + "/data/odd")
-        o.limit(7).write.parquet(root + "/data/stale")  # DELETED entry below
-        files = {
-            grp: sorted(
-                f"{root}/data/{grp}/{n}"
-                for n in _os.listdir(f"{root}/data/{grp}")
-                if n.endswith(".parquet")
-            )
-            for grp in ("even", "odd", "stale")
-        }
-        man_schema = {
-            "type": "record", "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int"},
-                {"name": "data_file", "type": {
-                    "type": "record", "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int"},
-                        {"name": "file_path", "type": "string"},
-                        {"name": "file_format", "type": "string"},
-                        {"name": "record_count", "type": "long"},
-                    ],
-                }},
-            ],
-        }
-        entries = [
-            {"status": 1, "data_file": {"content": 0, "file_path": p,
-                                        "file_format": "PARQUET", "record_count": 1}}
-            for grp in ("even", "odd") for p in files[grp]
-        ] + [
-            {"status": 2, "data_file": {"content": 0, "file_path": p,
-                                        "file_format": "PARQUET", "record_count": 1}}
-            for p in files["stale"]
-        ]
-        mpath = root + "/metadata/m1.avro"
-        open(mpath, "wb").write(write_container(man_schema, entries))
-        ml_schema = {
-            "type": "record", "name": "manifest_file",
-            "fields": [
-                {"name": "manifest_path", "type": "string"},
-                {"name": "manifest_length", "type": "long"},
-                {"name": "content", "type": "int"},
-            ],
-        }
-        mlpath = root + "/metadata/ml1.avro"
-        open(mlpath, "wb").write(
-            write_container(ml_schema, [{"manifest_path": mpath, "manifest_length": 1, "content": 0}])
+    root = scoped_dir("iceberg_rt_")
+    _os.makedirs(root + "/metadata")
+    o.filter(F.col("o_orderkey") % 2 == 0).write.parquet(root + "/data/even")
+    o.filter(F.col("o_orderkey") % 2 != 0).write.parquet(root + "/data/odd")
+    o.limit(7).write.parquet(root + "/data/stale")  # DELETED entry below
+    files = {
+        grp: sorted(
+            f"{root}/data/{grp}/{n}"
+            for n in _os.listdir(f"{root}/data/{grp}")
+            if n.endswith(".parquet")
         )
-        with open(root + "/metadata/v1.metadata.json", "w") as f:
-            _json.dump(
-                {"format-version": 2, "location": root, "current-snapshot-id": 1,
-                 "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
-                 "schemas": [{"schema-id": 0, "type": "struct", "fields": []}],
-                 "current-schema-id": 0},
-                f,
-            )
-        back = IcebergTableReader(spark, root).read()
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+        for grp in ("even", "odd", "stale")
+    }
+    man_schema = {
+        "type": "record", "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int"},
+            {"name": "data_file", "type": {
+                "type": "record", "name": "r2",
+                "fields": [
+                    {"name": "content", "type": "int"},
+                    {"name": "file_path", "type": "string"},
+                    {"name": "file_format", "type": "string"},
+                    {"name": "record_count", "type": "long"},
+                ],
+            }},
+        ],
+    }
+    entries = [
+        {"status": 1, "data_file": {"content": 0, "file_path": p,
+                                    "file_format": "PARQUET", "record_count": 1}}
+        for grp in ("even", "odd") for p in files[grp]
+    ] + [
+        {"status": 2, "data_file": {"content": 0, "file_path": p,
+                                    "file_format": "PARQUET", "record_count": 1}}
+        for p in files["stale"]
+    ]
+    mpath = root + "/metadata/m1.avro"
+    open(mpath, "wb").write(write_container(man_schema, entries))
+    ml_schema = {
+        "type": "record", "name": "manifest_file",
+        "fields": [
+            {"name": "manifest_path", "type": "string"},
+            {"name": "manifest_length", "type": "long"},
+            {"name": "content", "type": "int"},
+        ],
+    }
+    mlpath = root + "/metadata/ml1.avro"
+    open(mlpath, "wb").write(
+        write_container(ml_schema, [{"manifest_path": mpath, "manifest_length": 1, "content": 0}])
+    )
+    with open(root + "/metadata/v1.metadata.json", "w") as f:
+        _json.dump(
+            {"format-version": 2, "location": root, "current-snapshot-id": 1,
+             "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
+             "schemas": [{"schema-id": 0, "type": "struct", "fields": []}],
+             "current-schema-id": 0},
+            f,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+    back = IcebergTableReader(spark, root).read()
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
+        )
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICEBERG_RT_SQL = ORDERS_DELTA_RT_SQL
@@ -1784,107 +1740,100 @@ ORACLES["orders_iceberg_roundtrip"] = ORDERS_ICEBERG_RT_SQL
 def orders_iceberg_v2_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.avro_generic import write_container
     from bears_spark.io.iceberg_log import IcebergTableReader
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="iceberg_v2_")
-    try:
-        _os.makedirs(root + "/metadata")
-        # one sorted file per parity class: positions are then deterministic
-        # (pos p in the odd file = the (p+1)-th smallest odd o_orderkey)
-        for grp, parity in (("even", 0), ("odd", 1)):
-            (
-                o.filter(F.col("o_orderkey") % 2 == parity)
-                .repartition(1)
-                .sortWithinPartitions("o_orderkey")
-                .write.parquet(f"{root}/data/{grp}")
-            )
-        paths = {
-            grp: [
-                f"{root}/data/{grp}/{n}"
-                for n in _os.listdir(f"{root}/data/{grp}")
-                if n.endswith(".parquet")
-            ][0]
-            for grp in ("even", "odd")
-        }
-        n_odd = spark.read.parquet(paths["odd"]).count()
-        # positional delete file: every 5th row of the odd file, written as a
-        # distributed range (no driver-side row materialization)
+    root = scoped_dir("iceberg_v2_")
+    _os.makedirs(root + "/metadata")
+    # one sorted file per parity class: positions are then deterministic
+    # (pos p in the odd file = the (p+1)-th smallest odd o_orderkey)
+    for grp, parity in (("even", 0), ("odd", 1)):
         (
-            spark.range(0, n_odd, 5)
-            .select(F.lit(paths["odd"]).alias("file_path"), F.col("id").alias("pos"))
-            .coalesce(1)
-            .write.parquet(root + "/data/deletes")
+            o.filter(F.col("o_orderkey") % 2 == parity)
+            .repartition(1)
+            .sortWithinPartitions("o_orderkey")
+            .write.parquet(f"{root}/data/{grp}")
         )
-        del_path = [
-            f"{root}/data/deletes/{n}"
-            for n in _os.listdir(root + "/data/deletes")
+    paths = {
+        grp: [
+            f"{root}/data/{grp}/{n}"
+            for n in _os.listdir(f"{root}/data/{grp}")
             if n.endswith(".parquet")
         ][0]
-        man_schema = {
-            "type": "record", "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int"},
-                {"name": "data_file", "type": {
-                    "type": "record", "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int"},
-                        {"name": "file_path", "type": "string"},
-                        {"name": "file_format", "type": "string"},
-                        {"name": "record_count", "type": "long"},
-                    ],
-                }},
-            ],
-        }
-        def _entry(content, p):
-            return {"status": 1, "data_file": {"content": content, "file_path": p,
-                                               "file_format": "PARQUET", "record_count": 1}}
-        mdata = root + "/metadata/m1.avro"
-        open(mdata, "wb").write(
-            write_container(man_schema, [_entry(0, paths["even"]), _entry(0, paths["odd"])])
+        for grp in ("even", "odd")
+    }
+    n_odd = spark.read.parquet(paths["odd"]).count()
+    # positional delete file: every 5th row of the odd file, written as a
+    # distributed range (no driver-side row materialization)
+    (
+        spark.range(0, n_odd, 5)
+        .select(F.lit(paths["odd"]).alias("file_path"), F.col("id").alias("pos"))
+        .coalesce(1)
+        .write.parquet(root + "/data/deletes")
+    )
+    del_path = [
+        f"{root}/data/deletes/{n}"
+        for n in _os.listdir(root + "/data/deletes")
+        if n.endswith(".parquet")
+    ][0]
+    man_schema = {
+        "type": "record", "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int"},
+            {"name": "data_file", "type": {
+                "type": "record", "name": "r2",
+                "fields": [
+                    {"name": "content", "type": "int"},
+                    {"name": "file_path", "type": "string"},
+                    {"name": "file_format", "type": "string"},
+                    {"name": "record_count", "type": "long"},
+                ],
+            }},
+        ],
+    }
+    def _entry(content, p):
+        return {"status": 1, "data_file": {"content": content, "file_path": p,
+                                           "file_format": "PARQUET", "record_count": 1}}
+    mdata = root + "/metadata/m1.avro"
+    open(mdata, "wb").write(
+        write_container(man_schema, [_entry(0, paths["even"]), _entry(0, paths["odd"])])
+    )
+    mdel = root + "/metadata/md1.avro"
+    open(mdel, "wb").write(write_container(man_schema, [_entry(1, del_path)]))
+    ml_schema = {
+        "type": "record", "name": "manifest_file",
+        "fields": [
+            {"name": "manifest_path", "type": "string"},
+            {"name": "manifest_length", "type": "long"},
+            {"name": "content", "type": "int"},
+        ],
+    }
+    mlpath = root + "/metadata/ml1.avro"
+    open(mlpath, "wb").write(write_container(ml_schema, [
+        {"manifest_path": mdata, "manifest_length": 1, "content": 0},
+        {"manifest_path": mdel, "manifest_length": 1, "content": 1},
+    ]))
+    with open(root + "/metadata/v1.metadata.json", "w") as f:
+        _json.dump(
+            {"format-version": 2, "location": root, "current-snapshot-id": 1,
+             "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
+             "schemas": [{"schema-id": 0, "type": "struct", "fields": []}],
+             "current-schema-id": 0},
+            f,
         )
-        mdel = root + "/metadata/md1.avro"
-        open(mdel, "wb").write(write_container(man_schema, [_entry(1, del_path)]))
-        ml_schema = {
-            "type": "record", "name": "manifest_file",
-            "fields": [
-                {"name": "manifest_path", "type": "string"},
-                {"name": "manifest_length", "type": "long"},
-                {"name": "content", "type": "int"},
-            ],
-        }
-        mlpath = root + "/metadata/ml1.avro"
-        open(mlpath, "wb").write(write_container(ml_schema, [
-            {"manifest_path": mdata, "manifest_length": 1, "content": 0},
-            {"manifest_path": mdel, "manifest_length": 1, "content": 1},
-        ]))
-        with open(root + "/metadata/v1.metadata.json", "w") as f:
-            _json.dump(
-                {"format-version": 2, "location": root, "current-snapshot-id": 1,
-                 "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
-                 "schemas": [{"schema-id": 0, "type": "struct", "fields": []}],
-                 "current-schema-id": 0},
-                f,
-            )
-        back = IcebergTableReader(spark, root).read()
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    back = IcebergTableReader(spark, root).read()
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICEBERG_V2_SQL = """
@@ -2041,57 +1990,50 @@ ORACLES["orders_delta_dv_read"] = ORDERS_DELTA_DV_READ_SQL
 def orders_delta_s3_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.commit_store import InMemoryCommitStore
     from bears_spark.io.delta_log import DeltaTableReader
 
     o = load_table(spark, sf_dir, "orders")
-    data_root = tempfile.mkdtemp(prefix="delta_s3_")
-    try:
-        commits = {}
-        for v, parity in ((0, 0), (1, 1)):
-            o.filter(F.col("o_orderkey") % 2 == parity).write.parquet(
-                f"{data_root}/p{parity}"
-            )
-            commits[v] = sorted(
-                f"{data_root}/p{parity}/{n}"
-                for n in _os.listdir(f"{data_root}/p{parity}")
-                if n.endswith(".parquet")
-            )
-        store = InMemoryCommitStore()
-        tbl = "s3://bench-bucket/orders_delta"
-        c0 = [
-            {"protocol": {"minReaderVersion": 1}},
-            {"metaData": {"id": "s3rt", "format": {"provider": "parquet", "options": {}},
-                          "schemaString": o.schema.json(), "partitionColumns": [],
-                          "configuration": {}, "createdTime": 0}},
-        ] + [{"add": {"path": p, "partitionValues": {}, "size": 1,
-                      "modificationTime": 0, "dataChange": True}} for p in commits[0]]
-        c1 = [{"add": {"path": p, "partitionValues": {}, "size": 1,
-                       "modificationTime": 0, "dataChange": True}} for p in commits[1]]
-        for v, actions in ((0, c0), (1, c1)):
-            store.replace(
-                f"{tbl}/_delta_log/{v:020d}.json",
-                "\n".join(_json.dumps(a) for a in actions).encode(),
-            )
-        r = DeltaTableReader(spark, tbl, store=store)
-        rows = (
-            r.read()
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderpriority")
-            .collect()
+    data_root = scoped_dir("delta_s3_")
+    commits = {}
+    for v, parity in ((0, 0), (1, 1)):
+        o.filter(F.col("o_orderkey") % 2 == parity).write.parquet(
+            f"{data_root}/p{parity}"
         )
-    finally:
-        shutil.rmtree(data_root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderpriority string, n bigint, total double")
+        commits[v] = sorted(
+            f"{data_root}/p{parity}/{n}"
+            for n in _os.listdir(f"{data_root}/p{parity}")
+            if n.endswith(".parquet")
+        )
+    store = InMemoryCommitStore()
+    tbl = "s3://bench-bucket/orders_delta"
+    c0 = [
+        {"protocol": {"minReaderVersion": 1}},
+        {"metaData": {"id": "s3rt", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": o.schema.json(), "partitionColumns": [],
+                      "configuration": {}, "createdTime": 0}},
+    ] + [{"add": {"path": p, "partitionValues": {}, "size": 1,
+                  "modificationTime": 0, "dataChange": True}} for p in commits[0]]
+    c1 = [{"add": {"path": p, "partitionValues": {}, "size": 1,
+                   "modificationTime": 0, "dataChange": True}} for p in commits[1]]
+    for v, actions in ((0, c0), (1, c1)):
+        store.replace(
+            f"{tbl}/_delta_log/{v:020d}.json",
+            "\n".join(_json.dumps(a) for a in actions).encode(),
+        )
+    r = DeltaTableReader(spark, tbl, store=store)
+    return (
+        r.read()
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
+        )
+        .orderBy("o_orderpriority")
+    )
 
 
 ORDERS_DELTA_S3_SQL = """
@@ -2115,8 +2057,6 @@ ORACLES["orders_delta_s3_read"] = ORDERS_DELTA_S3_SQL
 def orders_iceberg_renamed_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2131,96 +2071,89 @@ def orders_iceberg_renamed_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side because Spark's own parquet writer does not stamp field
     # ids — 3 narrow columns, bounded well below manifest-metadata scale
     pdf = o.orderBy("o_orderkey").toPandas()
-    root = tempfile.mkdtemp(prefix="iceberg_ren_")
-    try:
-        _os.makedirs(root + "/metadata")
-        _os.makedirs(root + "/data")
-        fields = [
-            pa.field("o_orderkey", pa.int64(), metadata={b"PARQUET:field_id": b"1"}),
-            pa.field("o_orderstatus", pa.string(), metadata={b"PARQUET:field_id": b"2"}),
-            pa.field("o_totalprice", pa.float64(), metadata={b"PARQUET:field_id": b"3"}),
-        ]
-        fp = f"{root}/data/prerename.parquet"
-        pq.write_table(
-            pa.Table.from_pandas(pdf, schema=pa.schema(fields), preserve_index=False),
-            fp,
+    root = scoped_dir("iceberg_ren_")
+    _os.makedirs(root + "/metadata")
+    _os.makedirs(root + "/data")
+    fields = [
+        pa.field("o_orderkey", pa.int64(), metadata={b"PARQUET:field_id": b"1"}),
+        pa.field("o_orderstatus", pa.string(), metadata={b"PARQUET:field_id": b"2"}),
+        pa.field("o_totalprice", pa.float64(), metadata={b"PARQUET:field_id": b"3"}),
+    ]
+    fp = f"{root}/data/prerename.parquet"
+    pq.write_table(
+        pa.Table.from_pandas(pdf, schema=pa.schema(fields), preserve_index=False),
+        fp,
+    )
+    man_schema = {
+        "type": "record", "name": "manifest_entry",
+        "fields": [
+            {"name": "status", "type": "int"},
+            {"name": "data_file", "type": {
+                "type": "record", "name": "r2",
+                "fields": [
+                    {"name": "content", "type": "int"},
+                    {"name": "file_path", "type": "string"},
+                    {"name": "file_format", "type": "string"},
+                    {"name": "record_count", "type": "long"},
+                ],
+            }},
+        ],
+    }
+    mpath = f"{root}/metadata/m1.avro"
+    with open(mpath, "wb") as f:
+        f.write(write_container(man_schema, [
+            {"status": 1, "data_file": {"content": 0, "file_path": fp,
+                                        "file_format": "PARQUET",
+                                        "record_count": len(pdf)}},
+        ]))
+    mlist_schema = {
+        "type": "record", "name": "manifest_file",
+        "fields": [
+            {"name": "manifest_path", "type": "string"},
+            {"name": "manifest_length", "type": "long"},
+            {"name": "content", "type": "int"},
+            {"name": "added_snapshot_id", "type": ["null", "long"]},
+        ],
+    }
+    mlpath = f"{root}/metadata/ml1.avro"
+    with open(mlpath, "wb") as f:
+        f.write(write_container(mlist_schema, [
+            {"manifest_path": mpath, "manifest_length": 1, "content": 0,
+             "added_snapshot_id": 1},
+        ]))
+    meta = {
+        "format-version": 2, "table-uuid": "ren", "location": root,
+        "current-snapshot-id": 1,
+        "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
+        "schemas": [
+            {"schema-id": 0, "type": "struct", "fields": [
+                {"id": 1, "name": "o_orderkey", "required": False, "type": "long"},
+                {"id": 2, "name": "o_orderstatus", "required": False, "type": "string"},
+                {"id": 3, "name": "o_totalprice", "required": False, "type": "double"},
+            ]},
+            # rename: o_totalprice -> total_price (ids stable)
+            {"schema-id": 1, "type": "struct", "fields": [
+                {"id": 1, "name": "o_orderkey", "required": False, "type": "long"},
+                {"id": 2, "name": "o_orderstatus", "required": False, "type": "string"},
+                {"id": 3, "name": "total_price", "required": False, "type": "double"},
+            ]},
+        ],
+        "current-schema-id": 1,
+    }
+    with open(f"{root}/metadata/v1.metadata.json", "w") as f:
+        _json.dump(meta, f)
+    with open(f"{root}/metadata/version-hint.text", "w") as f:
+        f.write("1")
+    back = IcebergTableReader(spark, root).read()
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("total_price").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total_price_sum"),
         )
-        man_schema = {
-            "type": "record", "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int"},
-                {"name": "data_file", "type": {
-                    "type": "record", "name": "r2",
-                    "fields": [
-                        {"name": "content", "type": "int"},
-                        {"name": "file_path", "type": "string"},
-                        {"name": "file_format", "type": "string"},
-                        {"name": "record_count", "type": "long"},
-                    ],
-                }},
-            ],
-        }
-        mpath = f"{root}/metadata/m1.avro"
-        with open(mpath, "wb") as f:
-            f.write(write_container(man_schema, [
-                {"status": 1, "data_file": {"content": 0, "file_path": fp,
-                                            "file_format": "PARQUET",
-                                            "record_count": len(pdf)}},
-            ]))
-        mlist_schema = {
-            "type": "record", "name": "manifest_file",
-            "fields": [
-                {"name": "manifest_path", "type": "string"},
-                {"name": "manifest_length", "type": "long"},
-                {"name": "content", "type": "int"},
-                {"name": "added_snapshot_id", "type": ["null", "long"]},
-            ],
-        }
-        mlpath = f"{root}/metadata/ml1.avro"
-        with open(mlpath, "wb") as f:
-            f.write(write_container(mlist_schema, [
-                {"manifest_path": mpath, "manifest_length": 1, "content": 0,
-                 "added_snapshot_id": 1},
-            ]))
-        meta = {
-            "format-version": 2, "table-uuid": "ren", "location": root,
-            "current-snapshot-id": 1,
-            "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1, "manifest-list": mlpath}],
-            "schemas": [
-                {"schema-id": 0, "type": "struct", "fields": [
-                    {"id": 1, "name": "o_orderkey", "required": False, "type": "long"},
-                    {"id": 2, "name": "o_orderstatus", "required": False, "type": "string"},
-                    {"id": 3, "name": "o_totalprice", "required": False, "type": "double"},
-                ]},
-                # rename: o_totalprice -> total_price (ids stable)
-                {"schema-id": 1, "type": "struct", "fields": [
-                    {"id": 1, "name": "o_orderkey", "required": False, "type": "long"},
-                    {"id": 2, "name": "o_orderstatus", "required": False, "type": "string"},
-                    {"id": 3, "name": "total_price", "required": False, "type": "double"},
-                ]},
-            ],
-            "current-schema-id": 1,
-        }
-        with open(f"{root}/metadata/v1.metadata.json", "w") as f:
-            _json.dump(meta, f)
-        with open(f"{root}/metadata/version-hint.text", "w") as f:
-            f.write("1")
-        back = IcebergTableReader(spark, root).read()
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("total_price").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total_price_sum"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
-        rows, "o_orderstatus string, n bigint, total_price_sum double"
+        .orderBy("o_orderstatus")
     )
 
 
@@ -2243,9 +2176,6 @@ ORACLES["orders_iceberg_renamed_col"] = ORDERS_ICEBERG_RENAMED_SQL
 # oracle's rows. This grades the whole maintenance loop: append -> Z-order
 # compaction -> manifest-stat pruning, with correctness gated on values.
 def orders_optimize_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -2255,41 +2185,35 @@ def orders_optimize_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SF) — a fixed literal would cover most of the domain at tiny SFs and
     # make file skipping impossible by construction. Bounded 1-row collect.
     thr = max(1, int(o.agg(F.max("o_custkey")).collect()[0][0] * 0.06))
-    root = tempfile.mkdtemp(prefix="optz_")
-    try:
-        t = SnapshotTable(spark, root)
-        for i in range(4):
-            batch = o.filter(F.pmod(F.xxhash64("o_orderkey"), F.lit(4)) == i).coalesce(1)
-            (t.overwrite if i == 0 else t.append)(batch)
-        pre = len(t.files(where=("o_custkey", "<", thr)))
-        # target 30% of the table: every ~25%-sized micro-batch file is
-        # "small" (rewritten), and ceil(total/target) = 4 z-ordered outputs
-        # so the curve layout yields file-level selectivity (one giant file
-        # could never be skipped). Column order matters: zorder_key gives the
-        # LAST column the top interleaved bit, so o_custkey goes last to make
-        # the custkey range the leading file-split dimension.
-        total_rows = sum(e.rows for e in t.files())
-        t.optimize_clustered(
-            ["o_orderkey", "o_custkey"], target_rows_per_file=max(2, int(total_rows * 0.3))
+    root = scoped_dir("optz_")
+    t = SnapshotTable(spark, root)
+    for i in range(4):
+        batch = o.filter(F.pmod(F.xxhash64("o_orderkey"), F.lit(4)) == i).coalesce(1)
+        (t.overwrite if i == 0 else t.append)(batch)
+    pre = len(t.files(where=("o_custkey", "<", thr)))
+    # target 30% of the table: every ~25%-sized micro-batch file is
+    # "small" (rewritten), and ceil(total/target) = 4 z-ordered outputs
+    # so the curve layout yields file-level selectivity (one giant file
+    # could never be skipped). Column order matters: zorder_key gives the
+    # LAST column the top interleaved bit, so o_custkey goes last to make
+    # the custkey range the leading file-split dimension.
+    total_rows = sum(e.rows for e in t.files())
+    t.optimize_clustered(
+        ["o_orderkey", "o_custkey"], target_rows_per_file=max(2, int(total_rows * 0.3))
+    )
+    post_files = t.files(where=("o_custkey", "<", thr))
+    skipped = len(post_files) < len(t.files())
+    return (
+        t.read(where=("o_custkey", "<", thr))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        post_files = t.files(where=("o_custkey", "<", thr))
-        skipped = len(post_files) < len(t.files())
-        rows = (
-            t.read(where=("o_custkey", "<", thr))
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .withColumn("files_skipped", F.lit(bool(skipped) and pre >= len(post_files)))
-            .orderBy("o_orderstatus")
-        ).collect()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
-        rows, "o_orderstatus string, n bigint, total double, files_skipped boolean"
+        .withColumn("files_skipped", F.lit(bool(skipped) and pre >= len(post_files)))
+        .orderBy("o_orderstatus")
     )
 
 
@@ -2678,44 +2602,34 @@ _BLOOM_CUST = 7
 
 
 def orders_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
     t = SnapshotTable(
         spark,
-        tempfile.mkdtemp(prefix="snaptbl_bloom_"),
+        scoped_dir("snaptbl_bloom_"),
         bloom_cols=["o_custkey"],
         # 64K bits: keeps the false-positive rate ~0 at every SF, so
         # n_files_scanned equals TRUE file membership (which the oracle
         # derives relationally) rather than membership-plus-fp-noise
         bloom_bits=1 << 16,
     )
-    try:
-        third = o.agg(F.max("o_orderkey")).first()[0] // 3
-        t.overwrite(o.filter(F.col("o_orderkey") <= third).coalesce(1))
-        t.append(o.filter((F.col("o_orderkey") > third) & (F.col("o_orderkey") <= 2 * third)).coalesce(1))
-        t.append(o.filter(F.col("o_orderkey") > 2 * third).coalesce(1))
-        pruned = len(t.files(where=("o_custkey", "=", _BLOOM_CUST)))
-        out = (
-            t.read(where=("o_custkey", "=", _BLOOM_CUST))
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .withColumn("n_files_scanned", F.lit(pruned))
-            .orderBy("o_orderstatus")
+    third = o.agg(F.max("o_orderkey")).first()[0] // 3
+    t.overwrite(o.filter(F.col("o_orderkey") <= third).coalesce(1))
+    t.append(o.filter((F.col("o_orderkey") > third) & (F.col("o_orderkey") <= 2 * third)).coalesce(1))
+    t.append(o.filter(F.col("o_orderkey") > 2 * third).coalesce(1))
+    pruned = len(t.files(where=("o_custkey", "=", _BLOOM_CUST)))
+    return (
+        t.read(where=("o_custkey", "=", _BLOOM_CUST))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(t.path, ignore_errors=True)
-    return local_df(spark, 
-        rows, "o_orderstatus string, n bigint, total double, n_files_scanned int"
+        .withColumn("n_files_scanned", F.lit(pruned))
+        .orderBy("o_orderstatus")
     )
 
 
@@ -2745,32 +2659,24 @@ ORACLES["orders_bloom_point_lookup"] = ORDERS_BLOOM_LOOKUP_SQL
 # oracle aggregates the source table directly, so any row lost, duplicated,
 # or value-corrupted in either direction fails the hash.
 def orders_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.reader import Reader
     from bears_spark.io.writer import Writer
 
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="arrow_rt_") + "/orders.arrow"
-    try:
-        Writer.of("arrow").write(o.repartition(4), out)
-        back = Reader.of("arrow").read(out, spark=spark).df
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("o_custkey").alias("n_cust"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    out = scoped_dir("arrow_rt_") + "/orders.arrow"
+    Writer.of("arrow").write(o.repartition(4), out)
+    back = Reader.of("arrow").read(out, spark=spark).df
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.countDistinct("o_custkey").alias("n_cust"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(out.rsplit("/", 1)[0], ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, n_cust bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ARROW_RT_SQL = """
@@ -2881,40 +2787,25 @@ ORACLES["cust_woe_urgency"] = CUST_WOE_SQL
 # groups, full min/max coverage, every row accounted for. The oracle
 # derives the same invariants from the logical table.
 def orders_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.layout import clustering_report
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    root = tempfile.mkdtemp(prefix="layout_")
-    try:
-        (
-            o.coalesce(1)
-            .sortWithinPartitions("o_orderkey")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 2000)
-            .parquet(root)
-        )
-        rows = (
-            clustering_report(spark, root, "o_orderkey")
-            .select(
-                "column",
-                "n_files",
-                "n_row_groups",
-                "total_rows",
-                "overlapping_rgs",
-                F.col("global_min").cast("bigint").alias("key_min"),
-                F.col("global_max").cast("bigint").alias("key_max"),
-            )
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
-        rows,
-        "column string, n_files bigint, n_row_groups bigint, total_rows bigint, "
-        "overlapping_rgs bigint, key_min bigint, key_max bigint",
+    root = scoped_dir("layout_")
+    (
+        o.coalesce(1)
+        .sortWithinPartitions("o_orderkey")
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 2000)
+        .parquet(root)
+    )
+    return clustering_report(spark, root, "o_orderkey").select(
+        "column",
+        "n_files",
+        "n_row_groups",
+        "total_rows",
+        "overlapping_rgs",
+        F.col("global_min").cast("bigint").alias("key_min"),
+        F.col("global_max").cast("bigint").alias("key_max"),
     )
 
 
@@ -4253,32 +4144,24 @@ ORACLES["customer_theil_index"] = CUSTOMER_THEIL_SQL
 # contract as orders_arrow_roundtrip): write orders as ORC, read back, and
 # the per-status aggregate must hash-match the raw-parquet oracle exactly.
 def orders_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.reader import Reader
     from bears_spark.io.writer import Writer
 
     o = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="orc_rt_") + "/orders_orc"
-    try:
-        Writer.of("orc").write(o.repartition(4), out)
-        back = Reader.of("orc").read(out, spark=spark).df
-        rows = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.countDistinct("o_custkey").alias("n_cust"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    out = scoped_dir("orc_rt_") + "/orders_orc"
+    Writer.of("orc").write(o.repartition(4), out)
+    back = Reader.of("orc").read(out, spark=spark).df
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.countDistinct("o_custkey").alias("n_cust"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(out.rsplit("/", 1)[0], ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, n_cust bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ORC_RT_SQL = """
@@ -4298,33 +4181,25 @@ ORACLES["orders_orc_roundtrip"] = ORDERS_ORC_RT_SQL
 # read back through the (file, pos) anti-join, aggregate vs the relational
 # oracle. SQL DELETE null semantics included (null keys survive).
 def orders_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="mor_del_")
-    try:
-        t = SnapshotTable(spark, root)
-        t.overwrite(o.repartition(8))
-        t.delete_where("o_totalprice", "<", 50000.0, mode="mor")
-        assert any(e.dv for e in t.files()), "expected deletion vectors, not rewrites"
-        rows = (
-            t.read()
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderpriority")
-            .collect()
+    root = scoped_dir("mor_del_")
+    t = SnapshotTable(spark, root)
+    t.overwrite(o.repartition(8))
+    t.delete_where("o_totalprice", "<", 50000.0, mode="mor")
+    assert any(e.dv for e in t.files()), "expected deletion vectors, not rewrites"
+    return (
+        t.read()
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderpriority string, n bigint, total double")
+        .orderBy("o_orderpriority")
+    )
 
 
 ORDERS_MOR_DELETE_SQL = """
@@ -4350,48 +4225,43 @@ ORACLES["orders_mor_delete"] = ORDERS_MOR_DELETE_SQL
 # file:// standing in for the object store in-container.
 def orders_mor_fileuri_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import shutil
-    import tempfile
 
     from bears_spark.io.commit_store import InMemoryCommitStore
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    local_root = tempfile.mkdtemp(prefix="mor_uri_")
-    try:
-        t = SnapshotTable(spark, "file://" + local_root + "/t", store=InMemoryCommitStore())
-        t.overwrite(o.repartition(8))
-        t.delete_where("o_orderdate", "<", datetime.datetime(1996, 1, 1), mode="mor")
-        dvs = [e.dv for e in t.files() if e.dv]
-        assert dvs, "expected deletion vectors, not rewrites"
-        assert all(d["path"].startswith("file://") for d in dvs), "DV blobs must live under the URI root"
-        mid = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(F.count("*").alias("n"))
-            .orderBy("o_orderstatus")
-            .collect()
+    local_root = scoped_dir("mor_uri_")
+    t = SnapshotTable(spark, "file://" + local_root + "/t", store=InMemoryCommitStore())
+    t.overwrite(o.repartition(8))
+    t.delete_where("o_orderdate", "<", datetime.datetime(1996, 1, 1), mode="mor")
+    dvs = [e.dv for e in t.files() if e.dv]
+    assert dvs, "expected deletion vectors, not rewrites"
+    assert all(d["path"].startswith("file://") for d in dvs), "DV blobs must live under the URI root"
+    mid = (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(F.count("*").alias("n"))
+        .orderBy("o_orderstatus")
+        .collect()
+    )
+    # compaction materializes the DVs away; the answer must not move
+    t.compact(target_rows_per_file=1_000_000)
+    assert not any(e.dv for e in t.files()), "compact must materialize DVs"
+    rows = (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        # compaction materializes the DVs away; the answer must not move
-        t.compact(target_rows_per_file=1_000_000)
-        assert not any(e.dv for e in t.files()), "compact must materialize DVs"
-        rows = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-        assert [(r["o_orderstatus"], r["n"]) for r in rows] == [
-            (m["o_orderstatus"], m["n"]) for m in mid
-        ], "compact changed the result"
-    finally:
-        shutil.rmtree(local_root, ignore_errors=True)
+        .orderBy("o_orderstatus")
+        .collect()
+    )
+    assert [(r["o_orderstatus"], r["n"]) for r in rows] == [
+        (m["o_orderstatus"], m["n"]) for m in mid
+    ], "compact changed the result"
     return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
 
 
@@ -4417,58 +4287,51 @@ ORACLES["orders_mor_fileuri_roundtrip"] = ORDERS_MOR_FILEURI_SQL
 # hash-matched against an oracle that anti-joins the union of the lists.
 def streaming_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="gdpr_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.repartition(8))
-        src = _os.path.join(root, "forget")
-        keys = o.select("o_custkey").distinct()
-        # two deterministic forget-list epochs (one parquet file per epoch;
-        # maxFilesPerTrigger=1 makes each its own micro-batch/commit)
-        keys.filter(F.col("o_custkey") % 100 == 0).coalesce(1).write.parquet(
-            _os.path.join(src, "e0")
+    root = scoped_dir("gdpr_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.repartition(8))
+    src = _os.path.join(root, "forget")
+    keys = o.select("o_custkey").distinct()
+    # two deterministic forget-list epochs (one parquet file per epoch;
+    # maxFilesPerTrigger=1 makes each its own micro-batch/commit)
+    keys.filter(F.col("o_custkey") % 100 == 0).coalesce(1).write.parquet(
+        _os.path.join(src, "e0")
+    )
+    keys.filter(F.col("o_custkey") % 97 == 0).coalesce(1).write.parquet(
+        _os.path.join(src, "e1")
+    )
+    flat = _os.path.join(root, "stream")
+    _os.makedirs(flat)
+    for i, sub in enumerate(("e0", "e1")):
+        part = [n for n in _os.listdir(_os.path.join(src, sub)) if n.endswith(".parquet")][0]
+        _os.link(_os.path.join(src, sub, part), _os.path.join(flat, f"epoch{i}.parquet"))
+    stream = (
+        spark.readStream.schema("o_custkey long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat + "/")
+    )
+    ckpt = _os.path.join(root, "ckpt")
+    finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
+    assert any(e.dv for e in t.files()), "forget-lists must tombstone, not rewrite"
+    v = t.current_version()
+    # checkpoint-recovery replay: the same stream commits NOTHING
+    finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
+    assert t.current_version() == v, "replayed epochs must be skipped"
+    return (
+        t.read()
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        keys.filter(F.col("o_custkey") % 97 == 0).coalesce(1).write.parquet(
-            _os.path.join(src, "e1")
-        )
-        flat = _os.path.join(root, "stream")
-        _os.makedirs(flat)
-        for i, sub in enumerate(("e0", "e1")):
-            part = [n for n in _os.listdir(_os.path.join(src, sub)) if n.endswith(".parquet")][0]
-            _os.link(_os.path.join(src, sub, part), _os.path.join(flat, f"epoch{i}.parquet"))
-        stream = (
-            spark.readStream.schema("o_custkey long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat + "/")
-        )
-        ckpt = _os.path.join(root, "ckpt")
-        finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
-        assert any(e.dv for e in t.files()), "forget-lists must tombstone, not rewrite"
-        v = t.current_version()
-        # checkpoint-recovery replay: the same stream commits NOTHING
-        finish(t.streaming_delete_keys(stream, ckpt, col="o_custkey"))
-        assert t.current_version() == v, "replayed epochs must be skipped"
-        rows = (
-            t.read()
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderpriority")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderpriority string, n bigint, total double")
+        .orderBy("o_orderpriority")
+    )
 
 
 STREAMING_GDPR_SQL = """
@@ -4586,9 +4449,6 @@ def _ice_partitioned_orders(spark, sf_dir, root, part_name, part_avro_type,
 
 
 def orders_iceberg_bucket_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -4601,36 +4461,31 @@ def orders_iceberg_bucket_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _bkt(s):
         return s.map(lambda v: bucket_transform(int(v), "long", 8))
 
-    root = tempfile.mkdtemp(prefix="ice_bkt_")
-    try:
-        by_part = _ice_partitioned_orders(
-            spark, sf_dir, root, "ck_bucket", "int",
-            {"name": "ck_bucket", "transform": "bucket[8]", "source-id": 2, "field-id": 1000},
-            _bkt(F.col("o_custkey")),
+    root = scoped_dir("ice_bkt_")
+    by_part = _ice_partitioned_orders(
+        spark, sf_dir, root, "ck_bucket", "int",
+        {"name": "ck_bucket", "transform": "bucket[8]", "source-id": 2, "field-id": 1000},
+        _bkt(F.col("o_custkey")),
+    )
+    o = load_table(spark, sf_dir, "orders")
+    probe = int(o.agg(F.min("o_custkey")).first()[0])
+    r = IcebergTableReader(spark, root)
+    kept = r.files(where=("o_custkey", "=", probe))
+    want = set(by_part[bucket_transform(probe, "long", 8)])
+    assert set(kept) == want and len(kept) < len(r.files()), (
+        "bucket pruning must plan exactly the probe bucket's files"
+    )
+    return (
+        r.read(where=("o_custkey", "=", probe))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        o = load_table(spark, sf_dir, "orders")
-        probe = int(o.agg(F.min("o_custkey")).first()[0])
-        r = IcebergTableReader(spark, root)
-        kept = r.files(where=("o_custkey", "=", probe))
-        want = set(by_part[bucket_transform(probe, "long", 8)])
-        assert set(kept) == want and len(kept) < len(r.files()), (
-            "bucket pruning must plan exactly the probe bucket's files"
-        )
-        rows = (
-            r.read(where=("o_custkey", "=", probe))
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICE_BUCKET_SQL = """
@@ -4646,44 +4501,36 @@ ORACLES["orders_iceberg_bucket_pruned"] = ORDERS_ICE_BUCKET_SQL
 
 
 def orders_iceberg_truncate_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.iceberg_log import IcebergTableReader
 
-    root = tempfile.mkdtemp(prefix="ice_trunc_")
-    try:
-        by_part = _ice_partitioned_orders(
-            spark, sf_dir, root, "prio_trunc", "string",
-            {"name": "prio_trunc", "transform": "truncate[1]", "source-id": 6,
-             "field-id": 1000},
-            F.substring(F.col("o_orderpriority"), 1, 1),
+    root = scoped_dir("ice_trunc_")
+    by_part = _ice_partitioned_orders(
+        spark, sf_dir, root, "prio_trunc", "string",
+        {"name": "prio_trunc", "transform": "truncate[1]", "source-id": 6,
+         "field-id": 1000},
+        F.substring(F.col("o_orderpriority"), 1, 1),
+    )
+    r = IcebergTableReader(spark, root)
+    kept = r.files(where=("o_orderpriority", "=", "3-MEDIUM"))
+    assert set(kept) == set(by_part["3"]) and len(kept) < len(r.files()), (
+        "truncate pruning must plan exactly the '3' prefix files"
+    )
+    # truncation is order-preserving: range predicates prune too
+    # (probe strictly inside prefix '1' — a boundary probe like '2'
+    # conservatively keeps the '2' files, since truncate('2') == '2')
+    kept_lt = r.files(where=("o_orderpriority", "<", "1z"))
+    assert set(kept_lt) == set(by_part["1"]), "range pruning over truncate tuples"
+    return (
+        r.read(where=("o_orderpriority", "=", "3-MEDIUM"))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        r = IcebergTableReader(spark, root)
-        kept = r.files(where=("o_orderpriority", "=", "3-MEDIUM"))
-        assert set(kept) == set(by_part["3"]) and len(kept) < len(r.files()), (
-            "truncate pruning must plan exactly the '3' prefix files"
-        )
-        # truncation is order-preserving: range predicates prune too
-        # (probe strictly inside prefix '1' — a boundary probe like '2'
-        # conservatively keeps the '2' files, since truncate('2') == '2')
-        kept_lt = r.files(where=("o_orderpriority", "<", "1z"))
-        assert set(kept_lt) == set(by_part["1"]), "range pruning over truncate tuples"
-        rows = (
-            r.read(where=("o_orderpriority", "=", "3-MEDIUM"))
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICE_TRUNC_SQL = """
@@ -4708,63 +4555,56 @@ ORACLES["orders_iceberg_truncate_pruned"] = ORDERS_ICE_TRUNC_SQL
 # relational oracle over the fully-assembled table.
 def orders_delta_export_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.delta_log import DeltaTableReader, export_delta_log
     from bears_spark.io.metafs import LocalMetaFS
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="delta_cad_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "exported")
-        t.overwrite(o.filter(F.col("o_orderkey") % 7 == 0))
-        export_delta_log(t, out, checkpoint_interval=5)  # v0
-        for k in range(1, 7):
-            t.append(o.filter(F.col("o_orderkey") % 7 == k))
-            export_delta_log(t, out, checkpoint_interval=5)  # v1..v6
-        log = _os.path.join(out, "_delta_log")
-        assert _os.path.exists(_os.path.join(log, f"{5:020d}.checkpoint.parquet")), (
-            "cadence must self-checkpoint at version 5"
+    root = scoped_dir("delta_cad_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "exported")
+    t.overwrite(o.filter(F.col("o_orderkey") % 7 == 0))
+    export_delta_log(t, out, checkpoint_interval=5)  # v0
+    for k in range(1, 7):
+        t.append(o.filter(F.col("o_orderkey") % 7 == k))
+        export_delta_log(t, out, checkpoint_interval=5)  # v1..v6
+    log = _os.path.join(out, "_delta_log")
+    assert _os.path.exists(_os.path.join(log, f"{5:020d}.checkpoint.parquet")), (
+        "cadence must self-checkpoint at version 5"
+    )
+
+    class _ReadSpy:
+        def __init__(self, inner):
+            self.inner = inner
+            self.json_reads = []
+
+        def read_text(self, path):
+            if path.endswith(".json"):
+                self.json_reads.append(_os.path.basename(path))
+            return self.inner.read_text(path)
+
+        def __getattr__(self, name):
+            return getattr(self.inner, name)
+
+    r = DeltaTableReader(spark, out)
+    spy = _ReadSpy(LocalMetaFS())
+    r.fs = spy
+    df = r.read()  # replays the log on the driver
+    replayed = sorted(spy.json_reads)
+    assert replayed == [f"{6:020d}.json"], (
+        f"replay must be checkpoint + post-checkpoint suffix only, got {replayed}"
+    )
+    return (
+        df.groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-
-        class _ReadSpy:
-            def __init__(self, inner):
-                self.inner = inner
-                self.json_reads = []
-
-            def read_text(self, path):
-                if path.endswith(".json"):
-                    self.json_reads.append(_os.path.basename(path))
-                return self.inner.read_text(path)
-
-            def __getattr__(self, name):
-                return getattr(self.inner, name)
-
-        r = DeltaTableReader(spark, out)
-        spy = _ReadSpy(LocalMetaFS())
-        r.fs = spy
-        df = r.read()
-        rows = (
-            df.groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-        replayed = sorted(spy.json_reads)
-        assert replayed == [f"{6:020d}.json"], (
-            f"replay must be checkpoint + post-checkpoint suffix only, got {replayed}"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_DELTA_CADENCE_SQL = """
@@ -4785,45 +4625,35 @@ ORACLES["orders_delta_export_cadence"] = ORDERS_DELTA_CADENCE_SQL
 # displace stored extremes, exercising the targeted recompute repair), then
 # hash-matched against a plain relational oracle over the surviving rows.
 def orders_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.incremental_view import IncrementalAggView
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="ivm_mm_")
-    try:
-        base = SnapshotTable(spark, root + "/b")
-        view = IncrementalAggView(
-            spark, base, root + "/v",
-            group_cols=["o_orderpriority"], sum_cols=["o_totalprice"],
-            minmax_cols=["o_totalprice"],
+    root = scoped_dir("ivm_mm_")
+    base = SnapshotTable(spark, root + "/b")
+    view = IncrementalAggView(
+        spark, base, root + "/v",
+        group_cols=["o_orderpriority"], sum_cols=["o_totalprice"],
+        minmax_cols=["o_totalprice"],
+    )
+    base.overwrite(o.repartition(8))
+    view.refresh()
+    # displace every group's LOW extreme (copy-on-write rewrite) ...
+    base.delete_where("o_totalprice", "<", 30000.0)
+    view.refresh()
+    # ... and the HIGH extreme (merge-on-read deletion vectors)
+    base.delete_where("o_totalprice", ">=", 400000.0, mode="mor")
+    view.refresh()
+    return (
+        view.read()
+        .select(
+            "o_orderpriority",
+            F.col("n_rows").alias("n"),
+            F.round(F.col("o_totalprice_sum").cast("double"), 6).alias("total"),
+            F.round(F.col("o_totalprice_min"), 6).alias("pmin"),
+            F.round(F.col("o_totalprice_max"), 6).alias("pmax"),
         )
-        base.overwrite(o.repartition(8))
-        view.refresh()
-        # displace every group's LOW extreme (copy-on-write rewrite) ...
-        base.delete_where("o_totalprice", "<", 30000.0)
-        view.refresh()
-        # ... and the HIGH extreme (merge-on-read deletion vectors)
-        base.delete_where("o_totalprice", ">=", 400000.0, mode="mor")
-        view.refresh()
-        rows = (
-            view.read()
-            .select(
-                "o_orderpriority",
-                F.col("n_rows").alias("n"),
-                F.round(F.col("o_totalprice_sum").cast("double"), 6).alias("total"),
-                F.round(F.col("o_totalprice_min"), 6).alias("pmin"),
-                F.round(F.col("o_totalprice_max"), 6).alias("pmax"),
-            )
-            .orderBy("o_orderpriority")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, 
-        rows, "o_orderpriority string, n bigint, total double, pmin double, pmax double"
+        .orderBy("o_orderpriority")
     )
 
 
@@ -4852,60 +4682,53 @@ ORACLES["orders_ivm_minmax"] = ORDERS_IVM_MINMAX_SQL
 # oracle.
 def orders_iceberg_export_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.avro_generic import read_container
     from bears_spark.io.iceberg_log import IcebergTableReader, export_iceberg_metadata
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="ice_cont_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "exported")
-        t.overwrite(o.filter(F.col("o_orderkey") % 2 == 0).repartition(2))
-        export_iceberg_metadata(t, out)  # snapshot 1
-        n_meta = len(_os.listdir(_os.path.join(out, "metadata")))
-        export_iceberg_metadata(t, out)  # zero churn: writes nothing
-        assert len(_os.listdir(_os.path.join(out, "metadata"))) == n_meta, "no-op export wrote"
-        t.append(o.filter(F.col("o_orderkey") % 2 == 1).repartition(2))
-        export_iceberg_metadata(t, out)  # snapshot 2: reuses snapshot 1's manifest
-        t.delete_where("o_totalprice", ">=", 300000.0, mode="mor")
-        export_iceberg_metadata(t, out)  # snapshot 3: + positional-delete manifest
-        r = IcebergTableReader(spark, out)
-        sid = r.current_snapshot_id()
-        assert sid == 3, sid
-        # time travel: snapshot 1 still reads only the even half
-        assert (
-            r.read(snapshot_id=1)
-            .filter(F.col("o_orderkey") % 2 == 1)
-            .count()
-            == 0
-        )
-        # manifest reuse: snapshot 2's list contains snapshot 1's manifest
-        import json as _json
+    root = scoped_dir("ice_cont_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "exported")
+    t.overwrite(o.filter(F.col("o_orderkey") % 2 == 0).repartition(2))
+    export_iceberg_metadata(t, out)  # snapshot 1
+    n_meta = len(_os.listdir(_os.path.join(out, "metadata")))
+    export_iceberg_metadata(t, out)  # zero churn: writes nothing
+    assert len(_os.listdir(_os.path.join(out, "metadata"))) == n_meta, "no-op export wrote"
+    t.append(o.filter(F.col("o_orderkey") % 2 == 1).repartition(2))
+    export_iceberg_metadata(t, out)  # snapshot 2: reuses snapshot 1's manifest
+    t.delete_where("o_totalprice", ">=", 300000.0, mode="mor")
+    export_iceberg_metadata(t, out)  # snapshot 3: + positional-delete manifest
+    r = IcebergTableReader(spark, out)
+    sid = r.current_snapshot_id()
+    assert sid == 3, sid
+    # time travel: snapshot 1 still reads only the even half
+    assert (
+        r.read(snapshot_id=1)
+        .filter(F.col("o_orderkey") % 2 == 1)
+        .count()
+        == 0
+    )
+    # manifest reuse: snapshot 2's list contains snapshot 1's manifest
+    import json as _json
 
-        meta = _json.load(open(_os.path.join(out, "metadata", "v3.metadata.json")))
-        mls = {s["snapshot-id"]: s["manifest-list"] for s in meta["snapshots"]}
-        m1 = {m["manifest_path"] for m in read_container(open(mls[1], "rb").read())[1]}
-        m2 = {m["manifest_path"] for m in read_container(open(mls[2], "rb").read())[1]}
-        assert m1 <= m2, "append snapshot must reuse prior manifests"
-        rows = (
-            r.read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    meta = _json.load(open(_os.path.join(out, "metadata", "v3.metadata.json")))
+    mls = {s["snapshot-id"]: s["manifest-list"] for s in meta["snapshots"]}
+    m1 = {m["manifest_path"] for m in read_container(open(mls[1], "rb").read())[1]}
+    m2 = {m["manifest_path"] for m in read_container(open(mls[2], "rb").read())[1]}
+    assert m1 <= m2, "append snapshot must reuse prior manifests"
+    return (
+        r.read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICE_CONT_SQL = """
@@ -4929,62 +4752,55 @@ ORACLES["orders_iceberg_export_snapshots"] = ORDERS_ICE_CONT_SQL
 # plain relational oracle.
 def orders_streaming_replicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.delta_log import DeltaTableReader
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="repl_")
-    try:
-        src = _os.path.join(root, "in")
-        for k in range(2):
-            o.filter(F.col("o_orderkey") % 2 == k).coalesce(1).write.parquet(
-                _os.path.join(src, f"half{k}")
-            )
-        flat = _os.path.join(root, "stream")
-        _os.makedirs(flat)
-        for k in range(2):
-            part = [
-                n
-                for n in _os.listdir(_os.path.join(src, f"half{k}"))
-                if n.endswith(".parquet")
-            ][0]
-            _os.link(_os.path.join(src, f"half{k}", part), _os.path.join(flat, f"b{k}.parquet"))
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "replica")
-        stream = (
-            spark.readStream.schema(o.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat + "/")
+    root = scoped_dir("repl_")
+    src = _os.path.join(root, "in")
+    for k in range(2):
+        o.filter(F.col("o_orderkey") % 2 == k).coalesce(1).write.parquet(
+            _os.path.join(src, f"half{k}")
         )
-        ckpt = _os.path.join(root, "ckpt")
-        finish(t.streaming_append(stream, ckpt, export_delta_to=out))
-        v = t.current_version()
-        log = _os.path.join(out, "_delta_log")
-        before = sorted(_os.listdir(log))
-        # full checkpoint replay: ingest skipped by txn stamps, export
-        # skipped by zero churn — nothing moves
-        finish(t.streaming_append(stream, ckpt, export_delta_to=out))
-        assert t.current_version() == v, "replayed epochs must commit nothing"
-        assert sorted(_os.listdir(log)) == before, "replayed exports must write nothing"
-        rows = (
-            DeltaTableReader(spark, out)
-            .read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    flat = _os.path.join(root, "stream")
+    _os.makedirs(flat)
+    for k in range(2):
+        part = [
+            n
+            for n in _os.listdir(_os.path.join(src, f"half{k}"))
+            if n.endswith(".parquet")
+        ][0]
+        _os.link(_os.path.join(src, f"half{k}", part), _os.path.join(flat, f"b{k}.parquet"))
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "replica")
+    stream = (
+        spark.readStream.schema(o.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat + "/")
+    )
+    ckpt = _os.path.join(root, "ckpt")
+    finish(t.streaming_append(stream, ckpt, export_delta_to=out))
+    v = t.current_version()
+    log = _os.path.join(out, "_delta_log")
+    before = sorted(_os.listdir(log))
+    # full checkpoint replay: ingest skipped by txn stamps, export
+    # skipped by zero churn — nothing moves
+    finish(t.streaming_append(stream, ckpt, export_delta_to=out))
+    assert t.current_version() == v, "replayed epochs must commit nothing"
+    assert sorted(_os.listdir(log)) == before, "replayed exports must write nothing"
+    return (
+        DeltaTableReader(spark, out)
+        .read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_STREAM_REPL_SQL = """
@@ -5008,51 +4824,44 @@ ORACLES["orders_streaming_replicated"] = ORDERS_STREAM_REPL_SQL
 # floors since 1970, so ranges prune exactly like truncate[W].
 def orders_iceberg_day_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
-    import shutil
-    import tempfile
 
     from bears_spark.io.iceberg_log import IcebergTableReader, time_transform
 
-    root = tempfile.mkdtemp(prefix="ice_day_")
-    try:
-        by_part = _ice_partitioned_orders(
-            spark, sf_dir, root, "od_day", "int",
-            {"name": "od_day", "transform": "day", "source-id": 5, "field-id": 1000},
-            F.datediff(F.to_date(F.col("o_orderdate")), F.lit("1970-01-01")),
-            row_filter=F.col("o_orderdate") < F.lit("1995-03-01").cast("timestamp"),
+    root = scoped_dir("ice_day_")
+    by_part = _ice_partitioned_orders(
+        spark, sf_dir, root, "od_day", "int",
+        {"name": "od_day", "transform": "day", "source-id": 5, "field-id": 1000},
+        F.datediff(F.to_date(F.col("o_orderdate")), F.lit("1970-01-01")),
+        row_filter=F.col("o_orderdate") < F.lit("1995-03-01").cast("timestamp"),
+    )
+    r = IcebergTableReader(spark, root)
+    all_files = r.files()
+    # equality: exactly the earliest day's file(s)
+    probe_day = min(by_part)
+    probe_ts = _dt.datetime(1970, 1, 1) + _dt.timedelta(days=probe_day)
+    kept_eq = r.files(where=("o_orderdate", "=", probe_ts))
+    assert set(kept_eq) == set(by_part[probe_day]) and len(kept_eq) < len(all_files), (
+        "day pruning must plan exactly the probe day's files"
+    )
+    # range: >= Feb 1 plans only the February days
+    feb1 = _dt.datetime(1995, 2, 1)
+    feb_day = time_transform(feb1, "timestamp", "day")
+    kept_ge = r.files(where=("o_orderdate", ">=", feb1))
+    want_ge = {p for d, ps in by_part.items() if d >= feb_day for p in ps}
+    assert set(kept_ge) == want_ge and len(kept_ge) < len(all_files), (
+        "range pruning over day tuples must drop every pre-February file"
+    )
+    return (
+        r.read(where=("o_orderdate", ">=", feb1))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        r = IcebergTableReader(spark, root)
-        all_files = r.files()
-        # equality: exactly the earliest day's file(s)
-        probe_day = min(by_part)
-        probe_ts = _dt.datetime(1970, 1, 1) + _dt.timedelta(days=probe_day)
-        kept_eq = r.files(where=("o_orderdate", "=", probe_ts))
-        assert set(kept_eq) == set(by_part[probe_day]) and len(kept_eq) < len(all_files), (
-            "day pruning must plan exactly the probe day's files"
-        )
-        # range: >= Feb 1 plans only the February days
-        feb1 = _dt.datetime(1995, 2, 1)
-        feb_day = time_transform(feb1, "timestamp", "day")
-        kept_ge = r.files(where=("o_orderdate", ">=", feb1))
-        want_ge = {p for d, ps in by_part.items() if d >= feb_day for p in ps}
-        assert set(kept_ge) == want_ge and len(kept_ge) < len(all_files), (
-            "range pruning over day tuples must drop every pre-February file"
-        )
-        rows = (
-            r.read(where=("o_orderdate", ">=", feb1))
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_ICE_DAY_SQL = """
@@ -5078,49 +4887,44 @@ ORACLES["orders_iceberg_day_pruned"] = ORDERS_ICE_DAY_SQL
 # in-query.
 def orders_iceberg_ts_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.iceberg_log import IcebergTableReader, export_iceberg_metadata
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="ice_ts_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "ice")
-        t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))
-        export_iceberg_metadata(t, out)
-        t.append(o.filter(F.col("o_orderkey") % 3 == 1).repartition(2))
-        export_iceberg_metadata(t, out)
-        t.delete_where("o_orderpriority", "=", "1-URGENT", mode="mor")
-        export_iceberg_metadata(t, out)
-        r = IcebergTableReader(spark, out)
-        snaps = sorted(r.snapshots(), key=lambda s: int(s["snapshot-id"]))
-        assert len(snaps) == 3
-        ts = [int(s["timestamp-ms"]) for s in snaps]
-        sids = [int(s["snapshot-id"]) for s in snaps]
-        # boundary semantics: on-stamp -> that snapshot; between stamps ->
-        # the earlier one (stamps are strictly monotone); past the end ->
-        # the current snapshot
-        assert r.snapshot_as_of(ts[0]) == sids[0]
-        assert r.snapshot_as_of(ts[1] - 1) == sids[0]
-        assert r.snapshot_as_of(ts[2] + 3_600_000) == sids[2]
-        rows = []
-        for label, probe in (("s1", ts[0]), ("s2", ts[1]), ("s3", ts[2] + 3_600_000)):
-            agg = (
-                r.read(as_of_timestamp_ms=probe)
-                .agg(
-                    F.count("*").alias("n"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                    ).alias("total"),
-                )
-                .first()
+    root = scoped_dir("ice_ts_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "ice")
+    t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))
+    export_iceberg_metadata(t, out)
+    t.append(o.filter(F.col("o_orderkey") % 3 == 1).repartition(2))
+    export_iceberg_metadata(t, out)
+    t.delete_where("o_orderpriority", "=", "1-URGENT", mode="mor")
+    export_iceberg_metadata(t, out)
+    r = IcebergTableReader(spark, out)
+    snaps = sorted(r.snapshots(), key=lambda s: int(s["snapshot-id"]))
+    assert len(snaps) == 3
+    ts = [int(s["timestamp-ms"]) for s in snaps]
+    sids = [int(s["snapshot-id"]) for s in snaps]
+    # boundary semantics: on-stamp -> that snapshot; between stamps ->
+    # the earlier one (stamps are strictly monotone); past the end ->
+    # the current snapshot
+    assert r.snapshot_as_of(ts[0]) == sids[0]
+    assert r.snapshot_as_of(ts[1] - 1) == sids[0]
+    assert r.snapshot_as_of(ts[2] + 3_600_000) == sids[2]
+    rows = []
+    for label, probe in (("s1", ts[0]), ("s2", ts[1]), ("s3", ts[2] + 3_600_000)):
+        agg = (
+            r.read(as_of_timestamp_ms=probe)
+            .agg(
+                F.count("*").alias("n"),
+                F.round(
+                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+                ).alias("total"),
             )
-            rows.append((label, agg["n"], agg["total"]))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            .first()
+        )
+        rows.append((label, agg["n"], agg["total"]))
     return local_df(spark, rows, "point string, n bigint, total double")
 
 
@@ -5153,27 +4957,22 @@ ORACLES["orders_iceberg_ts_travel"] = ORDERS_ICE_TS_TRAVEL_SQL
 # file count).
 def orders_snapshot_history_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="st_hist_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 4 < 2).repartition(2))
-        t.append(o.filter(F.col("o_orderkey") % 4 == 2).repartition(1))
-        t.delete_where("o_orderpriority", "=", "5-LOW", mode="mor")
-        hist = t.snapshots()
-        assert [h["n_files"] for h in hist] == [2, 3, 3], (
-            "MoR delete must attach DVs without changing the file count"
-        )
-        rows = [
-            (h["version"], h["operation"], h["n_files"], h["n_rows"]) for h in hist
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scoped_dir("st_hist_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 4 < 2).repartition(2))
+    t.append(o.filter(F.col("o_orderkey") % 4 == 2).repartition(1))
+    t.delete_where("o_orderpriority", "=", "5-LOW", mode="mor")
+    hist = t.snapshots()
+    assert [h["n_files"] for h in hist] == [2, 3, 3], (
+        "MoR delete must attach DVs without changing the file count"
+    )
+    rows = [
+        (h["version"], h["operation"], h["n_files"], h["n_rows"]) for h in hist
+    ]
     return local_df(spark, 
         rows, "version int, operation string, n_files int, n_rows bigint"
     )
@@ -5208,8 +5007,6 @@ ORACLES["orders_snapshot_history_report"] = ORDERS_SNAPSHOT_HISTORY_SQL
 # hash-matched against the relational oracle.
 def orders_streaming_replicated_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -5217,70 +5014,65 @@ def orders_streaming_replicated_iceberg(spark: SparkSession, sf_dir: str) -> Dat
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="repl_ice_")
-    try:
-        src = _os.path.join(root, "in")
-        for k in range(2):
-            o.filter(F.col("o_orderkey") % 2 == k).coalesce(1).write.parquet(
-                _os.path.join(src, f"half{k}")
-            )
-        flat = _os.path.join(root, "stream")
-        _os.makedirs(flat)
-        for k in range(2):
-            part = [
-                n
-                for n in _os.listdir(_os.path.join(src, f"half{k}"))
-                if n.endswith(".parquet")
-            ][0]
-            _os.link(_os.path.join(src, f"half{k}", part), _os.path.join(flat, f"b{k}.parquet"))
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "replica")
-        stream = (
-            spark.readStream.schema(o.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat + "/")
+    root = scoped_dir("repl_ice_")
+    src = _os.path.join(root, "in")
+    for k in range(2):
+        o.filter(F.col("o_orderkey") % 2 == k).coalesce(1).write.parquet(
+            _os.path.join(src, f"half{k}")
         )
-        ckpt = _os.path.join(root, "ckpt")
-        finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
-        # GDPR forget-list stream: MoR-tombstone the urgent orders, so the
-        # replica carries live positional deletes from here on
-        keys_dir = _os.path.join(root, "keys")
-        o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey").coalesce(
-            1
-        ).write.parquet(keys_dir)
-        key_stream = spark.readStream.schema(
-            T.StructType([T.StructField("o_orderkey", T.LongType())])
-        ).parquet(keys_dir + "/")
-        dckpt = _os.path.join(root, "dckpt")
-        finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
-        assert any(e.dv for e in t.files()), "forget-list must leave live DVs"
-        v = t.current_version()
-        meta_dir = _os.path.join(out, "metadata")
-        before = sorted(_os.listdir(meta_dir))
-        # full checkpoint replay of BOTH streams: ingest skipped by txn
-        # stamps; export skipped by zero churn + unchanged DV fingerprint
-        finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
-        finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
-        assert t.current_version() == v, "replayed epochs must commit nothing"
-        assert sorted(_os.listdir(meta_dir)) == before, (
-            "replayed exports must write nothing, even with live DVs"
+    flat = _os.path.join(root, "stream")
+    _os.makedirs(flat)
+    for k in range(2):
+        part = [
+            n
+            for n in _os.listdir(_os.path.join(src, f"half{k}"))
+            if n.endswith(".parquet")
+        ][0]
+        _os.link(_os.path.join(src, f"half{k}", part), _os.path.join(flat, f"b{k}.parquet"))
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "replica")
+    stream = (
+        spark.readStream.schema(o.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat + "/")
+    )
+    ckpt = _os.path.join(root, "ckpt")
+    finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
+    # GDPR forget-list stream: MoR-tombstone the urgent orders, so the
+    # replica carries live positional deletes from here on
+    keys_dir = _os.path.join(root, "keys")
+    o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey").coalesce(
+        1
+    ).write.parquet(keys_dir)
+    key_stream = spark.readStream.schema(
+        T.StructType([T.StructField("o_orderkey", T.LongType())])
+    ).parquet(keys_dir + "/")
+    dckpt = _os.path.join(root, "dckpt")
+    finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
+    assert any(e.dv for e in t.files()), "forget-list must leave live DVs"
+    v = t.current_version()
+    meta_dir = _os.path.join(out, "metadata")
+    before = sorted(_os.listdir(meta_dir))
+    # full checkpoint replay of BOTH streams: ingest skipped by txn
+    # stamps; export skipped by zero churn + unchanged DV fingerprint
+    finish(t.streaming_append(stream, ckpt, export_iceberg_to=out))
+    finish(t.streaming_delete_keys(key_stream, dckpt, "o_orderkey", export_iceberg_to=out))
+    assert t.current_version() == v, "replayed epochs must commit nothing"
+    assert sorted(_os.listdir(meta_dir)) == before, (
+        "replayed exports must write nothing, even with live DVs"
+    )
+    return (
+        IcebergTableReader(spark, out)
+        .read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-        rows = (
-            IcebergTableReader(spark, out)
-            .read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_STREAM_REPL_ICE_SQL = """
@@ -5305,46 +5097,39 @@ ORACLES["orders_streaming_replicated_iceberg"] = ORDERS_STREAM_REPL_ICE_SQL
 # relational oracle.
 def orders_retention_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="st_ret_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))     # v1
-        t.overwrite(o.filter(F.col("o_orderkey") % 3 <= 1).repartition(2))     # v2 orphans v1
-        t.append(o.filter(F.col("o_orderkey") % 3 == 2).repartition(1))        # v3
-        t.delete_where("o_orderpriority", "=", "5-LOW", mode="mor")            # v4
-        snaps = t.snapshots()
-        ts = {h["version"]: h["ts_ms"] for h in snaps}
-        assert sorted(ts.values()) == list(ts.values()) and len(set(ts.values())) == 4
-        # age cutoff at v3's stamp: v1+v2 predate it AND fall outside
-        # keep_last=2 -> both expire; v3/v4 survive the age test via keep_last
-        assert t.expire_snapshots(keep_last=2, older_than_ms=ts[3]) == [1, 2]
-        # grace period: v1's now-unreferenced files are too young to reap
-        assert t.vacuum(min_age_s=3600) == 0
-        # default pass reclaims exactly v1's two orphaned files (v2's files
-        # are still live in v3/v4)
-        assert t.vacuum() == 2
-        assert [h["version"] for h in t.snapshots()] == [3, 4]
-        rows = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            )
-            .orderBy("o_orderstatus")
-            .collect()
+    root = scoped_dir("st_ret_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))     # v1
+    t.overwrite(o.filter(F.col("o_orderkey") % 3 <= 1).repartition(2))     # v2 orphans v1
+    t.append(o.filter(F.col("o_orderkey") % 3 == 2).repartition(1))        # v3
+    t.delete_where("o_orderpriority", "=", "5-LOW", mode="mor")            # v4
+    snaps = t.snapshots()
+    ts = {h["version"]: h["ts_ms"] for h in snaps}
+    assert sorted(ts.values()) == list(ts.values()) and len(set(ts.values())) == 4
+    # age cutoff at v3's stamp: v1+v2 predate it AND fall outside
+    # keep_last=2 -> both expire; v3/v4 survive the age test via keep_last
+    assert t.expire_snapshots(keep_last=2, older_than_ms=ts[3]) == [1, 2]
+    # grace period: v1's now-unreferenced files are too young to reap
+    assert t.vacuum(min_age_s=3600) == 0
+    # default pass reclaims exactly v1's two orphaned files (v2's files
+    # are still live in v3/v4)
+    assert t.vacuum() == 2
+    assert [h["version"] for h in t.snapshots()] == [3, 4]
+    return (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "o_orderstatus string, n bigint, total double")
+        .orderBy("o_orderstatus")
+    )
 
 
 ORDERS_RETENTION_SQL = """
@@ -5372,60 +5157,55 @@ ORACLES["orders_retention_maintenance"] = ORDERS_RETENTION_SQL
 def orders_delta_ts_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.delta_log import DeltaTableReader, export_delta_log
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="delta_ts_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        out = _os.path.join(root, "delta")
-        # the exporter stamps max(now, prior+1): distinct monotone stamps
-        # are structural, no inter-commit sleeps needed (ADVICE r10)
-        t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))
-        export_delta_log(t, out)
-        t.append(o.filter(F.col("o_orderkey") % 3 == 1).repartition(2))
-        export_delta_log(t, out)
-        t.delete_where("o_orderpriority", "=", "1-URGENT", mode="mor")
-        export_delta_log(t, out)
-        log_dir = _os.path.join(out, "_delta_log")
-        stamps = []
-        for n in sorted(x for x in _os.listdir(log_dir) if x.endswith(".json")):
-            with open(_os.path.join(log_dir, n)) as f:
-                acts = [_json.loads(line) for line in f if line.strip()]
-            ci = [a["commitInfo"] for a in acts if "commitInfo" in a]
-            assert len(ci) == 1 and isinstance(ci[0].get("timestamp"), int), n
-            stamps.append(ci[0]["timestamp"])
-        assert stamps == sorted(stamps) and len(set(stamps)) == 3, stamps
-        r = DeltaTableReader(spark, out)
-        # boundary semantics under the reader's running-max monotonization:
-        # on-stamp -> that version; between stamps -> the earlier version;
-        # past the end -> the latest version
-        assert r.version_as_of(stamps[0]) == 0
-        assert r.version_as_of(stamps[1] - 1) == 0
-        assert r.version_as_of(stamps[2] + 3_600_000) == 2
-        rows = []
-        for label, probe in (
-            ("v0", stamps[0]),
-            ("v1", stamps[1]),
-            ("v2", stamps[2] + 3_600_000),
-        ):
-            agg = (
-                r.read(version=r.version_as_of(probe))
-                .agg(
-                    F.count("*").alias("n"),
-                    F.round(
-                        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
-                    ).alias("total"),
-                )
-                .first()
+    root = scoped_dir("delta_ts_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    out = _os.path.join(root, "delta")
+    # the exporter stamps max(now, prior+1): distinct monotone stamps
+    # are structural, no inter-commit sleeps needed (ADVICE r10)
+    t.overwrite(o.filter(F.col("o_orderkey") % 3 == 0).repartition(2))
+    export_delta_log(t, out)
+    t.append(o.filter(F.col("o_orderkey") % 3 == 1).repartition(2))
+    export_delta_log(t, out)
+    t.delete_where("o_orderpriority", "=", "1-URGENT", mode="mor")
+    export_delta_log(t, out)
+    log_dir = _os.path.join(out, "_delta_log")
+    stamps = []
+    for n in sorted(x for x in _os.listdir(log_dir) if x.endswith(".json")):
+        with open(_os.path.join(log_dir, n)) as f:
+            acts = [_json.loads(line) for line in f if line.strip()]
+        ci = [a["commitInfo"] for a in acts if "commitInfo" in a]
+        assert len(ci) == 1 and isinstance(ci[0].get("timestamp"), int), n
+        stamps.append(ci[0]["timestamp"])
+    assert stamps == sorted(stamps) and len(set(stamps)) == 3, stamps
+    r = DeltaTableReader(spark, out)
+    # boundary semantics under the reader's running-max monotonization:
+    # on-stamp -> that version; between stamps -> the earlier version;
+    # past the end -> the latest version
+    assert r.version_as_of(stamps[0]) == 0
+    assert r.version_as_of(stamps[1] - 1) == 0
+    assert r.version_as_of(stamps[2] + 3_600_000) == 2
+    rows = []
+    for label, probe in (
+        ("v0", stamps[0]),
+        ("v1", stamps[1]),
+        ("v2", stamps[2] + 3_600_000),
+    ):
+        agg = (
+            r.read(version=r.version_as_of(probe))
+            .agg(
+                F.count("*").alias("n"),
+                F.round(
+                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"), 6
+                ).alias("total"),
             )
-            rows.append((label, agg["n"], agg["total"]))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+            .first()
+        )
+        rows.append((label, agg["n"], agg["total"]))
     return local_df(spark, rows, "point string, n bigint, total double")
 
 
@@ -5460,8 +5240,6 @@ ORACLES["orders_delta_ts_travel"] = ORDERS_DELTA_TS_TRAVEL_SQL
 # delta-spark / Iceberg schema-evolution semantics.
 def orders_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.delta_log import DeltaTableReader, export_delta_log
     from bears_spark.io.iceberg_log import IcebergTableReader, export_iceberg_metadata
@@ -5470,68 +5248,65 @@ def orders_rename_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    root = tempfile.mkdtemp(prefix="rename_evo_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
-        v1 = t.current_version()
-        delta_out = _os.path.join(root, "delta")
-        ice_out = _os.path.join(root, "ice")
-        export_delta_log(t, delta_out)  # pre-evolution exports
-        export_iceberg_metadata(t, ice_out)
-        t.rename_column("o_totalprice", "price")  # metadata-only
-        t.drop_column("o_orderpriority")  # metadata-only
-        t.append(
-            o.filter(F.col("o_orderkey") % 4 == 1)
-            .selectExpr("o_orderkey", "o_totalprice AS price")
-            .repartition(2)
+    root = scoped_dir("rename_evo_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
+    v1 = t.current_version()
+    delta_out = _os.path.join(root, "delta")
+    ice_out = _os.path.join(root, "ice")
+    export_delta_log(t, delta_out)  # pre-evolution exports
+    export_iceberg_metadata(t, ice_out)
+    t.rename_column("o_totalprice", "price")  # metadata-only
+    t.drop_column("o_orderpriority")  # metadata-only
+    t.append(
+        o.filter(F.col("o_orderkey") % 4 == 1)
+        .selectExpr("o_orderkey", "o_totalprice AS price")
+        .repartition(2)
+    )
+    export_delta_log(t, delta_out)  # diff commit + columnMapping upgrade
+    export_iceberg_metadata(t, ice_out)  # field-id evolution snapshot
+    native = t.read()
+    assert native.columns == ["o_orderkey", "price"], native.columns
+    delta = DeltaTableReader(spark, delta_out).read()
+    ice_r = IcebergTableReader(spark, ice_out)
+    ice = ice_r.read()
+    assert delta.columns == native.columns and ice.columns == native.columns
+    # time travel across the rename: old snapshot, old names, everywhere
+    for old in (
+        t.read(version=v1),
+        DeltaTableReader(spark, delta_out).read(version=0),
+        ice_r.read(snapshot_id=1),
+    ):
+        assert old.columns == ["o_orderkey", "o_totalprice", "o_orderpriority"], (
+            old.columns
         )
-        export_delta_log(t, delta_out)  # diff commit + columnMapping upgrade
-        export_iceberg_metadata(t, ice_out)  # field-id evolution snapshot
-        native = t.read()
-        assert native.columns == ["o_orderkey", "price"], native.columns
-        delta = DeltaTableReader(spark, delta_out).read()
-        ice_r = IcebergTableReader(spark, ice_out)
-        ice = ice_r.read()
-        assert delta.columns == native.columns and ice.columns == native.columns
-        # time travel across the rename: old snapshot, old names, everywhere
-        for old in (
-            t.read(version=v1),
-            DeltaTableReader(spark, delta_out).read(version=0),
-            ice_r.read(snapshot_id=1),
-        ):
-            assert old.columns == ["o_orderkey", "o_totalprice", "o_orderpriority"], (
-                old.columns
-            )
 
-        def agg(df: DataFrame, label: str):
-            r = df.agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("price").cast("decimal(30,6)")).cast("double"), 6
-                ).alias("total"),
-            ).first()
-            return (label, r["n"], r["total"])
+    def agg(df: DataFrame, label: str):
+        r = df.agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("price").cast("decimal(30,6)")).cast("double"), 6
+            ).alias("total"),
+        ).first()
+        return (label, r["n"], r["total"])
 
-        rows = [
-            agg(native, "native"),
-            agg(delta, "delta"),
-            agg(ice, "iceberg"),
-        ]
-        r1 = (
-            t.read(version=v1)
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
-                    6,
-                ).alias("total"),
-            )
-            .first()
+    rows = [
+        agg(native, "native"),
+        agg(delta, "delta"),
+        agg(ice, "iceberg"),
+    ]
+    r1 = (
+        t.read(version=v1)
+        .agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
+                6,
+            ).alias("total"),
         )
-        rows.append(("native_v1", r1["n"], r1["total"]))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .first()
+    )
+    rows.append(("native_v1", r1["n"], r1["total"]))
     return local_df(spark, 
         rows, "point string, n bigint, total double"
     ).orderBy("point")
@@ -5568,55 +5343,50 @@ ORACLES["orders_rename_evolution"] = ORDERS_RENAME_EVOLUTION_SQL
 # aggregate hash-matched against relational SQL over the same parquet.
 def orders_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="wap_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
+    root = scoped_dir("wap_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
 
-        # WRITE: the ingest batch lands on a branch; keys = 1 (mod 8) arrive
-        # corrupted (sign-flipped totals — the deterministic "bad feed")
-        b = t.create_branch("ingest")
-        batch = o.filter(F.col("o_orderkey") % 4 == 1).select(
-            "o_orderkey",
-            F.when(
-                F.col("o_orderkey") % 8 == 1, -F.col("o_totalprice")
-            ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
-        )
-        b.append(batch.repartition(2))
+    # WRITE: the ingest batch lands on a branch; keys = 1 (mod 8) arrive
+    # corrupted (sign-flipped totals — the deterministic "bad feed")
+    b = t.create_branch("ingest")
+    batch = o.filter(F.col("o_orderkey") % 4 == 1).select(
+        "o_orderkey",
+        F.when(
+            F.col("o_orderkey") % 8 == 1, -F.col("o_totalprice")
+        ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
+    )
+    b.append(batch.repartition(2))
 
-        def agg(df: DataFrame, label: str):
-            r = df.agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
-                    6,
-                ).alias("total"),
-            ).first()
-            return (label, r["n"], float(r["total"]))
+    def agg(df: DataFrame, label: str):
+        r = df.agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
+                6,
+            ).alias("total"),
+        ).first()
+        return (label, r["n"], float(r["total"]))
 
-        rows = [
-            agg(t.read(), "main_while_dirty"),  # isolation: fork never leaks
-            agg(b.read(), "branch_dirty"),
-        ]
+    rows = [
+        agg(t.read(), "main_while_dirty"),  # isolation: fork never leaks
+        agg(b.read(), "branch_dirty"),
+    ]
 
-        # AUDIT on the branch, repair ON the branch, tag the audited state
-        rows.append(agg(b.read().filter(F.col("o_totalprice") < 0), "audit_bad"))
-        b.delete_where("o_totalprice", "<", 0, mode="cow")
+    # AUDIT on the branch, repair ON the branch, tag the audited state
+    rows.append(agg(b.read().filter(F.col("o_totalprice") < 0), "audit_bad"))
+    b.delete_where("o_totalprice", "<", 0, mode="cow")
 
-        # PUBLISH: atomic fast-forward of main onto the audited branch head
-        t.publish_branch("ingest")
-        t.create_tag("published-r11")
-        t.drop_branch("ingest")
-        assert t.branches() == [] and t.tags() == {"published-r11": 2}
-        rows.append(agg(t.read("published-r11"), "published"))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # PUBLISH: atomic fast-forward of main onto the audited branch head
+    t.publish_branch("ingest")
+    t.create_tag("published-r11")
+    t.drop_branch("ingest")
+    assert t.branches() == [] and t.tags() == {"published-r11": 2}
+    rows.append(agg(t.read("published-r11"), "published"))
     return local_df(spark, 
         rows, "point string, n bigint, total double"
     ).orderBy("point")
@@ -5663,8 +5433,6 @@ ORACLES["orders_wap_publish"] = ORDERS_WAP_PUBLISH_SQL
 # snapshot — each hash-matched against relational SQL.
 def orders_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.iceberg_log import IcebergTableReader, export_iceberg_metadata
     from bears_spark.io.snapshot_table import SnapshotTable
@@ -5672,44 +5440,41 @@ def orders_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_custkey").cast("int").alias("o_qty")
     )
-    root = tempfile.mkdtemp(prefix="widen_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
-        v1 = t.current_version()
-        ice_out = _os.path.join(root, "ice")
-        export_iceberg_metadata(t, ice_out)  # pre-widen snapshot
+    root = scoped_dir("widen_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
+    v1 = t.current_version()
+    ice_out = _os.path.join(root, "ice")
+    export_iceberg_metadata(t, ice_out)  # pre-widen snapshot
 
-        t.alter_column_type("o_qty", "bigint")  # metadata-only
-        # the appended values exceed int32 — they only fit BECAUSE of the widen
-        t.append(
-            o.filter(F.col("o_orderkey") % 4 == 1)
-            .select("o_orderkey", (F.col("o_qty").cast("bigint") + F.lit(2**33)).alias("o_qty"))
-            .repartition(2)
-        )
-        export_iceberg_metadata(t, ice_out)  # field-id promotion snapshot
+    t.alter_column_type("o_qty", "bigint")  # metadata-only
+    # the appended values exceed int32 — they only fit BECAUSE of the widen
+    t.append(
+        o.filter(F.col("o_orderkey") % 4 == 1)
+        .select("o_orderkey", (F.col("o_qty").cast("bigint") + F.lit(2**33)).alias("o_qty"))
+        .repartition(2)
+    )
+    export_iceberg_metadata(t, ice_out)  # field-id promotion snapshot
 
-        native = t.read()
-        assert native.schema["o_qty"].dataType.simpleString() == "bigint"
-        assert t.read(v1).schema["o_qty"].dataType.simpleString() == "int"
-        ice_r = IcebergTableReader(spark, ice_out)
-        ice = ice_r.read()
-        assert ice.schema["o_qty"].dataType.simpleString() == "bigint"
-        assert ice_r.read(snapshot_id=1).schema["o_qty"].dataType.simpleString() == "int"
+    native = t.read()
+    assert native.schema["o_qty"].dataType.simpleString() == "bigint"
+    assert t.read(v1).schema["o_qty"].dataType.simpleString() == "int"
+    ice_r = IcebergTableReader(spark, ice_out)
+    ice = ice_r.read()
+    assert ice.schema["o_qty"].dataType.simpleString() == "bigint"
+    assert ice_r.read(snapshot_id=1).schema["o_qty"].dataType.simpleString() == "int"
 
-        def agg(df: DataFrame, label: str):
-            r = df.agg(
-                F.count("*").alias("n"), F.sum("o_qty").cast("long").alias("qty_sum")
-            ).first()
-            return (label, r["n"], r["qty_sum"])
+    def agg(df: DataFrame, label: str):
+        r = df.agg(
+            F.count("*").alias("n"), F.sum("o_qty").cast("long").alias("qty_sum")
+        ).first()
+        return (label, r["n"], r["qty_sum"])
 
-        rows = [
-            agg(native, "native_widened"),
-            agg(ice, "iceberg_widened"),
-            agg(t.read(v1), "native_pre_widen"),
-        ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    rows = [
+        agg(native, "native_widened"),
+        agg(ice, "iceberg_widened"),
+        agg(t.read(v1), "native_pre_widen"),
+    ]
     return local_df(spark, 
         rows, "point string, n bigint, qty_sum bigint"
     ).orderBy("point")
@@ -5746,57 +5511,52 @@ ORACLES["orders_type_widening"] = ORDERS_TYPE_WIDENING_SQL
 # Enforcement scans only each commit's added files (O(churn) at 100 TB).
 def orders_constraints_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.delta_log import DeltaTableReader, export_delta_log
     from bears_spark.io.snapshot_table import ConstraintViolationError, SnapshotTable
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="ck_")
+    root = scoped_dir("ck_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
+    t.add_check_constraint("price_pos", "o_totalprice > 0")
+
+    # a batch with sign-flipped rows (keys = 1 mod 8) is refused WHOLE
+    dirty = o.filter(F.col("o_orderkey") % 4 == 1).select(
+        "o_orderkey",
+        F.when(F.col("o_orderkey") % 8 == 1, -F.col("o_totalprice"))
+        .otherwise(F.col("o_totalprice")).alias("o_totalprice"),
+    )
+    refused = False
     try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.filter(F.col("o_orderkey") % 4 == 0).repartition(2))
-        t.add_check_constraint("price_pos", "o_totalprice > 0")
+        t.append(dirty.repartition(2))
+    except ConstraintViolationError:
+        refused = True
+    assert refused
 
-        # a batch with sign-flipped rows (keys = 1 mod 8) is refused WHOLE
-        dirty = o.filter(F.col("o_orderkey") % 4 == 1).select(
-            "o_orderkey",
-            F.when(F.col("o_orderkey") % 8 == 1, -F.col("o_totalprice"))
-            .otherwise(F.col("o_totalprice")).alias("o_totalprice"),
-        )
-        refused = False
-        try:
-            t.append(dirty.repartition(2))
-        except ConstraintViolationError:
-            refused = True
-        assert refused
+    def agg(df: DataFrame, label: str):
+        r = df.agg(
+            F.count("*").alias("n"),
+            F.round(
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
+                6,
+            ).alias("total"),
+        ).first()
+        return (label, r["n"], float(r["total"]))
 
-        def agg(df: DataFrame, label: str):
-            r = df.agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double"),
-                    6,
-                ).alias("total"),
-            ).first()
-            return (label, r["n"], float(r["total"]))
+    rows = [agg(t.read(), "after_refusal")]  # atomic: table unchanged
 
-        rows = [agg(t.read(), "after_refusal")]  # atomic: table unchanged
-
-        # the cleaned batch lands; the Delta replica carries the constraint
-        t.append(dirty.filter(F.col("o_totalprice") > 0).repartition(2))
-        delta_out = _os.path.join(root, "delta")
-        export_delta_log(t, delta_out)
-        reader = DeltaTableReader(spark, delta_out)
-        meta, _ = reader._snapshot()
-        assert (meta.get("configuration") or {})["delta.constraints.price_pos"] == (
-            "o_totalprice > 0"
-        )
-        rows.append(agg(t.read(), "after_clean_batch"))
-        rows.append(agg(reader.read(), "delta_replica"))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # the cleaned batch lands; the Delta replica carries the constraint
+    t.append(dirty.filter(F.col("o_totalprice") > 0).repartition(2))
+    delta_out = _os.path.join(root, "delta")
+    export_delta_log(t, delta_out)
+    reader = DeltaTableReader(spark, delta_out)
+    meta, _ = reader._snapshot()
+    assert (meta.get("configuration") or {})["delta.constraints.price_pos"] == (
+        "o_totalprice > 0"
+    )
+    rows.append(agg(t.read(), "after_clean_batch"))
+    rows.append(agg(reader.read(), "delta_replica"))
     return local_df(spark, 
         rows, "point string, n bigint, total double"
     ).orderBy("point")
@@ -5836,8 +5596,6 @@ ORACLES["orders_constraints_gate"] = ORDERS_CONSTRAINTS_GATE_SQL
 # mutable table layer (SURVEY.md §1.2); this is Delta's UPDATE.
 def orders_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
@@ -5849,31 +5607,26 @@ def orders_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         )
     )
-    root = tempfile.mkdtemp(prefix="updw_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.repartitionByRange(4, "o_orderkey"))
-        # CoW: bulk adjustment over a key range — stats-pruned rewrite
-        t.update_where(
-            "o_orderkey", "<=", 20000, set={"cents": F.col("cents") + 500}
+    root = scoped_dir("updw_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.repartitionByRange(4, "o_orderkey"))
+    # CoW: bulk adjustment over a key range — stats-pruned rewrite
+    t.update_where(
+        "o_orderkey", "<=", 20000, set={"cents": F.col("cents") + 500}
+    )
+    # MoR: surgical single-key correction — DV + one appended row
+    min_k = t.stats_minmax("o_orderkey")[0]
+    t.update_where("o_orderkey", "=", min_k, set={"cents": 0}, mode="mor")
+    assert sum(1 for e in t.files() if e.dv) == 1, "MoR update must DV, not rewrite"
+    return (
+        t.read()
+        .groupBy((F.col("o_orderkey") % 7).cast("long").alias("bucket"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("cents").cast("long").alias("cents_sum"),
         )
-        # MoR: surgical single-key correction — DV + one appended row
-        min_k = t.stats_minmax("o_orderkey")[0]
-        t.update_where("o_orderkey", "=", min_k, set={"cents": 0}, mode="mor")
-        assert sum(1 for e in t.files() if e.dv) == 1, "MoR update must DV, not rewrite"
-        rows = (
-            t.read()
-            .groupBy((F.col("o_orderkey") % 7).cast("long").alias("bucket"))
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("cents").cast("long").alias("cents_sum"),
-            )
-            .orderBy("bucket")
-            .collect()  # hermetic: materialize before the fixture is removed
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return local_df(spark, rows, "bucket bigint, n bigint, cents_sum bigint")
+        .orderBy("bucket")
+    )
 
 
 ORDERS_UPDATE_WHERE_SQL = """
@@ -5907,8 +5660,6 @@ ORACLES["orders_update_where"] = ORDERS_UPDATE_WHERE_SQL
 # with a full scan (ScalableSeries min/max).
 def orders_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from bears_spark.io.snapshot_table import SnapshotTable
 
@@ -5921,28 +5672,25 @@ def orders_metadata_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate",
         )
     )
-    root = tempfile.mkdtemp(prefix="magg_")
-    try:
-        t = SnapshotTable(spark, _os.path.join(root, "t"))
-        t.overwrite(o.repartitionByRange(4, "o_orderkey"))
-        # CoW delete of the bottom key quartile (bounds from a metadata
-        # read, so the query is SF-relative), then MoR-tombstone every row
-        # holding the current max cents: that file's stats now OVERSTATE it
-        k_lo, k_hi = t.stats_minmax("o_orderkey")
-        t.delete_where("o_orderkey", "<=", k_lo + (k_hi - k_lo) // 4, mode="cow")
-        mx = t.stats_minmax("cents")[1]
-        t.delete_where("cents", "=", mx, mode="mor")
-        dv_files = sum(1 for e in t.files() if e.dv)
-        assert dv_files >= 1, "MoR delete must leave a DV-bearing file"
-        n = t.count_rows()  # exact from the manifest, DVs netted out
-        mn_c, mx_c, scanned_c = t.stats_minmax("cents", return_scanned=True)
-        mn_d, mx_d, scanned_d = t.stats_minmax("o_orderdate", return_scanned=True)
-        # metadata-only except for the churned sliver
-        assert scanned_c == dv_files and scanned_d == dv_files, (
-            scanned_c, scanned_d, dv_files,
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = scoped_dir("magg_")
+    t = SnapshotTable(spark, _os.path.join(root, "t"))
+    t.overwrite(o.repartitionByRange(4, "o_orderkey"))
+    # CoW delete of the bottom key quartile (bounds from a metadata
+    # read, so the query is SF-relative), then MoR-tombstone every row
+    # holding the current max cents: that file's stats now OVERSTATE it
+    k_lo, k_hi = t.stats_minmax("o_orderkey")
+    t.delete_where("o_orderkey", "<=", k_lo + (k_hi - k_lo) // 4, mode="cow")
+    mx = t.stats_minmax("cents")[1]
+    t.delete_where("cents", "=", mx, mode="mor")
+    dv_files = sum(1 for e in t.files() if e.dv)
+    assert dv_files >= 1, "MoR delete must leave a DV-bearing file"
+    n = t.count_rows()  # exact from the manifest, DVs netted out
+    mn_c, mx_c, scanned_c = t.stats_minmax("cents", return_scanned=True)
+    mn_d, mx_d, scanned_d = t.stats_minmax("o_orderdate", return_scanned=True)
+    # metadata-only except for the churned sliver
+    assert scanned_c == dv_files and scanned_d == dv_files, (
+        scanned_c, scanned_d, dv_files,
+    )
     return local_df(spark, 
         [(n, mn_c, mx_c, mn_d, mx_d)],
         "n bigint, min_cents bigint, max_cents bigint, min_date timestamp, max_date timestamp",

@@ -36,7 +36,7 @@ def events_ts_encoding(path: str) -> str:
     Returns one of ``"ns"`` (TIMESTAMP(NANOS) — illegal in vanilla Spark 4,
     needs the nanosAsLong conf), ``"ntz"`` (naive timestamp, any sub-second
     unit), ``"tz"`` (instant timestamp), or ``"unknown"`` if the footer can't
-    be read. Footer-only: no data pages are touched.
+    be read or has no ``ts`` field. Footer-only: no data pages are touched.
     """
     try:
         import pyarrow.dataset as ds
@@ -50,7 +50,7 @@ def events_ts_encoding(path: str) -> str:
             return "ntz"
         if unit is not None:
             return "tz"
-    except Exception:
+    except (OSError, ValueError, KeyError):  # no footer, not parquet (ArrowInvalid), no ts
         pass
     return "unknown"
 

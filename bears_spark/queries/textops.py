@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bears_spark.caching import scoped_dir
 from bears_spark.functions import dedup as dd
 from bears_spark.functions import similarity as sim
 from bears_spark.functions.text import (
@@ -2576,23 +2577,17 @@ ORACLES["retrieval_eval_report"] = RETRIEVAL_EVAL_SQL
 # hashes) and joins odd against even directly — same pairs, proving the
 # persisted index changes the cost model, not the answer.
 def dedup_lsh_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from bears_spark.io.lsh_index import LSHIndexTable
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    idx = LSHIndexTable(spark, tempfile.mkdtemp(prefix="lshidx_"))
-    try:
-        idx.build(corpus, "doc_id", "text", num_hashes=_NUM_HASHES, bands=_BANDS, ngram_n=_NGRAM_N)
-        pairs = [
-            (r["new_id"], r["index_id"])
-            for r in idx.candidates_for(batch, "doc_id", "text").collect()
-        ]
-    finally:
-        shutil.rmtree(idx.path, ignore_errors=True)
+    idx = LSHIndexTable(spark, scoped_dir("lshidx_"))
+    idx.build(corpus, "doc_id", "text", num_hashes=_NUM_HASHES, bands=_BANDS, ngram_n=_NGRAM_N)
+    pairs = [
+        (r["new_id"], r["index_id"])
+        for r in idx.candidates_for(batch, "doc_id", "text").collect()
+    ]
     out = local_df(spark, pairs, "new_id bigint, index_id bigint") if pairs else (
         local_df(spark, [], "new_id bigint, index_id bigint")
     )

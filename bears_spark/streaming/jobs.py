@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from bears_spark.caching import on_release
 from bears_spark.localframe import local_df
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -159,10 +160,16 @@ def run_to_memory(df: DataFrame, sink: str, output_mode: str = "append") -> Data
     """Run a streaming DataFrame to completion into the memory sink ``sink``
     and return that table. Grading and tests only: the memory sink collects
     every row to the driver (``complete`` mode re-collects the full result
-    each trigger); production jobs write through ``run_to_parquet``."""
+    each trigger); production jobs write through ``run_to_parquet``.
+
+    The sink is a temp view holding every row on the driver. Its drop is
+    registered with ``caching``, so the caller's ``release_scoped_caches()``
+    after consuming the result frees it; a view read after that drain is gone."""
+    spark = df.sparkSession
     writer = df.writeStream.format("memory").queryName(sink).outputMode(output_mode)
+    on_release(lambda: spark.catalog.dropTempView(sink))  # also when the stream fails
     finish(writer.trigger(availableNow=True).start())
-    return df.sparkSession.table(sink)
+    return spark.table(sink)
 
 
 def maintain_rollup_stream(

@@ -23,3 +23,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _drain_query_scope():
+    """Release what each test's queries registered (caches, scratch dirs,
+    sink views) once the test is done with their results."""
+    yield
+    from bears_spark.caching import release_scoped_caches
+
+    release_scoped_caches()

@@ -33,7 +33,6 @@ def test_merged_span_is_the_clipped_union():
 
 def test_block_runs_n_times_with_caches_alive_then_drains(spark, sf_dir):
     query = entrymod.queries()["dedup_semantic_clusters"]
-    caching.release_scoped_caches()  # earlier tests may leave scoped caches behind
     before = _persistent_rdds(spark)
     live = []
 
@@ -52,7 +51,6 @@ def test_block_runs_n_times_with_caches_alive_then_drains(spark, sf_dir):
 def test_attribute_splits_build_jobs_from_action_jobs(spark, sf_dir):
     sc = spark.sparkContext
     fn = entrymod.queries()["ann_ivfpq_topk"]  # its build collects the k-means fit
-    caching.release_scoped_caches()
     before = _persistent_rdds(spark)
     sc.setJobGroup("measure-attrib", "attribute one run")
     try:

@@ -120,8 +120,8 @@ class _BucketRelativeStore(InMemoryCommitStore):
     def read(self, key: str) -> bytes:
         return super().read(self._key(key))
 
-    def list_prefix(self, prefix: str) -> list[str]:
-        return super().list_prefix(self._key(prefix))
+    def list_prefix(self, prefix: str, start_after: str | None = None) -> list[str]:
+        return super().list_prefix(self._key(prefix), start_after)
 
 
 def test_commit_store_metafs_bucket_relative_keys():

@@ -67,24 +67,18 @@ def test_readme_query_count_matches_declared():
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_runs(spark, sf_dir, name):
-    from bears_spark.caching import release_scoped_caches
-
-    try:
-        df = entrymod.queries()[name](spark, sf_dir)
-        n = df.count()
-        assert n >= 0
-        # schema must be stable (no unresolved columns)
-        assert df.columns
-        # a query that runs a stream runs it to completion and stops it
-        assert not spark.streams.active, [q.name for q in spark.streams.active]
-    finally:
-        release_scoped_caches()
+    df = entrymod.queries()[name](spark, sf_dir)
+    n = df.count()
+    assert n >= 0
+    # schema must be stable (no unresolved columns)
+    assert df.columns
+    # a query that runs a stream runs it to completion and stops it
+    assert not spark.streams.active, [q.name for q in spark.streams.active]
 
 
 def test_hive_partition_pruning_stays_on_arrow_and_prunes(spark, sf_dir):
     """The read-back `day` partition column is a date; the query must still
-    prune on it and hand local_df strings, so createDataFrame keeps the Arrow
-    path instead of warning and falling back to pickled rows."""
+    prune on it and return `day` as a string, with no Arrow fallback warning."""
     import re
     import warnings
 
@@ -136,6 +130,21 @@ def test_load_table_normalizes_all_ts_encodings(spark, tmp_path):
 
         got[name] = [r[0] for r in df.select(F.unix_micros("ts")).orderBy("event_id").collect()]
     assert got["ns"] == got["ntz"] == got["tz"] == wall_us
+
+
+def test_events_ts_encoding_unknown_for_unreadable_or_ts_less_files(tmp_path):
+    """A file that is not parquet and a parquet file without ``ts`` are the
+    named fallbacks: both sniff as "unknown" instead of raising."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bears_spark.queries.tables import events_ts_encoding
+
+    (tmp_path / "junk.parquet").write_text("not parquet")
+    pq.write_table(pa.table({"event_id": [1]}), str(tmp_path / "no_ts.parquet"))
+    assert events_ts_encoding(str(tmp_path / "junk.parquet")) == "unknown"
+    assert events_ts_encoding(str(tmp_path / "no_ts.parquet")) == "unknown"
+    assert events_ts_encoding(str(tmp_path / "absent.parquet")) == "unknown"
 
 
 def test_register_tables_sql_passthrough(spark, sf_dir):
