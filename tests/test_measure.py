@@ -12,8 +12,12 @@ from tools.measure import _merged, attribute, block
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. Tests compare id sets, not counts:
+    the context cleaner unpersists an unreachable RDD an earlier test left
+    behind (a ``localCheckpoint`` intermediate) whenever the JVM collects it,
+    so the count can drop in the middle of a test."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_bench_import_leaves_the_library_unloaded():
@@ -33,7 +37,7 @@ def test_merged_span_is_the_clipped_union():
 
 def test_block_runs_n_times_with_caches_alive_then_drains(spark, sf_dir):
     query = entrymod.queries()["dedup_semantic_clusters"]
-    before = _persistent_rdds(spark)
+    before = _persisted_rdd_ids(spark)
     live = []
 
     def fn(s, d):
@@ -45,13 +49,13 @@ def test_block_runs_n_times_with_caches_alive_then_drains(spark, sf_dir):
     assert len(walls) == 3 and all(w > 0 for w in walls)
     assert live[0] > 0 and live == sorted(live)  # scoped caches survive across the runs
     assert caching._SCOPED == []
-    assert _persistent_rdds(spark) == before
+    assert _persisted_rdd_ids(spark) <= before  # nothing the test persisted survives the drain
 
 
 def test_attribute_splits_build_jobs_from_action_jobs(spark, sf_dir):
     sc = spark.sparkContext
     fn = entrymod.queries()["ann_ivfpq_topk"]  # its build collects the k-means fit
-    before = _persistent_rdds(spark)
+    before = _persisted_rdd_ids(spark)
     sc.setJobGroup("measure-attrib", "attribute one run")
     try:
         r = attribute(spark, fn, sf_dir)
@@ -72,4 +76,4 @@ def test_attribute_splits_build_jobs_from_action_jobs(spark, sf_dir):
     assert r["stages"]
     for row in r["stages"]:
         assert row["job"] in (build if row["layer"] == "build" else action)
-    assert _persistent_rdds(spark) == before
+    assert _persisted_rdd_ids(spark) <= before  # nothing the test persisted survives the drain
