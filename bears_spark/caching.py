@@ -7,6 +7,7 @@ table in, or the memory-sink view a stream wrote to must outlive the
 function. Each of them registers one release action here instead:
 
 - :func:`scoped_persist` registers the unpersist of its cache;
+- :func:`scoped_checkpoint` registers the release of its local checkpoint;
 - :func:`scoped_dir` makes a scratch directory and registers its removal;
 - ``streaming.jobs.run_to_memory`` registers the drop of its sink view.
 
@@ -31,6 +32,7 @@ import shutil
 import tempfile
 from typing import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _SCOPED: list[Callable[[], object]] = []
@@ -72,6 +74,20 @@ def scoped_persist(df: DataFrame, storage_level=None, eager: bool = False) -> Da
     return df
 
 
+def scoped_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()`` (eager) whose blocks the next drain frees; a
+    fixpoint loop frees each round it supersedes with :func:`release_checkpoint`."""
+    out = df.localCheckpoint()
+    on_release(lambda: release_checkpoint(out))
+    return out
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free a local checkpoint's blocks now: its ``LogicalRDD`` holds a
+    persisted RDD that ``DataFrame.unpersist`` does not reach."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def scoped_dir(prefix: str) -> str:
     """A fresh scratch directory (``tempfile.mkdtemp``) that the next drain removes."""
     path = tempfile.mkdtemp(prefix=prefix)
@@ -89,17 +105,18 @@ def release_scoped_caches() -> int:
 
     Call after the query's result has been consumed: a frame still held
     afterwards may read a cache, directory or sink view that is gone. An
-    action that fails (session already stopped, directory already removed)
-    does not stop the rest."""
-    n = len(_SCOPED)
-    for release in _SCOPED:
-        try:
-            release()
-        except Exception:
-            pass  # already released, or its session is gone: nothing left to free
+    action whose resource is already gone (directory already removed:
+    ``FileNotFoundError``; session already stopped: ``Py4JError``) does not
+    stop the rest. Any other error propagates, with the list already cleared."""
+    actions = list(_SCOPED)
     _SCOPED.clear()
     _MATERIALIZED.clear()
-    return n
+    for release in actions:
+        try:
+            release()
+        except (FileNotFoundError, Py4JError):
+            pass  # nothing left to free
+    return len(actions)
 
 
 atexit.register(release_scoped_caches)

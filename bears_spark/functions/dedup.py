@@ -558,16 +558,17 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     Each round: every node adopts the min label in its neighborhood
     (including its own). Converges in O(graph diameter) rounds — dup-pair
     graphs are shallow (chains of a few hops), so typically 2-4 rounds.
-    Labels are checkpointed per round to cut the growing lineage — at
-    cluster scale use localCheckpoint(eager=True) exactly as here.
+    Labels are locally checkpointed per round to cut the growing lineage;
+    a superseded round's blocks are freed once the change test has read it.
     """
-    edges = (
+    from bears_spark.caching import release_checkpoint, scoped_checkpoint, scoped_persist
+
+    edges = scoped_persist(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        .persist()
     )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id")).localCheckpoint()
+    labels = scoped_checkpoint(edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id")))
 
     for _ in range(max_iter):
         neighbor_min = (
@@ -575,21 +576,19 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
+        new_labels = scoped_checkpoint(
+            labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
                 "id",
                 F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias("comp"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.alias("n").join(
             labels.alias("o"), on="id"
         ).filter(F.col("n.comp") != F.col("o.comp")).limit(1).count()
+        release_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
     return labels.select("id", F.col("comp").alias("component"))
 
 

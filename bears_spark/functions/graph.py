@@ -6,8 +6,9 @@ PageRank here is the canonical "iterate joins with lineage checkpointing"
 pattern (Page et al. 1999; same shape GraphX/Pregel lowers to): each
 iteration is one join (ranks onto edges) + one aggregation (sum incoming
 mass), both shuffling on the node id — so pre-partitioning edges and ranks
-on id keeps every round co-located. localCheckpoint per round truncates the
-growing plan exactly as in connected_components.
+on id keeps every round co-located. A local checkpoint per round truncates
+the growing plan exactly as in connected_components, and each superseded
+round's blocks are freed as soon as the next round is built.
 
 The reference has no graph operators at all — beyond-reference capability.
 """
@@ -16,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bears_spark.caching import release_checkpoint, scoped_checkpoint, scoped_persist
 
 
 def pagerank(
@@ -41,15 +44,17 @@ def pagerank(
     reuse one partitioning. The dangling-mass term is a scalar agg collected
     per round (one driver float), not a shuffle.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().persist()
-    nodes = e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id"))).distinct().persist()
+    e = scoped_persist(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes = scoped_persist(e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id"))).distinct())
     n = nodes.count()
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # contribution edges: src, dst, 1/outdeg — static across iterations
-    contrib_e = e.join(outdeg, "src").select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")).persist()
+    contrib_e = scoped_persist(
+        e.join(outdeg, "src").select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+    )
     has_out = outdeg.select(F.col("src").alias("id"))
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = scoped_checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
     base = (1.0 - damping) / n
     for _ in range(num_iter):
         dangling = (
@@ -60,20 +65,17 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("w")).alias("mass"))
         )
-        ranks = (
-            nodes.join(incoming, nodes.id == incoming.dst, "left")
-            .select(
+        new_ranks = scoped_checkpoint(
+            nodes.join(incoming, nodes.id == incoming.dst, "left").select(
                 "id",
                 (
                     F.lit(base)
                     + F.lit(damping) * (F.coalesce(F.col("mass"), F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
-    e.unpersist()
-    contrib_e.unpersist()
-    nodes.unpersist()
+        release_checkpoint(ranks)
+        ranks = new_ranks
     return ranks
 
 
@@ -96,8 +98,6 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    from bears_spark.caching import scoped_persist
-
     e = scoped_persist(e)
     e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))

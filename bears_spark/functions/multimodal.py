@@ -241,8 +241,8 @@ def _pil_decode(content: bytes) -> "np.ndarray | None":
         import io
 
         return np.asarray(pil.open(io.BytesIO(content)).convert("RGB")).copy()
-    except Exception:
-        return None  # truncated/exotic payload: let the stdlib codec try
+    except (OSError, ValueError):
+        return None  # unidentified/truncated payload: the stdlib codec tries; a decompression bomb raises
 
 
 def decode_image_batch(content: bytes, fake: bool = False) -> np.ndarray:
@@ -346,8 +346,8 @@ def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
 
             arr, rate = sf.read(_io.BytesIO(content), dtype="float64", always_2d=True)
             return arr, rate
-        except Exception:
-            pass  # unrecognized/truncated payload: stdlib codecs try next
+        except RuntimeError:
+            pass  # libsndfile rejected the payload (LibsndfileError): stdlib codecs try next
     if content[:4] == b"fLaC":
         from bears_spark.functions.flac import decode_flac
 

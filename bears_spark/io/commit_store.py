@@ -225,7 +225,53 @@ def _strip_object_uri(key: str, scheme_prefixes: tuple[str, ...], bucket: str) -
     return key.lstrip("/")
 
 
-class S3CommitStore(CommitStore):
+class _ObjectCommitStore(CommitStore):
+    """The conditional-put retry loop the object stores share.
+
+    A timeout or 5xx on the conditional put is AMBIGUOUS — the put may have
+    landed before the response was lost — so every retry first re-reads the
+    key and compares payloads: equal -> our commit landed (True, no duplicate
+    version); different -> another committer won (False, a real conflict);
+    absent -> the put never landed, retry it. A subclass classifies its
+    client's errors: ``_is_retryable``, ``_key_exists`` (412) and
+    ``_lost_race`` (another conditional write is in flight)."""
+
+    RETRIES = 4
+    RETRY_BACKOFF = 0.2  # seconds, doubled per attempt
+
+    def _lost_race(self, exc: Exception) -> bool:
+        return False
+
+    def _conditional_put(self, key: str, data: bytes, put) -> bool:
+        for attempt in range(self.RETRIES + 1):
+            try:
+                put()
+                return True
+            except Exception as exc:
+                if self._lost_race(exc) or (attempt == 0 and self._key_exists(exc)):
+                    return False
+                if self._key_exists(exc):
+                    # a prior attempt on THIS call failed ambiguously; the 412
+                    # may be our own landed payload — resolve by content
+                    try:
+                        return self.read(key) == data
+                    except FileNotFoundError:
+                        return False
+                if not self._is_retryable(exc) or attempt == self.RETRIES:
+                    raise
+            time.sleep(self.RETRY_BACKOFF * (2**attempt))
+            try:
+                existing = self.read(key)
+            except Exception as exc:
+                # the put never landed, or the read is flaky too: retry the put
+                if isinstance(exc, FileNotFoundError) or self._is_retryable(exc):
+                    continue
+                raise
+            return existing == data
+        raise RuntimeError("unreachable")  # pragma: no cover
+
+
+class S3CommitStore(_ObjectCommitStore):
     """Object-store commit protocol over S3 conditional writes.
 
     ``put_if_absent`` is PutObject with ``IfNoneMatch="*"`` — S3 returns
@@ -260,61 +306,33 @@ class S3CommitStore(CommitStore):
     def _key(self, key: str) -> str:
         return _strip_object_uri(key, self._SCHEMES, self.bucket)
 
-    # transient server-side failures worth retrying with backoff. A timeout
-    # (or a 500 on a PUT) is AMBIGUOUS — the conditional put may have landed
-    # before the response was lost — so every retry first re-reads the key
-    # and compares payloads: equal -> our commit landed (True, no duplicate
-    # version); different -> another committer won (False, a real conflict);
-    # absent -> the put never landed, retry it.
+    # transient server-side failures worth retrying with backoff
     _RETRYABLE_CODES = ("InternalError", "ServiceUnavailable", "SlowDown",
                         "RequestTimeout", "500", "503")
-    RETRIES = 4
-    RETRY_BACKOFF = 0.2  # seconds, doubled per attempt
 
     @staticmethod
     def _error_code(exc: Exception) -> str:
         err = getattr(exc, "response", None) or {}
         return str(err.get("Error", {}).get("Code", "")) if isinstance(err, dict) else ""
 
-    @classmethod
-    def _is_retryable(cls, exc: Exception) -> bool:
+    def _is_retryable(self, exc: Exception) -> bool:
         return (
-            cls._error_code(exc) in cls._RETRYABLE_CODES
+            self._error_code(exc) in self._RETRYABLE_CODES
             or "Timeout" in type(exc).__name__  # botocore Read/ConnectTimeoutError
         )
 
+    def _key_exists(self, exc: Exception) -> bool:
+        return self._error_code(exc) == "PreconditionFailed"  # 412
+
+    def _lost_race(self, exc: Exception) -> bool:
+        return self._error_code(exc) == "ConditionalRequestConflict"  # 409
+
     def put_if_absent(self, key: str, data: bytes) -> bool:
-        for attempt in range(self.RETRIES + 1):
-            try:
-                self.client.put_object(
-                    Bucket=self.bucket, Key=self._key(key), Body=data, IfNoneMatch="*"
-                )
-                return True
-            except Exception as exc:
-                code = self._error_code(exc)
-                if code in (
-                    "PreconditionFailed",  # 412: key exists
-                    "ConditionalRequestConflict",  # 409: concurrent conditional write
-                ):
-                    if attempt == 0 or code != "PreconditionFailed":
-                        return False
-                    # a prior attempt on THIS call failed ambiguously; the 412
-                    # may be our own landed payload — resolve by content
-                    try:
-                        return self.read(key) == data
-                    except FileNotFoundError:
-                        return False
-                if not self._is_retryable(exc) or attempt == self.RETRIES:
-                    raise
-                time.sleep(self.RETRY_BACKOFF * (2**attempt))
-                try:
-                    existing = self.read(key)
-                except FileNotFoundError:
-                    continue  # the ambiguous put never landed: retry it
-                except Exception:
-                    continue  # read also flaky: retry the conditional put
-                return existing == data
-        raise RuntimeError("unreachable")  # pragma: no cover
+        return self._conditional_put(
+            key,
+            data,
+            lambda: self.client.put_object(Bucket=self.bucket, Key=self._key(key), Body=data, IfNoneMatch="*"),
+        )
 
     def replace(self, key: str, data: bytes) -> None:
         self.client.put_object(Bucket=self.bucket, Key=self._key(key), Body=data)
@@ -352,7 +370,7 @@ class S3CommitStore(CommitStore):
         self.client.delete_object(Bucket=self.bucket, Key=self._key(key))
 
 
-class GCSCommitStore(CommitStore):
+class GCSCommitStore(_ObjectCommitStore):
     """Object-store commit protocol over GCS generation preconditions:
     ``put_if_absent`` uploads with ``if_generation_match=0`` (the object may
     only be created, never replaced — GCS's native CAS; 412
@@ -377,43 +395,16 @@ class GCSCommitStore(CommitStore):
     def _key(self, key: str) -> str:
         return _strip_object_uri(key, self._SCHEMES, self.bucket)
 
-    # same ambiguous-outcome contract as S3CommitStore: 5xx/timeout on the
-    # conditional upload is resolved by re-read + payload compare, never by
-    # assuming the put failed (it may have landed before the response died)
-    RETRIES = 4
-    RETRY_BACKOFF = 0.2
-
-    @staticmethod
-    def _is_retryable(exc: Exception) -> bool:
+    def _is_retryable(self, exc: Exception) -> bool:
         code = getattr(exc, "code", None)
         return code in (500, 502, 503, 504) or "Timeout" in type(exc).__name__
 
+    def _key_exists(self, exc: Exception) -> bool:
+        return getattr(exc, "code", None) == 412 or type(exc).__name__ == "PreconditionFailed"
+
     def put_if_absent(self, key: str, data: bytes) -> bool:
         blob = self.bucket_obj.blob(self._key(key))
-        for attempt in range(self.RETRIES + 1):
-            try:
-                blob.upload_from_string(data, if_generation_match=0)
-                return True
-            except Exception as exc:
-                code = getattr(exc, "code", None)
-                if code == 412 or type(exc).__name__ == "PreconditionFailed":
-                    if attempt == 0:
-                        return False
-                    try:
-                        return self.read(key) == data
-                    except FileNotFoundError:
-                        return False
-                if not self._is_retryable(exc) or attempt == self.RETRIES:
-                    raise
-                time.sleep(self.RETRY_BACKOFF * (2**attempt))
-                try:
-                    existing = self.read(key)
-                except FileNotFoundError:
-                    continue
-                except Exception:
-                    continue
-                return existing == data
-        raise RuntimeError("unreachable")  # pragma: no cover
+        return self._conditional_put(key, data, lambda: blob.upload_from_string(data, if_generation_match=0))
 
     def replace(self, key: str, data: bytes) -> None:
         self.bucket_obj.blob(self._key(key)).upload_from_string(data)

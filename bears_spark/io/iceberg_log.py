@@ -276,25 +276,26 @@ _OPS = {
 }
 
 
+# struct format of each fixed-width Iceberg type's single-value serialization
+_BOUND_FMT = {
+    "int": "<i", "date": "<i", "long": "<q", "timestamp": "<q", "timestamptz": "<q",
+    "float": "<f", "double": "<d",
+}
+
+
 def _decode_bound(raw: bytes, ice_type: str):
     """Iceberg single-value binary serialization (spec "Binary single-value
     serialization"): little-endian fixed-width numerics, UTF-8 strings.
     Returns None (conservative: no pruning) for types not decoded here."""
     try:
-        if ice_type == "int" or ice_type == "date":
-            return _struct.unpack("<i", raw)[0]
-        if ice_type == "long" or ice_type in ("timestamp", "timestamptz"):
-            return _struct.unpack("<q", raw)[0]
-        if ice_type == "float":
-            return _struct.unpack("<f", raw)[0]
-        if ice_type == "double":
-            return _struct.unpack("<d", raw)[0]
+        if ice_type in _BOUND_FMT:
+            return _struct.unpack(_BOUND_FMT[ice_type], raw)[0]
         if ice_type == "string":
             return raw.decode("utf-8")
         if ice_type == "boolean":
             return bool(raw[0])
-    except (Exception):
-        return None
+    except (_struct.error, UnicodeDecodeError, IndexError):
+        return None  # malformed bound: no pruning
     return None
 
 
@@ -1163,20 +1164,15 @@ _MANIFEST_AVRO_SCHEMA = {
 def _encode_bound(value, ice_type: str) -> bytes | None:
     """Inverse of :func:`_decode_bound` for the exporter; None = no bound."""
     try:
-        if ice_type in ("int", "date"):
-            return _struct.pack("<i", int(value))
-        if ice_type in ("long", "timestamp", "timestamptz"):
-            return _struct.pack("<q", int(value))
-        if ice_type == "float":
-            return _struct.pack("<f", float(value))
-        if ice_type == "double":
-            return _struct.pack("<d", float(value))
+        if ice_type in _BOUND_FMT:
+            fmt = _BOUND_FMT[ice_type]
+            return _struct.pack(fmt, float(value) if fmt in ("<f", "<d") else int(value))
         if ice_type == "string":
             return str(value).encode("utf-8")
         if ice_type == "boolean":
             return bytes([1 if value else 0])
-    except Exception:
-        return None
+    except (TypeError, ValueError, OverflowError, _struct.error):
+        return None  # a value the type cannot carry: no bound
     return None
 
 _MLIST_AVRO_SCHEMA = {

@@ -66,6 +66,7 @@ def row_group_stats(spark: SparkSession, path: str, columns: list[str]) -> DataF
     cols = list(columns)
 
     def _read_footers(batches: Iterable[pd.DataFrame]):
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         for b in batches:
@@ -84,7 +85,7 @@ def row_group_stats(spark: SparkSession, path: str, columns: list[str]) -> DataF
                             st = cc.statistics
                             mn = None if st is None else str(st.min)
                             mx = None if st is None else str(st.max)
-                        except Exception:
+                        except pa.ArrowNotImplementedError:
                             # pyarrow can't extract stats for every type
                             # (e.g. some decimals) — report them as absent
                             mn = mx = None

@@ -217,10 +217,8 @@ class ArrowMetaFS(MetaFS):
     handles are cached per scheme+authority."""
 
     def __init__(self) -> None:
-        try:
-            from pyarrow import fs as pafs  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - pyarrow is baked in
-            raise ImportError("ArrowMetaFS needs pyarrow") from exc
+        from pyarrow import fs as pafs
+
         self._pafs = pafs
         # scheme+authority -> (filesystem handle, keeps_netloc flag):
         # from_uri() is paid ONCE per scheme+authority; later paths under the

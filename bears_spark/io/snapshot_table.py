@@ -54,6 +54,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from bears_spark.io.commit_store import CommitConflictError, CommitStore, LocalCommitStore
@@ -816,7 +818,7 @@ class SnapshotTable:
                 # references through projections for Filter (so a renamed
                 # column would still "resolve"); a Project does not
                 probe.select(F.expr(cexpr)).schema  # noqa: B018 — forces analysis
-            except Exception:
+            except AnalysisException:
                 raise ValueError(
                     f"cannot {verb}: CHECK constraint {cname!r} ({cexpr}) "
                     f"references it; drop the constraint first"
@@ -1017,10 +1019,10 @@ class SnapshotTable:
                         if st is None or not st.has_min_max:
                             continue
                         raw_mn, raw_mx = st.min, st.max
-                    except Exception:
-                        # pyarrow raises ArrowNotImplementedError for types it
-                        # can't extract stats for (e.g. some decimals) — a
-                        # stat is an optimization, never a requirement
+                    except pa.ArrowNotImplementedError:
+                        # types pyarrow can't extract stats for (e.g. some
+                        # decimals): a stat is an optimization, never a
+                        # requirement
                         continue
                     col = c.path_in_schema
                     if col in dropped:

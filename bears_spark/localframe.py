@@ -5,23 +5,28 @@ PICKLED rows over ``defaultParallelism`` slices: every downstream action
 (count/collect/join build) then launches one Python-worker task per slice to
 rebuild a handful of rows — measured 0.7-4 s per action for a 3-row frame on
 local[32], ~zero compute (guide §4: the JVM↔Python boundary is the cost, and
-this shape pays it 32× for nothing). Routing the same rows through a pandas
-DataFrame takes Spark's Arrow conversion instead: the data crosses into the
-JVM ONCE at creation, actions read Arrow batches JVM-side with no Python
-workers — measured 40-280 ms for the same frame, and the partition count
-follows the row count, not the core count.
+this shape pays it 32× for nothing).
 
-``local_df`` is therefore the required constructor for every small
-driver-built frame in a query path (fit state, post-collect result shaping,
-literal dimension tables). Semantics match ``createDataFrame(rows, schema)``:
-positional field mapping, the explicit schema is authoritative. Any
-conversion the pandas/Arrow path cannot express falls back to the classic
-list path, so behavior is never changed — only the transport.
+``local_df`` has one transport instead: the rows become a ``pyarrow.Table``
+built against the declared schema's Arrow schema, which crosses into the JVM
+ONCE. PySpark routes a ``pa.Table`` through Arrow whatever the session conf
+says, so a vanilla session builds the same frame; actions read Arrow batches
+JVM-side with no Python workers, and ``coalesce(1)`` makes each one task.
+No NaN scan is needed: ``pa.array`` converts value by value, so a float NaN
+stays NaN and None becomes null, as in ``createDataFrame(rows, schema)`` —
+only pandas' conversion conflates the two.
+
+``local_df`` is the required constructor for every small driver-built frame
+in a query path (fit state, post-collect result shaping, literal dimension
+tables). Positional field mapping; the explicit schema is authoritative; a
+value Arrow cannot convert to its declared type raises.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -29,38 +34,12 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     ``rows``: sequence of tuples/Rows (positionally matching ``schema``).
     ``schema``: DDL string or StructType — authoritative, same contract as
-    ``createDataFrame``. Falls back to ``createDataFrame(rows, schema)`` for
-    anything the Arrow path cannot convert (exotic types, malformed rows).
+    ``createDataFrame``, whose DDL parser reads the string form.
     """
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
     rows = list(rows)
-    if rows and not _any_nan(rows):
-        try:
-            import pandas as pd
-
-            # dtype=object so None survives as null through Arrow (a typed
-            # pandas column would coerce None to NaN, which Spark keeps as a
-            # NaN VALUE in double columns — the list path yields null there).
-            # coalesce(1): Arrow slicing still makes one partition per row
-            # for tiny frames; a single partition makes every action one
-            # task. Narrow dependency, no shuffle.
-            pdf = pd.DataFrame([tuple(r) for r in rows], dtype=object)
-            return spark.createDataFrame(pdf, schema=schema).coalesce(1)
-        except Exception:
-            pass  # fall through to the reference path
-    return spark.createDataFrame(rows, schema)
-
-
-def _any_nan(rows) -> bool:
-    """Arrow's from_pandas maps float NaN to null; the classic list path
-    keeps it as a NaN value. Rows carrying a literal NaN take the classic
-    path so the constructed frame is value-identical either way."""
-    def scan(v) -> bool:
-        if isinstance(v, float):
-            return v != v
-        if isinstance(v, (list, tuple)):
-            return any(scan(x) for x in v)
-        if isinstance(v, dict):
-            return any(scan(x) for x in v.values())
-        return False
-
-    return any(scan(v) for r in rows for v in r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema).coalesce(1)

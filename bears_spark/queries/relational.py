@@ -1461,51 +1461,30 @@ ORACLES["orders_change_feed"] = ORDERS_CHANGE_FEED_SQL
 
 
 # --------------------------------------------------------------------------
-# orders_incremental_rollup: incrementally-maintained materialized rollup
-# (io/incremental_view.py) — a per-status sum/count view over a snapshot
-# table, refreshed O(changed files) from the manifest file diff through an
-# append AND a copy-on-write delete (the delete rewrites an overlapping
-# file: the signed-union math must net out the surviving rows and remove
-# exactly the deleted ones). The oracle recomputes the final state from
-# scratch: the incremental view must be value-identical to a full rebuild.
-_IV_CUT = "1997-01-01"
-_IV_CUT2 = "1999-01-01"
-
-
+# orders_incremental_rollup: continuous-aggregate maintenance — rollup
+# states built on two arbitrary halves of orders (even/odd orderkey) and
+# MERGED must equal the direct aggregate over the whole table, exactly
+# (decimal sums make the merge algebraic, not approximate). The oracle IS
+# the direct aggregate — it never sees the split.
 def orders_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bears_spark.io.incremental_view import IncrementalAggView
-    from bears_spark.io.snapshot_table import SnapshotTable
+    from bears_spark.functions.rollup import merge_rollup_states, rollup_result, rollup_state
 
     o = load_table(spark, sf_dir, "orders")
-    root = scoped_dir("incr_view_")
-    base = SnapshotTable(spark, root + "/base")
-    base.overwrite(o.filter(F.col("o_orderdate") < _IV_CUT))
-    view = IncrementalAggView(
-        spark, base, root + "/view", group_cols=["o_orderstatus"], sum_cols=["o_totalprice"]
-    )
-    view.refresh()  # full build at v1
-    base.append(o.filter(F.col("o_orderdate") >= _IV_CUT))
-    view.refresh()  # incremental: added files only
-    base.delete_where("o_orderdate", ">=", _IV_CUT2)
-    view.refresh()  # incremental: rewrite = removed + added files
-    return (
-        view.read()
-        .select(
-            "o_orderstatus",
-            F.col("n_rows").alias("n"),
-            F.round(F.col("o_totalprice_sum").cast("double"), 6).alias("total"),
-            F.round(F.col("o_totalprice_avg").cast("double"), 6).alias("avg_price"),
-        )
-        .orderBy("o_orderstatus")
-    )
+    even = o.filter(F.col("o_orderkey") % 2 == 0)
+    odd = o.filter(F.col("o_orderkey") % 2 == 1)
+    s1 = rollup_state(even, ["o_orderpriority"], "o_totalprice")
+    s2 = rollup_state(odd, ["o_orderpriority"], "o_totalprice")
+    return rollup_result(merge_rollup_states(s1, s2)).orderBy("o_orderpriority")
 
 
-ORDERS_INCR_ROLLUP_SQL = f"""
-SELECT o_orderstatus, count(*) AS n,
-       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE), 6) AS total,
-       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) / count(*) AS DOUBLE), 6) AS avg_price
-FROM orders WHERE o_orderdate < '{_IV_CUT2}'
-GROUP BY o_orderstatus ORDER BY o_orderstatus
+ORDERS_INCR_ROLLUP_SQL = """
+SELECT o_orderpriority,
+       count(o_totalprice) AS n,
+       CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS total,
+       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) / count(o_totalprice), 6) AS avg,
+       min(o_totalprice) AS min_v,
+       max(o_totalprice) AS max_v
+FROM orders GROUP BY 1 ORDER BY 1
 """
 
 QUERIES["orders_incremental_rollup"] = orders_incremental_rollup

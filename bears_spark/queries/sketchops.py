@@ -247,34 +247,6 @@ FROM regs GROUP BY 1 ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# orders_incremental_rollup: continuous-aggregate maintenance — rollup
-# states built on two arbitrary halves of orders (even/odd orderkey) and
-# MERGED must equal the direct aggregate over the whole table, exactly
-# (decimal sums make the merge algebraic, not approximate). The oracle IS
-# the direct aggregate — it never sees the split.
-def orders_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bears_spark.functions.rollup import merge_rollup_states, rollup_result, rollup_state
-
-    o = load_table(spark, sf_dir, "orders")
-    even = o.filter(F.col("o_orderkey") % 2 == 0)
-    odd = o.filter(F.col("o_orderkey") % 2 == 1)
-    s1 = rollup_state(even, ["o_orderpriority"], "o_totalprice")
-    s2 = rollup_state(odd, ["o_orderpriority"], "o_totalprice")
-    return rollup_result(merge_rollup_states(s1, s2)).orderBy("o_orderpriority")
-
-
-ORDERS_INCR_ROLLUP_SQL = """
-SELECT o_orderpriority,
-       count(o_totalprice) AS n,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) AS total,
-       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) / count(o_totalprice), 6) AS avg,
-       min(o_totalprice) AS min_v,
-       max(o_totalprice) AS max_v
-FROM orders GROUP BY 1 ORDER BY 1
-"""
-
-
-# --------------------------------------------------------------------------
 # ev_value_hist_quantiles: p50/p90/p99 of events.value from a 100-bin
 # equi-width histogram — bounded-state quantiles whose full arithmetic
 # (binning + interpolation) an independent engine replays step by step.
@@ -426,7 +398,6 @@ GROUP BY 1 ORDER BY cnt DESC, word LIMIT 10
 QUERIES = {
     "hll_distinct_orderkeys": hll_distinct_orderkeys,
     "ev_hll_users_by_type": ev_hll_users_by_type,
-    "orders_incremental_rollup": orders_incremental_rollup,
     "ev_value_hist_quantiles": ev_value_hist_quantiles,
     "cms_user_counts": cms_user_counts,
     "bloom_pruned_nation_volume": bloom_pruned_nation_volume,
@@ -438,7 +409,6 @@ QUERIES = {
 ORACLES = {
     "hll_distinct_orderkeys": HLL_DISTINCT_SQL,
     "ev_hll_users_by_type": EV_HLL_BY_TYPE_SQL,
-    "orders_incremental_rollup": ORDERS_INCR_ROLLUP_SQL,
     "ev_value_hist_quantiles": EV_HIST_QUANTILES_SQL,
     "cms_user_counts": CMS_USER_SQL,
     "bloom_pruned_nation_volume": BLOOM_NATION_SQL,

@@ -39,6 +39,9 @@ _BASE_CONF = {
     # blocks).
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # A failed Arrow conversion raises instead of silently re-running through
+    # pickled rows (that fallback once hid a bug in events_hive_partition_pruning).
+    "spark.sql.execution.arrow.pyspark.fallback.enabled": "false",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
@@ -55,7 +58,6 @@ _BASE_CONF = {
     # NaN-vs-null rule (SURVEY.md §7 known-hard #1): bears conflates NaN/None;
     # we normalize NaN->null at ingest (see io/reader.py) and keep Spark's
     # distinction internally.
-    "spark.sql.shuffle.partitions": str(max(os.cpu_count() or 8, 8)),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     "spark.driver.maxResultSize": "8g",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
@@ -83,7 +85,13 @@ def get_session(app_name: str = "bears_spark", master: str | None = None, **extr
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in {**_BASE_CONF, **extra_conf}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in extra_conf:
+        # One shuffle partition per task slot of the master (local[4] -> 4,
+        # not the host's core count), floored at 8; AQE coalesces below that.
+        slots = spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(slots, 8)))
+    return spark
 
 
 def stop_session() -> None:

@@ -1,9 +1,8 @@
 """The query scope: what a query registers lives until the drain, and the
 drain releases all of it — caches, scratch dirs and memory-sink views.
 
-The snapshot-table ``orders_incremental_rollup`` is called from
-``queries.relational`` directly: ``queries()`` maps that name to the
-sketchops rollup, which builds no scratch dir."""
+``orders_ivm_minmax`` stands for the scratch-dir queries: it builds a
+snapshot table and an ``IncrementalAggView`` in one ``scoped_dir``."""
 
 import os
 
@@ -11,6 +10,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from py4j.protocol import Py4JError
+
 from bears_spark import caching
 from bears_spark.queries import relational
 from tools.check_correctness import compare
@@ -39,12 +40,22 @@ def test_drain_runs_every_action_even_after_one_fails():
     ran = []
 
     def boom():
-        raise RuntimeError("session already stopped")
+        raise Py4JError("session already stopped")
 
     caching.on_release(boom)
     caching.on_release(lambda: ran.append(1))
     assert caching.release_scoped_caches() == 2
     assert ran == [1]
+    assert caching.release_scoped_caches() == 0
+
+
+def test_drain_propagates_an_unnamed_error_after_clearing_the_list():
+    def boom():
+        raise KeyError("not a release failure")
+
+    caching.on_release(boom)
+    with pytest.raises(KeyError, match="not a release failure"):
+        caching.release_scoped_caches()
     assert caching.release_scoped_caches() == 0
 
 
@@ -70,7 +81,7 @@ def test_drain_releases_a_query_that_raised(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(IncrementalAggView, "refresh", refresh)
     with pytest.raises(RuntimeError, match="refresh failed"):
-        relational.orders_incremental_rollup(spark, sf_dir)
+        entrymod.queries()["orders_ivm_minmax"](spark, sf_dir)
     assert len(made) == 1 and os.listdir(made[0])  # the base table was written
     caching.release_scoped_caches()
     assert not os.path.exists(made[0])
@@ -80,11 +91,11 @@ def test_drain_releases_a_query_that_raised(spark, sf_dir, monkeypatch):
 
 def test_scratch_dir_lives_until_the_drain(spark, sf_dir, monkeypatch):
     made = _recording_scoped_dir(monkeypatch)
-    df = relational.orders_incremental_rollup(spark, sf_dir)
+    df = entrymod.queries()["orders_ivm_minmax"](spark, sf_dir)
     assert len(made) == 1 and os.path.isdir(made[0])
     con = duckdb.connect()
     con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf_dir}/orders.parquet')")
-    ok, msg = compare(df.toPandas(), con.sql(relational.ORACLES["orders_incremental_rollup"]).df())
+    ok, msg = compare(df.toPandas(), con.sql(entrymod.oracle_sql()["orders_ivm_minmax"]).df())
     assert ok, msg
     assert os.path.isdir(made[0])
     caching.release_scoped_caches()

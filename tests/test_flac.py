@@ -317,6 +317,15 @@ def test_native_soundfile_preferred_and_fallback(monkeypatch):
     assert rate2 == 8000 and arr2.shape == (256, 1)
     assert np.allclose(arr2[:, 0] * (1 << 15), pcm[:, 0])
 
+    # an error that is not libsndfile rejecting the payload propagates
+    def _bug(buf, dtype, always_2d):
+        raise TypeError("read() got an unexpected keyword")
+
+    fake_sf.read = _bug
+    monkeypatch.setattr(mm, "_SOUNDFILE", False)
+    with pytest.raises(TypeError, match="unexpected keyword"):
+        mm.decode_audio(flac_bytes)
+
     # native absent entirely -> stdlib decode
     monkeypatch.setattr(mm, "_SOUNDFILE", None)
     arr3, rate3 = mm.decode_audio(flac_bytes)

@@ -585,6 +585,20 @@ def test_decode_image_batch_prefers_native_decoder(monkeypatch):
     out = mm.decode_image_batch(jpeg_bytes)
     assert out.shape == (8, 8, 3) and abs(int(out.mean()) - 64) <= 2
 
+    # an error outside (OSError, ValueError) — Pillow's DecompressionBombError
+    # is a plain Exception — propagates instead of reaching the stdlib codec
+    class DecompressionBombError(Exception):
+        pass
+
+    def _bomb(buf):
+        raise DecompressionBombError("too many pixels")
+
+    fake_pil.Image = types.SimpleNamespace(open=_bomb)
+    monkeypatch.setattr(mm, "_PIL_PROBED", False)
+    monkeypatch.setattr(mm, "_PIL_IMAGE", None)
+    with pytest.raises(DecompressionBombError):
+        mm.decode_image_batch(jpeg_bytes)
+
     # PIL absent entirely -> stdlib decode
     monkeypatch.setattr(mm, "_PIL_PROBED", True)
     monkeypatch.setattr(mm, "_PIL_IMAGE", None)

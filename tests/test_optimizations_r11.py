@@ -130,10 +130,10 @@ def test_scoped_persist_eager_materializes(spark):
 
 
 def test_local_df_matches_createdataframe_and_avoids_python_scan(spark):
-    """local_df routes tiny driver-local frames through the Arrow/pandas
-    path: values identical to createDataFrame (null/array/timestamp), no
+    """local_df routes tiny driver-local frames through one Arrow table:
+    values identical to createDataFrame (null/array/timestamp), no
     pickled-row scan (partition count follows rows, not cores), and a NaN
-    row falls back to the classic path (Arrow would null it)."""
+    stays a NaN value, not null."""
     import datetime
 
     from bears_spark.localframe import local_df
@@ -149,7 +149,7 @@ def test_local_df_matches_createdataframe_and_avoids_python_scan(spark):
     assert fast.schema == ref.schema
     # the whole point: one partition, not one pickled slice per core
     assert fast.rdd.getNumPartitions() == 1
-    # NaN must take the classic path (Arrow's from_pandas maps NaN -> null)
+    # NaN stays a NaN value (pandas' Arrow conversion would null it)
     nan_rows = [("A", float("nan"))]
     got = local_df(spark, nan_rows, "s string, t double").collect()[0]["t"]
     assert got != got  # still NaN, not null

@@ -1326,6 +1326,35 @@ def test_object_store_ambiguous_put_resolution(kind):
         store.put_if_absent("tbl/_manifests/v4", b"mine")
 
 
+def test_object_store_ambiguous_put_read_errors():
+    """After an ambiguous put the store re-reads the key: a flaky read retries
+    the put, any other read error propagates instead of being retried."""
+    from bears_spark.io.commit_store import S3CommitStore
+
+    class _ReadFails(_FlakyS3Client):
+        def __init__(self, plan, read_errors):
+            super().__init__(plan)
+            self.read_errors = list(read_errors)
+
+        def get_object(self, Bucket, Key):
+            if self.read_errors:
+                raise _StubClientError(self.read_errors.pop(0))
+            return super().get_object(Bucket, Key)
+
+    client = _ReadFails(["err500", "ok"], ["SlowDown"])
+    store = S3CommitStore("test-bucket", client=client)
+    store.RETRY_BACKOFF = 0.001
+    assert store.put_if_absent("tbl/_manifests/v1", b"mine") is True
+    assert client.put_calls == 2
+
+    client = _ReadFails(["err500", "ok"], ["AccessDenied"])
+    store = S3CommitStore("test-bucket", client=client)
+    store.RETRY_BACKOFF = 0.001
+    with pytest.raises(_StubClientError, match="AccessDenied"):
+        store.put_if_absent("tbl/_manifests/v1", b"mine")
+    assert client.put_calls == 1
+
+
 def test_s3_store_boto3_wiring():
     """Constructing without an injected client goes through real boto3
     (no network at construction time); honest skip when boto3 is absent."""
