@@ -69,12 +69,6 @@ def test_local_df_matches_createdataframe(spark, case):
     assert got.rdd.getNumPartitions() == 1
 
 
-def test_local_df_keeps_nan_apart_from_null(spark):
-    got = local_df(spark, [(float("nan"),), (None,)], "x double")
-    assert got.where("isnan(x)").count() == 1
-    assert got.where("x IS NULL").count() == 1
-
-
 def test_local_df_raises_on_a_value_arrow_cannot_convert(spark):
     with pytest.raises((TypeError, ValueError)):
         local_df(spark, [("not a number",)], "x bigint")
